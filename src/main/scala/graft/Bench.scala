@@ -443,8 +443,8 @@ object Bench {
         "null"
       }
 
-    // Sidecar-only A/B variants (e.g. collapseExact=false twins of the
-    // dedup queries) — one timed run each, never on the official line.
+    // Sidecar-only A/B variants (the interpreted HOF twins of codegen'd
+    // kernels) — one timed run each, never on the official line.
     // Skipped for filtered probe runs: they exist to make the OFFICIAL
     // artifact's round-over-round deltas attributable.
     val variantJson: String =

@@ -2216,24 +2216,10 @@ object SparkEntry {
 
   /** Sidecar-only bench A/B variants: NOT driver queries, never on the
     * official line — Bench times each once per run and records it in
-    * the telemetry sidecar. Round 12 purpose: the exact-dup collapse
-    * (Dedup.collapseByText, r11's sf10 fix) adds fingerprint-groupBy +
-    * member-expand stages that buy nothing at sf0.1's near-zero
-    * exact-dup rate; these off-variants price that overhead every
-    * round, so collapse cost vs ambient drift is attributable from the
-    * sidecar alone (VERDICT r11 advisory #3). */
+    * the telemetry sidecar. Each is the interpreted HOF twin of a
+    * codegen'd kernel, so the sidecar keeps pricing what the kernel
+    * removed. */
   def benchVariants: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_minhash_nocollapse" -> { (s, dir) =>
-      Dedup.minhashKeep(documents(s, dir).toNative, col("doc_id"), col("text"), 0.5,
-          collapseExact = false)
-        .select("doc_id").orderBy("doc_id")
-    },
-    "dedup_jaccard_nocollapse" -> { (s, dir) =>
-      Dedup.jaccardPairs(documents(s, dir).toNative, col("doc_id"), col("text"), 0.5,
-          collapseExact = false)
-        .select(col("id_a").as("doc_id_a"), col("id_b").as("doc_id_b"), col("jaccard"))
-        .orderBy("doc_id_a", "doc_id_b")
-    },
     // The r16 interpreted HOF token filter vs the codegen'd
     // KeepTokensExpr kernel bm25_score now runs — same fit, same
     // output, so the sidecar keeps measuring the per-token

@@ -12,13 +12,19 @@ import org.apache.spark.sql.functions.col
   */
 object Tio {
 
-  def readParquet[S <: GSchema](spark: SparkSession, path: String, schema: S): TFrame[S] = {
-    val raw = spark.read.parquet(path)
+  def readParquet[S <: GSchema](spark: SparkSession, path: String, schema: S): TFrame[S] =
+    typed(spark.read.parquet(path), schema)
+
+  /** The typed boundary every read and constructor goes through:
+    * structural check (if validation is on) → prune to the schema's
+    * columns → value constraints (under `GValidation.Full`). Pruning
+    * BEFORE the constraints keeps their one aggregation pass scanning
+    * only schema columns. Under `Off` this runs no Spark job. */
+  private def typed[S <: GSchema](raw: DataFrame, schema: S): TFrame[S] = {
     if (GValidation.enabled) Validator.structural(raw, schema)
     val pruned = raw.select(schema.columnNames.map(col): _*)
-    val tf = new TFrame[S](pruned, Some(schema))
     if (GValidation.full) Validator.constraints(pruned, schema)
-    tf
+    new TFrame[S](pruned, Some(schema))
   }
 
   /** Alias for readParquet — Spark frames are already lazy plans. */
@@ -26,13 +32,11 @@ object Tio {
     readParquet(spark, path, schema)
 
   def readCsv[S <: GSchema](spark: SparkSession, path: String, schema: S,
-      header: Boolean = true): TFrame[S] = {
-    val raw = spark.read
+      header: Boolean = true): TFrame[S] =
+    typed(spark.read
       .option("header", header.toString)
       .schema(schema.structType)
-      .csv(path)
-    new TFrame[S](raw, Some(schema))
-  }
+      .csv(path), schema)
 
   /** JSON-lines read (one object per line — the dominant raw-corpus
     * interchange format; Spark reads `.json`/`.jsonl`, compressed or
@@ -44,15 +48,11 @@ object Tio {
     * ignored (pruned by the pinned schema). Corrupt lines fail the job
     * by default (`mode=PERMISSIVE` would null them silently — opt in
     * via [[TFrame.withRaw]] if a lossy read is really wanted). */
-  def readJson[S <: GSchema](spark: SparkSession, path: String, schema: S): TFrame[S] = {
-    val raw = spark.read
+  def readJson[S <: GSchema](spark: SparkSession, path: String, schema: S): TFrame[S] =
+    typed(spark.read
       .schema(schema.structType)
       .option("mode", "FAILFAST")
-      .json(path)
-    val tf = new TFrame[S](raw, Some(schema))
-    if (GValidation.full) Validator.constraints(raw, schema)
-    tf
-  }
+      .json(path), schema)
 
   /** JSON-lines write — the inverse of [[readJson]]. */
   def writeJson[S <: GSchema](tf: TFrame[S], path: String, mode: String = "overwrite"): Unit =
@@ -65,14 +65,8 @@ object Tio {
     * pruning from file/stripe metadata, so the 100 TB scan behavior is
     * equivalent (PushedFilters/ReadSchema show up in the plan the same
     * way). */
-  def readOrc[S <: GSchema](spark: SparkSession, path: String, schema: S): TFrame[S] = {
-    val raw = spark.read.orc(path)
-    if (GValidation.enabled) Validator.structural(raw, schema)
-    val pruned = raw.select(schema.columnNames.map(col): _*)
-    val tf = new TFrame[S](pruned, Some(schema))
-    if (GValidation.full) Validator.constraints(pruned, schema)
-    tf
-  }
+  def readOrc[S <: GSchema](spark: SparkSession, path: String, schema: S): TFrame[S] =
+    typed(spark.read.orc(path), schema)
 
   def writeOrc[S <: GSchema](tf: TFrame[S], path: String,
       partitionBy: Seq[String] = Nil, mode: String = "overwrite"): Unit = {
@@ -121,23 +115,16 @@ object Tio {
 
   /** Typed read of a catalog table (the counterpart of [[writeBucketed]];
     * works for any table). Scan is pruned to the schema's columns. */
-  def readTable[S <: GSchema](spark: SparkSession, table: String, schema: S): TFrame[S] = {
-    val raw = spark.table(table)
-    if (GValidation.enabled) Validator.structural(raw, schema)
-    val pruned = raw.select(schema.columnNames.map(col): _*)
-    if (GValidation.full) Validator.constraints(pruned, schema)
-    new TFrame[S](pruned, Some(schema))
-  }
+  def readTable[S <: GSchema](spark: SparkSession, table: String, schema: S): TFrame[S] =
+    typed(spark.table(table), schema)
 
   /** Typed construction from case-class rows — colnade from_rows
     * (reference io.py:79-96); the case class plays Schema.Row and the
     * Encoder is the compile-time row/schema link. */
   def fromRows[S <: GSchema, R: Encoder](spark: SparkSession, schema: S, rows: Seq[R]): TFrame[S] = {
     val df = spark.createDataset(rows).toDF()
-    val aligned = df.select(schema.columns.map(c => col(c.name).cast(relaxNullable(c.dataType))): _*)
-    if (GValidation.enabled) Validator.structural(aligned, schema)
-    if (GValidation.full) Validator.constraints(aligned, schema)
-    new TFrame[S](aligned, Some(schema))
+    typed(df.select(schema.columns.map(c => col(c.name).cast(relaxNullable(c.dataType))): _*),
+      schema)
   }
 
   /** Casting to a type with non-nullable inner struct fields is rejected
@@ -165,9 +152,7 @@ object Tio {
     val rows: java.util.List[org.apache.spark.sql.Row] =
       (0 until lens.head).map(i =>
         org.apache.spark.sql.Row.fromSeq(names.map(n => data(n)(i)))).asJava
-    val df = spark.createDataFrame(rows, schema.structType)
-    if (GValidation.full) Validator.constraints(df, schema)
-    new TFrame[S](df, Some(schema))
+    typed(spark.createDataFrame(rows, schema.structType), schema)
   }
 
   /** Arrow-IPC import — colnade from_batches/from_pyarrow (reference
@@ -179,10 +164,7 @@ object Tio {
       batches, schema.structType.json, spark), schema)
 
   /** Wrap an existing DataFrame under a schema (validating boundary). */
-  def fromDF[S <: GSchema](df: DataFrame, schema: S): TFrame[S] = {
-    if (GValidation.enabled) Validator.structural(df, schema)
-    new TFrame[S](df.select(schema.columnNames.map(col): _*), Some(schema))
-  }
+  def fromDF[S <: GSchema](df: DataFrame, schema: S): TFrame[S] = typed(df, schema)
 
   /** Vertical concat — colnade concat() (reference dataframe.py:114).
     * All frames must share the same schema object. */

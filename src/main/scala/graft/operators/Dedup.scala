@@ -19,7 +19,7 @@ import org.apache.spark.sql.graftbridge.Bridge
   */
 object Dedup {
 
-  /** Default hot-bucket cap for the LSH self-joins (see [[capBuckets]]).
+  /** Default hot-bucket cap for the LSH self-joins (see [[guardBuckets]]).
     * 500 members ⇒ ≤ ~125k intra-bucket pairs, bounded work per bucket;
     * sized far above anything honest LSH produces at gate scale. */
   val DefaultMaxBucket = 500
@@ -86,10 +86,13 @@ object Dedup {
     * become a single-task straggler inside the guard itself. The
     * groupBy partial-aggregates the hot key on every mapper and the
     * semi-join's probe side is AQE-skew-splittable; semantics are
-    * identical. `maxBucket <= 0` disables the guard;
-    * [[oversizedBuckets]] surfaces what a given cap would skip. */
-  private def capBuckets(bk: DataFrame, keys: Seq[String], maxBucket: Int): DataFrame =
-    if (maxBucket <= 0) bk
+    * identical. `maxBucket <= 0` disables the guard (and its report);
+    * [[oversizedBuckets]] surfaces what a given cap would skip.
+    *
+    * Every LSH operator builds its plan through this one function; the
+    * `*Reported` variants add only [[Guarded.skipped]] on top. */
+  private def guardBuckets(bk: DataFrame, keys: Seq[String], maxBucket: Int): Guarded =
+    if (maxBucket <= 0) Guarded(bk, bucketSizes(bk, keys), maxBucket)
     else {
       // Cache the narrow (id, keys…) bucket stream before referencing it
       // twice (sizes groupBy + semi-join probe). Without this the
@@ -99,57 +102,54 @@ object Dedup {
       // the embedding path); at 100 TB that doubles a full scan+hash
       // pass. persist(), not localCheckpoint: the BlockManager's
       // per-block locking already guarantees compute-once across the
-      // consumers, while the lineage stays in the plan — so the
-      // plan-shape audits still see the upstream scans/joins, and a
-      // frame released by session hygiene recomputes instead of dying.
-      // The downstream bucketed self-join's two sides share the same
-      // cached blocks too. Registered with InternalCaches: Dataset
-      // persist entries never auto-release, so job boundaries
-      // (dedupStream micro-batches, releaseCachedBlocks) drain them.
+      // consumers (the skip report included), while the lineage stays
+      // in the plan — so the plan-shape audits still see the upstream
+      // scans/joins, and a frame released by session hygiene recomputes
+      // instead of dying. The downstream bucketed self-join's two sides
+      // share the same cached blocks too. Registered with
+      // InternalCaches: Dataset persist entries never auto-release, so
+      // job boundaries (dedupStream micro-batches, releaseCachedBlocks)
+      // drain them.
       val mat = InternalCaches.register(bk.persist())
-      val small = mat.groupBy(keys.map(col): _*).agg(count(lit(1)).as("_bsz"))
-        .where(col("_bsz") <= maxBucket)
-        .select(keys.map(col): _*)
+      val sizes = bucketSizes(mat, keys)
+      val small = sizes.where(col("_bsz") <= maxBucket).select(keys.map(col): _*)
       // re-select: the USING-join moves key columns first, and callers
       // (bucketSelfJoin's positional toDF) depend on bk's column order
-      mat.join(small, keys, "left_semi").select(mat.columns.map(col): _*)
+      Guarded(mat.join(small, keys, "left_semi").select(mat.columns.map(col): _*),
+        sizes, maxBucket)
     }
+
+  /** Per-bucket member counts `(keys…, _bsz)` — a map-side-combined
+    * groupBy (one row per bucket), never a per-key window task. */
+  private def bucketSizes(bk: DataFrame, keys: Seq[String]): DataFrame =
+    bk.groupBy(keys.map(col): _*).agg(count(lit(1)).as("_bsz"))
 
   /** Monitoring twin of the guard: bucket groups a cap of `maxBucket`
     * would drop, with sizes — `(keys…, bucket_size)`. Run over
     * [[minhashBuckets]] (keys `band`,`bucket`) or any bucketed frame to
     * log skipped volume before a production dedup; no silent loss. */
   def oversizedBuckets(bk: DataFrame, keys: Seq[String], maxBucket: Int): DataFrame =
-    bk.groupBy(keys.map(col): _*).agg(count(lit(1)).as("bucket_size"))
-      .where(col("bucket_size") > maxBucket)
+    bucketSizes(bk, keys).where(col("_bsz") > maxBucket)
+      .withColumnRenamed("_bsz", "bucket_size")
 
   /** What one run's hot-bucket guard dropped: over-cap bucket `groups`
     * and their member `rows` (per-band doc slots, not distinct docs). */
   final case class SkippedBuckets(groups: Long, rows: Long)
 
-  /** Cap + report in one materialized pass, for the `*Reported` API
-    * variants: the narrow (id, keys, size) bucket stream is computed
-    * once and localCheckpointed; the eager skip-count aggregation and
-    * the lazy capped candidate stream both read the materialized
-    * blocks, so reporting never re-runs the hashing scan. The blocks
-    * stay cached until the returned frame is garbage-collected — the
-    * price of pairing an eager report with a lazy result; run the
-    * `*Reported` variant per production job, not in a tight loop. */
-  private def capWithReport(
-      bk: DataFrame, keys: Seq[String], maxBucket: Int): (DataFrame, SkippedBuckets) = {
-    require(maxBucket > 0, "reported variants require a positive maxBucket")
-    val mat = bk.localCheckpoint(true)
-    // Same skew-safe shape as [[capBuckets]]: sizes via map-side-combined
-    // groupBy (one row per bucket — tiny), never a per-key window task.
-    val sizes = mat.groupBy(keys.map(col): _*).agg(count(lit(1)).as("_bsz"))
-      .localCheckpoint(true)
-    val r = sizes.where(col("_bsz") > maxBucket)
-      .agg(coalesce(count(lit(1)), lit(0L)).as("g"),
-        coalesce(sum(col("_bsz")), lit(0L)).as("r"))
-      .head()
-    (mat.join(sizes.where(col("_bsz") <= maxBucket).select(keys.map(col): _*),
-        keys, "left_semi").select(mat.columns.map(col): _*),
-      SkippedBuckets(r.getLong(0), r.getLong(1)))
+  /** The guard's output: the capped bucket stream and the lazy
+    * per-bucket sizes it was cut by. */
+  private final case class Guarded(capped: DataFrame, sizes: DataFrame, maxBucket: Int) {
+    /** Eager skip report — one small aggregation over the sizes, which
+      * read the guard's cached bucket stream, so reporting never re-runs
+      * the hashing scan. `(0, 0)` when the guard is off. */
+    def skipped: SkippedBuckets =
+      if (maxBucket <= 0) SkippedBuckets(0L, 0L)
+      else {
+        val r = sizes.where(col("_bsz") > maxBucket)
+          .agg(count(lit(1)), coalesce(sum(col("_bsz")), lit(0L)))
+          .head()
+        SkippedBuckets(r.getLong(0), r.getLong(1))
+      }
   }
 
   /** Candidate pairs from a capped bucket frame `(id, keys…)`: the
@@ -291,45 +291,46 @@ object Dedup {
     wa.join(wb, "_g").where(col("id_a") < col("id_b")).select("id_a", "id_b")
   }
 
+  private val BandKeys = Seq("band", "bucket")
+
   /** Candidate pairs `(id_a, id_b)`, id_a < id_b. NEVER a cartesian:
     * the join keys are (band, bucket), and buckets over `maxBucket`
-    * members are dropped (hot-bucket guard, see [[capBuckets]]).
+    * members are dropped (hot-bucket guard, see [[guardBuckets]]).
     *
-    * `collapseExact` (default ON) routes the LSH stage through the
-    * exact-duplicate collapse: rows are grouped by the 128-bit
-    * normalized-text fingerprint, ONLY the min-id representative of
-    * each group is banded and self-joined, within-group pairs come
-    * straight from the fingerprint groups (duplicates by construction)
-    * and rep-level candidates expand back to member pairs. Equal
-    * normalized text ⇒ identical shingle sets ⇒ identical signatures
-    * and buckets, so the candidate set is the uncollapsed one wherever
-    * the cap does not fire — and strictly closer to complete where it
-    * does (g copies inflate member-level buckets past the cap that
-    * their ONE rep row never strains). The point is scale: a group of
-    * g copies in the uncollapsed join emits C(g,2)·bands pair-rows
-    * before the distinct (g=100, 64 bands → 316,800 rows per group;
-    * ~1.6 BILLION rows on the 100×-replicated sf10 stress corpus) just
-    * to rediscover that copies are copies — collapse makes that term
-    * C(g,2) exactly once, with no band multiplier. Set it false only
-    * to reproduce raw member-level bucket behavior (e.g. cap
-    * accounting of a known-degenerate corpus). */
+    * The LSH stage always runs over the exact-duplicate collapse: rows
+    * are grouped by the 128-bit normalized-text fingerprint, ONLY the
+    * min-id representative of each group is banded and self-joined,
+    * within-group pairs come straight from the fingerprint groups
+    * (duplicates by construction) and rep-level candidates expand back
+    * to member pairs. Equal normalized text ⇒ identical shingle sets ⇒
+    * identical signatures and buckets, so the candidate set is the
+    * member-level one wherever the cap does not fire — and strictly
+    * closer to complete where it does (g copies inflate member-level
+    * buckets past the cap that their ONE rep row never strains). The
+    * point is scale: a group of g copies in a member-level join emits
+    * C(g,2)·bands pair-rows before the distinct (g=100, 64 bands →
+    * 316,800 rows per group; ~1.6 BILLION rows on the 100×-replicated
+    * sf10 stress corpus) just to rediscover that copies are copies —
+    * collapse makes that term C(g,2) exactly once, with no band
+    * multiplier. */
   def minhashCandidates(
       df: DataFrame, id: Column, text: Column,
       shingleK: Int = 3, numHashes: Int = 128, bands: Int = 64,
-      maxBucket: Int = DefaultMaxBucket, collapseExact: Boolean = true): DataFrame =
-    if (!collapseExact)
-      bucketSelfJoin(
-        capBuckets(minhashBuckets(df, id, text, shingleK, numHashes, bands),
-          Seq("band", "bucket"), maxBucket),
-        Seq("band", "bucket"))
-    else {
-      val c = collapseByText(df, id, text)
-      val repCand = bucketSelfJoin(
-        capBuckets(minhashBuckets(c.reps, id, text, shingleK, numHashes, bands),
-          Seq("band", "bucket"), maxBucket),
-        Seq("band", "bucket"))
-      expandRepPairs(repCand, c.member, Nil).unionAll(withinGroupPairs(c.member))
-    }
+      maxBucket: Int = DefaultMaxBucket): DataFrame = {
+    val c = collapseByText(df, id, text)
+    val (repCands, _) = repCandidates(c, id, text, shingleK, numHashes, bands, maxBucket)
+    expandRepPairs(repCands, c.member, Nil).unionAll(withinGroupPairs(c.member))
+  }
+
+  /** Rep-level candidate pairs of a collapsed frame — the guarded
+    * banded self-join over representatives only — and the guard. */
+  private def repCandidates(
+      c: Collapsed, id: Column, text: Column,
+      shingleK: Int, numHashes: Int, bands: Int, maxBucket: Int): (DataFrame, Guarded) = {
+    val g = guardBuckets(minhashBuckets(c.reps, id, text, shingleK, numHashes, bands),
+      BandKeys, maxBucket)
+    (bucketSelfJoin(g.capped, BandKeys), g)
+  }
 
   // ------------------------------------------------------------------ L4
   /** LSH candidates verified by exact shingle-set Jaccard:
@@ -338,102 +339,74 @@ object Dedup {
     * across engines. The candidate set is typically tiny relative to n;
     * AQE broadcast-joins it against the shingle sets at runtime.
     *
-    * With `collapseExact` (default ON, see [[minhashCandidates]]) the
+    * Over the exact-duplicate collapse (see [[minhashCandidates]]) the
     * exact verify runs at REP level only: within-group pairs are J = 1
     * exactly (identical sets — no verify needed, emitted directly) and
     * each cross-group member pair carries its rep pair's verified
-    * Jaccard (equal sets ⇒ equal scores). Output is identical to the
-    * uncollapsed path wherever the hot-bucket cap does not fire. */
+    * Jaccard (equal sets ⇒ equal scores). Output is the all-pairs
+    * answer wherever LSH recalls the pair and the cap does not fire. */
   def jaccardPairs(
       df: DataFrame, id: Column, text: Column, threshold: Double,
       shingleK: Int = 3, numHashes: Int = 128, bands: Int = 64,
-      maxBucket: Int = DefaultMaxBucket, collapseExact: Boolean = true): DataFrame =
-    if (!collapseExact) {
-      val cands = persistedCands(
-        minhashCandidates(df, id, text, shingleK, numHashes, bands, maxBucket,
-          collapseExact = false))
-      jaccardVerify(cands,
-        shingleSets(candSideDocs(df, id, cands, "id_a"), id, text, shingleK),
-        shingleSets(candSideDocs(df, id, cands, "id_b"), id, text, shingleK),
-        threshold)
-    } else {
-      val c = collapseByText(df, id, text)
-      val cands = persistedCands(
-        bucketSelfJoin(
-          capBuckets(minhashBuckets(c.reps, id, text, shingleK, numHashes, bands),
-            Seq("band", "bucket"), maxBucket),
-          Seq("band", "bucket")))
-      // Prune df, not c.reps: every candidate id IS a rep id (the
-      // bucket stream was built from reps), so df ⋉ cand-ids ≡
-      // (df ⋉ member-rids) ⋉ cand-ids — identical rows, and the verify
-      // sides skip the doc-count-sized member semi-join entirely (r22).
-      val repPairs = jaccardVerify(cands,
-        shingleSets(candSideDocs(df, id, cands, "id_a"), id, text, shingleK),
-        shingleSets(candSideDocs(df, id, cands, "id_b"), id, text, shingleK),
-        threshold)
-      val within = withinGroupPairs(c.member)
-        .select(col("id_a"), col("id_b"), lit(1.0).as("jaccard"))
-        .where(lit(1.0) >= threshold)
-      expandRepPairs(repPairs, c.member, Seq("jaccard")).unionAll(within)
-    }
+      maxBucket: Int = DefaultMaxBucket): DataFrame =
+    guardedJaccardPairs(df, id, text, threshold, shingleK, numHashes, bands, maxBucket)._1
+
+  /** [[jaccardPairs]] and the guard that capped its candidates. */
+  private def guardedJaccardPairs(
+      df: DataFrame, id: Column, text: Column, threshold: Double,
+      shingleK: Int, numHashes: Int, bands: Int, maxBucket: Int): (DataFrame, Guarded) = {
+    val c = collapseByText(df, id, text)
+    val (repCands, g) = repCandidates(c, id, text, shingleK, numHashes, bands, maxBucket)
+    val cands = persistedCands(repCands)
+    // Prune df, not c.reps: every candidate id IS a rep id (the
+    // bucket stream was built from reps), so df ⋉ cand-ids ≡
+    // (df ⋉ member-rids) ⋉ cand-ids — identical rows, and the verify
+    // sides skip the doc-count-sized member semi-join entirely (r22).
+    val repPairs = jaccardVerify(cands,
+      shingleSets(candSideDocs(df, id, cands, "id_a"), id, text, shingleK),
+      shingleSets(candSideDocs(df, id, cands, "id_b"), id, text, shingleK),
+      threshold)
+    val within = withinGroupPairs(c.member)
+      .select(col("id_a"), col("id_b"), lit(1.0).as("jaccard"))
+      .where(lit(1.0) >= threshold)
+    (expandRepPairs(repPairs, c.member, Seq("jaccard")).unionAll(within), g)
+  }
+
+  /** `df` minus the `id_b` side of every pair — the min-id-representative
+    * keep rule, as a left-anti join against the drop list. */
+  private def dropLaterIds(df: DataFrame, id: Column, pairs: DataFrame): DataFrame =
+    df.join(pairs.select(col("id_b").as("_drop_id")), id === col("_drop_id"), "left_anti")
 
   /** Near-dedup keep-list: drop every doc that duplicates (Jaccard ≥
     * threshold) a smaller-id doc — the min-id-representative rule,
-    * applied as an anti-join against the verified pairs. The drop set
-    * is identical with [[jaccardPairs]]' collapse on or off (a doc has
-    * a smaller-id duplicate among members iff its rep pair says so —
-    * group reps ARE the group minimums), so the scalable path is the
-    * default here too. */
+    * applied as an anti-join against the verified pairs. The collapse
+    * does not change the drop set: a doc has a smaller-id duplicate
+    * among members iff its rep pair says so, because group reps ARE the
+    * group minimums. */
   def minhashKeep(
       df: DataFrame, id: Column, text: Column, threshold: Double,
       shingleK: Int = 3, numHashes: Int = 128, bands: Int = 64,
-      maxBucket: Int = DefaultMaxBucket, collapseExact: Boolean = true): DataFrame = {
-    val dups = jaccardPairs(df, id, text, threshold, shingleK, numHashes, bands,
-        maxBucket, collapseExact)
-      .select(col("id_b").as("_drop_id"))
-    df.join(dups, id === col("_drop_id"), "left_anti")
-  }
+      maxBucket: Int = DefaultMaxBucket): DataFrame =
+    dropLaterIds(df, id,
+      jaccardPairs(df, id, text, threshold, shingleK, numHashes, bands, maxBucket))
 
   /** [[minhashKeep]] that ALSO returns what the hot-bucket guard
     * skipped — the default for production runs, where capped buckets
-    * must be logged, not silently lost. One extra pass over the narrow
-    * bucket stream (see [[capWithReport]]); use [[oversizedBuckets]]
-    * for a detailed per-bucket breakdown. With `collapseExact` the
-    * report counts REP-level buckets (exact copies collapse before
-    * banding, so they can no longer inflate a bucket past the cap —
-    * a corpus whose only degeneracy is exact duplication reports
-    * ZERO skips and dedups fully). */
+    * must be logged, not silently lost. The frame is exactly
+    * [[minhashKeep]]'s plan; the report is one eager aggregation over
+    * the guard's cached bucket sizes (see [[guardBuckets]]), and is
+    * `(0, 0)` when `maxBucket <= 0`. Use [[oversizedBuckets]] for a
+    * per-bucket breakdown. The report counts REP-level buckets: exact
+    * copies collapse before banding, so they can no longer inflate a
+    * bucket past the cap — a corpus whose only degeneracy is exact
+    * duplication reports ZERO skips and dedups fully. */
   def minhashKeepReported(
       df: DataFrame, id: Column, text: Column, threshold: Double,
       shingleK: Int = 3, numHashes: Int = 128, bands: Int = 64,
-      maxBucket: Int = DefaultMaxBucket, collapseExact: Boolean = true): (DataFrame, SkippedBuckets) = {
-    if (!collapseExact) {
-      val (capped, report) = capWithReport(
-        minhashBuckets(df, id, text, shingleK, numHashes, bands),
-        Seq("band", "bucket"), maxBucket)
-      val cands = persistedCands(bucketSelfJoin(capped, Seq("band", "bucket")))
-      val dups = jaccardVerify(cands,
-          shingleSets(candSideDocs(df, id, cands, "id_a"), id, text, shingleK),
-          shingleSets(candSideDocs(df, id, cands, "id_b"), id, text, shingleK),
-          threshold)
-        .select(col("id_b").as("_drop_id"))
-      (df.join(dups, id === col("_drop_id"), "left_anti"), report)
-    } else {
-      val c = collapseByText(df, id, text)
-      val (capped, report) = capWithReport(
-        minhashBuckets(c.reps, id, text, shingleK, numHashes, bands),
-        Seq("band", "bucket"), maxBucket)
-      val cands = persistedCands(bucketSelfJoin(capped, Seq("band", "bucket")))
-      // df, not c.reps — see jaccardPairs: candidate ids are rep ids.
-      val repPairs = jaccardVerify(cands,
-        shingleSets(candSideDocs(df, id, cands, "id_a"), id, text, shingleK),
-        shingleSets(candSideDocs(df, id, cands, "id_b"), id, text, shingleK),
-        threshold)
-      val dups = expandRepPairs(repPairs, c.member, Nil).select("id_b")
-        .unionAll(withinGroupPairs(c.member).select("id_b"))
-        .select(col("id_b").as("_drop_id"))
-      (df.join(dups, id === col("_drop_id"), "left_anti"), report)
-    }
+      maxBucket: Int = DefaultMaxBucket): (DataFrame, SkippedBuckets) = {
+    val (pairs, g) =
+      guardedJaccardPairs(df, id, text, threshold, shingleK, numHashes, bands, maxBucket)
+    (dropLaterIds(df, id, pairs), g.skipped)
   }
 
   /** [[minhashKeep]]'s KEEP-BEST sibling — the near-dup twin of
@@ -457,9 +430,8 @@ object Dedup {
   def minhashKeepBy(
       df: DataFrame, id: Column, text: Column, score: Column, threshold: Double,
       shingleK: Int = 3, numHashes: Int = 128, bands: Int = 64,
-      maxBucket: Int = DefaultMaxBucket, collapseExact: Boolean = true): DataFrame = {
-    val pairs = jaccardPairs(df, id, text, threshold, shingleK, numHashes, bands,
-      maxBucket, collapseExact)
+      maxBucket: Int = DefaultMaxBucket): DataFrame = {
+    val pairs = jaccardPairs(df, id, text, threshold, shingleK, numHashes, bands, maxBucket)
     val cl = duplicateClusters(pairs)
       .select(col("id").as("_graft_cl_id"), col("cluster_id").as("_graft_cl_cid"))
     val keep = df
@@ -607,8 +579,7 @@ object Dedup {
     * [[graft.streaming.GStream.dedupStream]] relies on. */
   def minhashKeepIncremental(
       newDocs: DataFrame, id: Column, text: Column, indexPath: String,
-      threshold: Double, maxBucket: Int = DefaultMaxBucket,
-      collapseExact: Boolean = true): DataFrame = {
+      threshold: Double, maxBucket: Int = DefaultMaxBucket): DataFrame = {
     val spark = newDocs.sparkSession
     val (shingleK, numHashes, bands) = readIndexParams(spark, indexPath).getOrElse(
       throw new IllegalArgumentException(s"no MinHash index found at $indexPath"))
@@ -621,13 +592,7 @@ object Dedup {
     // duplicate-free. The replay guard below stays on ALL batch ids —
     // a replayed batch's stale index copies must be excluded whether
     // or not the copy was a representative.
-    val (bandDocs, nonRepDrops) =
-      if (!collapseExact) (newDocs, None)
-      else {
-        val c = collapseByText(newDocs, id, text)
-        (c.reps, Some(c.member.where(col("_mid") =!= col("_rid"))
-          .select(col("_mid").as("_drop_id"))))
-      }
+    val c = collapseByText(newDocs, id, text)
     // ONE normalization+shingling pass over the batch text (the dominant
     // per-batch cost): materialize the shingle sets via localCheckpoint
     // and derive BOTH the bucket stream and the verify side from the
@@ -643,30 +608,30 @@ object Dedup {
     // which is cheap because the batch is the small side and safe
     // because this function is replay-idempotent (the contract
     // [[GStream.dedupStream]]'s foreachBatch retries already rely on).
-    val newSets = shingleSets(bandDocs, id, text, shingleK).localCheckpoint(eager = true)
+    val newSets = shingleSets(c.reps, id, text, shingleK).localCheckpoint(eager = true)
     val newIds = newDocs.select(id.as("_nid"))
     val newBk = newSets.select(col("_jid").as("_id"),
         posexplode(TextFns.minhashBands(col("_set"), numHashes, bands)))
       .toDF("_id", "band", "bucket")
     val oldBk = spark.read.parquet(s"$indexPath/buckets")
       .join(newIds, col("id") === col("_nid"), "left_anti") // replay safety: drop stale self-copies
-      .join(newBk.select("band", "bucket").distinct(), Seq("band", "bucket"), "left_semi")
+      .join(newBk.select("band", "bucket").distinct(), BandKeys, "left_semi")
       .select(col("id").as("_id"), col("band"), col("bucket"))
       // At-least-once appends can leave duplicate (id, band, bucket)
       // rows; distinct AFTER the semi-join prune (so only surviving
-      // buckets pay the shuffle) keeps the capBuckets count an exact
+      // buckets pay the shuffle) keeps the guard's count an exact
       // member count — replayed rows must not push a legitimate bucket
       // over maxBucket and silently drop its real duplicates.
       .distinct()
-    val tagged = capBuckets(
+    val tagged = guardBuckets(
       oldBk.withColumn("_new", lit(false)).union(newBk.withColumn("_new", lit(true))),
-      Seq("band", "bucket"), maxBucket)
+      BandKeys, maxBucket).capped
     val newSide = tagged.where(col("_new")).drop("_new").toDF("id_b", "band", "bucket")
     val oldSide = tagged.where(!col("_new")).drop("_new").toDF("id_a", "band", "bucket")
     val newSideA = tagged.where(col("_new")).drop("_new").toDF("id_a", "band", "bucket")
     val cands = persistedCands(
-      oldSide.join(newSide, Seq("band", "bucket"))
-        .union(newSideA.join(newSide, Seq("band", "bucket")).where(col("id_a") < col("id_b")))
+      oldSide.join(newSide, BandKeys)
+        .union(newSideA.join(newSide, BandKeys).where(col("id_a") < col("id_b")))
         .select("id_a", "id_b")
         .distinct())
     // Candidate-id prune on both verify sides (the [[candSideDocs]]
@@ -689,8 +654,8 @@ object Dedup {
     val repDrops = jaccardVerify(cands, aSets, bSets, threshold)
       .select(col("id_b").as("_drop_id"))
       .distinct()
-    val drops = nonRepDrops.map(repDrops.unionAll).getOrElse(repDrops)
-    newDocs.join(drops, id === col("_drop_id"), "left_anti")
+    val nonRepDrops = c.member.where(col("_mid") =!= col("_rid")).select(col("_mid").as("_drop_id"))
+    newDocs.join(repDrops.unionAll(nonRepDrops), id === col("_drop_id"), "left_anti")
   }
 
   // ----------------------------------------------------------------- L14
@@ -780,7 +745,7 @@ object Dedup {
     // Persist the narrow (doc, pos, fp) occurrence stream: it feeds the
     // flag aggregation AND the removal join's probe side, and the probe
     // reference would otherwise re-run the whole tokenize+shingle+hash
-    // scan (the capBuckets discipline — three longs per window,
+    // scan (the hot-bucket guard's discipline — three longs per window,
     // InternalCaches-registered, lineage kept).
     val occ = InternalCaches.register(base
       .select(col("doc_id"),
@@ -1045,7 +1010,7 @@ object Dedup {
       k: Int = 8, fpp: Double = 0.01, expectedItems: Option[Long] = None): DataFrame = {
     require(fpp > 0 && fpp < 1, s"fpp must be in (0,1), got $fpp")
     // distinct bench fps are read three times (count, sketch build,
-    // exact verify) — registered persist, same rationale as capBuckets
+    // exact verify) — registered persist, same rationale as guardBuckets
     val bfp = InternalCaches.register(
       bench.select(explode(TextFns.shingles(benchText, k)).as("_g"))
         .select(xxhash64(col("_g")).as("_fp"))
@@ -1070,6 +1035,45 @@ object Dedup {
   }
 
   // ---------------------------------------------------------------- L37
+  /** Rep-level verified cross pairs `(id_a = corpus REP, id_b = bench
+    * REP, jaccard)` plus the corpus and bench member maps — the shared
+    * core of [[crossNearPairs]] (which expands both sides) and
+    * [[decontaminatedKeepNear]] (which only needs flagged corpus
+    * members, so expanding the bench side there would be waste).
+    *
+    * Exact-copy collapse on BOTH sides: at duplicate-dense scale (a
+    * crawl where every doc has g copies) a member-level flow bands and
+    * verifies each copy separately — g_corpus · g_bench times the same
+    * set comparison. Reps band/verify ONCE; equal normalized text ⇒
+    * identical shingle sets ⇒ identical Jaccard, so expanding rep pairs
+    * to members reproduces the member-level answer wherever the
+    * bench-side cap does not fire (and strictly more where it does — g
+    * copies can no longer inflate a bucket). */
+  private def crossNearRepPairs(
+      corpus: DataFrame, corpusId: Column, corpusText: Column,
+      bench: DataFrame, benchId: Column, benchText: Column,
+      threshold: Double, shingleK: Int, numHashes: Int, bands: Int,
+      maxBucket: Int, broadcastBench: Boolean): (DataFrame, Collapsed, Collapsed) = {
+    val c = collapseByText(corpus, corpusId, corpusText)
+    val b = collapseByText(bench, benchId, benchText)
+    val cb = minhashBuckets(c.reps, corpusId, corpusText, shingleK, numHashes, bands)
+    val bb0 = guardBuckets(
+      minhashBuckets(b.reps, benchId, benchText, shingleK, numHashes, bands),
+      BandKeys, maxBucket).capped
+      .toDF("_bid", "band", "bucket")
+    val bb = if (broadcastBench) broadcast(bb0) else bb0
+    val cands = persistedCands(
+      cb.join(bb, BandKeys)
+        .select(col("_id").as("id_a"), col("_bid").as("id_b"))
+        .distinct())
+    val repPairs = jaccardVerify(cands,
+      shingleSets(candSideDocs(c.reps, corpusId, cands, "id_a"),
+        corpusId, corpusText, shingleK),
+      shingleSets(candSideDocs(b.reps, benchId, cands, "id_b"),
+        benchId, benchText, shingleK), threshold)
+    (repPairs, c, b)
+  }
+
   /** NEAR-duplicate cross-corpus contamination — the gap exact n-gram
     * decontamination ([[contaminationStats]]) can't see: a training doc
     * that is a light paraphrase/reflow of an eval doc shares few exact
@@ -1083,87 +1087,36 @@ object Dedup {
     * SAME MinHash parameters; the bench's O(|bench|·bands) bucket rows
     * BROADCAST, so the corpus bucket stream never shuffles — the join
     * is a narrow broadcast-hash probe, unlike the self-join dedup path
-    * (no within-corpus pair term at all). `collapseExact` (default ON)
-    * routes both sides through the exact-duplicate collapse first: on
-    * a duplicate-dense corpus (the sf10 stress corpus carries 100
-    * copies per doc) the uncollapsed flow bands and Jaccard-verifies
-    * every (corpus copy × bench copy) combination — g²× the same set
-    * comparison; reps verify once and member pairs inherit the rep
-    * verdict (equal normalized text ⇒ identical shingle sets ⇒
-    * identical Jaccard — the [[jaccardPairs]] argument). Measured at
-    * sf10: 134 s uncollapsed → seconds collapsed. The hot-bucket guard
-    * caps the BENCH side: per-corpus-row fanout = size of the matching
-    * bench bucket, so capping bench buckets at `maxBucket` bounds
-    * candidate volume at O(n·bands·maxBucket) with zero corpus-side
-    * counting shuffle (capping the corpus side would cost an
-    * O(n·bands) group count for a blowup the tiny bench can't cause).
-    * Candidates are exact-verified by shingle-set Jaccard
-    * ([[jaccardVerify]] — integer set sizes, bit-identical ratio), so
-    * LSH recall is the only approximation: 128 hashes / 64 bands ⇒
-    * P(miss | J≥0.5) ≈ 1e-8. */
-  /** Rep-level verified cross pairs `(id_a = corpus REP, id_b = bench
-    * REP, jaccard)` plus both member maps — the shared core of
-    * [[crossNearPairs]] (which expands both sides) and
-    * [[decontaminatedKeepNear]] (which only needs flagged corpus
-    * members, so expanding the bench side there would be waste). */
-  private def crossNearRepPairs(
-      corpus: DataFrame, corpusId: Column, corpusText: Column,
-      bench: DataFrame, benchId: Column, benchText: Column,
-      threshold: Double, shingleK: Int, numHashes: Int, bands: Int,
-      maxBucket: Int, broadcastBench: Boolean,
-      collapseExact: Boolean): (DataFrame, Option[(DataFrame, DataFrame)]) = {
-    def pairsOf(cSide: DataFrame, bSide: DataFrame): DataFrame = {
-      val cb = minhashBuckets(cSide, corpusId, corpusText, shingleK, numHashes, bands)
-      val bb0 = capBuckets(
-        minhashBuckets(bSide, benchId, benchText, shingleK, numHashes, bands),
-        Seq("band", "bucket"), maxBucket)
-        .toDF("_bid", "band", "bucket")
-      val bb = if (broadcastBench) broadcast(bb0) else bb0
-      val cands = persistedCands(
-        cb.join(bb, Seq("band", "bucket"))
-          .select(col("_id").as("id_a"), col("_bid").as("id_b"))
-          .distinct())
-      jaccardVerify(cands,
-        shingleSets(candSideDocs(cSide, corpusId, cands, "id_a"),
-          corpusId, corpusText, shingleK),
-        shingleSets(candSideDocs(bSide, benchId, cands, "id_b"),
-          benchId, benchText, shingleK), threshold)
-    }
-    if (!collapseExact) (pairsOf(corpus, bench), None)
-    else {
-      // exact-copy collapse on BOTH sides: at duplicate-dense scale (a
-      // crawl where every doc has g copies) the uncollapsed flow bands
-      // and verifies each copy separately — g_corpus · g_bench times
-      // the same set comparison. Reps band/verify ONCE; equal
-      // normalized text ⇒ identical shingle sets ⇒ identical Jaccard,
-      // so expanding rep pairs to members reproduces the uncollapsed
-      // answer wherever the bench-side cap does not fire (and strictly
-      // more where it does — g copies can no longer inflate a bucket).
-      val c = collapseByText(corpus, corpusId, corpusText)
-      val b = collapseByText(bench, benchId, benchText)
-      (pairsOf(c.reps, b.reps), Some((c.member, b.member)))
-    }
-  }
-
+    * (no within-corpus pair term at all). Both sides go through the
+    * exact-duplicate collapse first (see [[crossNearRepPairs]]): on a
+    * duplicate-dense corpus (the sf10 stress corpus carries 100 copies
+    * per doc) a member-level flow bands and Jaccard-verifies every
+    * (corpus copy × bench copy) combination — measured at sf10: 134 s
+    * member-level → seconds collapsed. The hot-bucket guard caps the
+    * BENCH side: per-corpus-row fanout = size of the matching bench
+    * bucket, so capping bench buckets at `maxBucket` bounds candidate
+    * volume at O(n·bands·maxBucket) with zero corpus-side counting
+    * shuffle (capping the corpus side would cost an O(n·bands) group
+    * count for a blowup the tiny bench can't cause). Candidates are
+    * exact-verified by shingle-set Jaccard ([[jaccardVerify]] —
+    * integer set sizes, bit-identical ratio), so LSH recall is the only
+    * approximation: 128 hashes / 64 bands ⇒ P(miss | J≥0.5) ≈ 1e-8.
+    * `broadcastBench = false` drops to a shuffled join for a bench too
+    * large to broadcast. */
   def crossNearPairs(
       corpus: DataFrame, corpusId: Column, corpusText: Column,
       bench: DataFrame, benchId: Column, benchText: Column,
       threshold: Double, shingleK: Int = 3, numHashes: Int = 128, bands: Int = 64,
-      maxBucket: Int = DefaultMaxBucket, broadcastBench: Boolean = true,
-      collapseExact: Boolean = true): DataFrame = {
-    val (repPairs, members) = crossNearRepPairs(corpus, corpusId, corpusText,
+      maxBucket: Int = DefaultMaxBucket, broadcastBench: Boolean = true): DataFrame = {
+    val (repPairs, c, b) = crossNearRepPairs(corpus, corpusId, corpusText,
       bench, benchId, benchText, threshold, shingleK, numHashes, bands,
-      maxBucket, broadcastBench, collapseExact)
-    members match {
-      case None => repPairs
-      case Some((cm, bm)) =>
-        // expand rep pairs to member pairs on BOTH sides (no id
-        // reordering — the sides are distinct corpora by contract)
-        val ma = cm.select(col("_rid").as("id_a"), col("_mid").as("_ma"))
-        val mb = bm.select(col("_rid").as("id_b"), col("_mid").as("_mb"))
-        repPairs.join(ma, "id_a").join(mb, "id_b")
-          .select(col("_ma").as("id_a"), col("_mb").as("id_b"), col("jaccard"))
-    }
+      maxBucket, broadcastBench)
+    // expand rep pairs to member pairs on BOTH sides (no id
+    // reordering — the sides are distinct corpora by contract)
+    val ma = c.member.select(col("_rid").as("id_a"), col("_mid").as("_ma"))
+    val mb = b.member.select(col("_rid").as("id_b"), col("_mid").as("_mb"))
+    repPairs.join(ma, "id_a").join(mb, "id_b")
+      .select(col("_ma").as("id_a"), col("_mb").as("id_b"), col("jaccard"))
   }
 
   /** The decontaminated corpus under the NEAR-duplicate criterion:
@@ -1177,20 +1130,15 @@ object Dedup {
       corpus: DataFrame, corpusId: Column, corpusText: Column,
       bench: DataFrame, benchId: Column, benchText: Column,
       threshold: Double, shingleK: Int = 3, numHashes: Int = 128, bands: Int = 64,
-      maxBucket: Int = DefaultMaxBucket, broadcastBench: Boolean = true,
-      collapseExact: Boolean = true): DataFrame = {
-    val (repPairs, members) = crossNearRepPairs(corpus, corpusId, corpusText,
+      maxBucket: Int = DefaultMaxBucket, broadcastBench: Boolean = true): DataFrame = {
+    val (repPairs, c, _) = crossNearRepPairs(corpus, corpusId, corpusText,
       bench, benchId, benchText, threshold, shingleK, numHashes, bands,
-      maxBucket, broadcastBench, collapseExact)
+      maxBucket, broadcastBench)
     // only the corpus side needs expanding: a member is contaminated
     // iff its rep is (equal text ⇒ equal Jaccard against everything),
     // and WHICH bench doc matched is irrelevant to the keep decision
-    val flagged = members match {
-      case None => repPairs.select(col("id_a").as("_drop_id")).distinct()
-      case Some((cm, _)) =>
-        cm.join(repPairs.select(col("id_a").as("_rid")).distinct(), "_rid")
-          .select(col("_mid").as("_drop_id"))
-    }
+    val flagged = c.member.join(repPairs.select(col("id_a").as("_rid")).distinct(), "_rid")
+      .select(col("_mid").as("_drop_id"))
     corpus.join(flagged, corpusId === col("_drop_id"), "left_anti")
   }
 
@@ -1439,18 +1387,15 @@ object Dedup {
   def simhashPairs(
       df: DataFrame, id: Column, text: Column, maxHamming: Int = 3,
       maxBucket: Int = DefaultMaxBucket): DataFrame =
-    simhashJoin(
-      capBuckets(simhashBanded(df, id, text), Seq("chunk", "ckey"), maxBucket),
-      maxHamming)
+    guardedSigPairs(simhashSignatures(df, id, text), maxHamming, maxBucket)._1
 
   /** [[simhashPairs]] that ALSO returns what the hot-bucket guard
     * skipped (see [[minhashKeepReported]]). */
   def simhashPairsReported(
       df: DataFrame, id: Column, text: Column, maxHamming: Int = 3,
       maxBucket: Int = DefaultMaxBucket): (DataFrame, SkippedBuckets) = {
-    val (capped, report) = capWithReport(
-      simhashBanded(df, id, text), Seq("chunk", "ckey"), maxBucket)
-    (simhashJoin(capped, maxHamming), report)
+    val (pairs, g) = guardedSigPairs(simhashSignatures(df, id, text), maxHamming, maxBucket)
+    (pairs, g.skipped)
   }
 
   /** Per-doc 64-bit SimHash signatures `(doc_id, sig)` — the upstream
@@ -1475,8 +1420,15 @@ object Dedup {
   def pairsFromSigs64(
       sigs: DataFrame, maxHamming: Int = 3,
       maxBucket: Int = DefaultMaxBucket): DataFrame =
-    simhashJoin(
-      capBuckets(bandSigs64(sigs), Seq("chunk", "ckey"), maxBucket), maxHamming)
+    guardedSigPairs(sigs, maxHamming, maxBucket)._1
+
+  /** The banded, guarded chunk-equality join of [[pairsFromSigs64]]
+    * and the guard that capped it. */
+  private def guardedSigPairs(
+      sigs: DataFrame, maxHamming: Int, maxBucket: Int): (DataFrame, Guarded) = {
+    val g = guardBuckets(bandSigs64(sigs), Seq("chunk", "ckey"), maxBucket)
+    (simhashJoin(g.capped, maxHamming), g)
+  }
 
   /** `(_id, _sh, chunk, ckey)` — one row per (doc, 16-bit chunk). */
   private def bandSigs64(sigs: DataFrame): DataFrame = {
@@ -1487,9 +1439,6 @@ object Dedup {
     h.select(col("_id"), col("_sh"), explode(array(chunks: _*)).as("c"))
       .select(col("_id"), col("_sh"), col("c.chunk").as("chunk"), col("c.ckey").as("ckey"))
   }
-
-  private def simhashBanded(df: DataFrame, id: Column, text: Column): DataFrame =
-    bandSigs64(simhashSignatures(df, id, text))
 
   private def simhashJoin(capped: DataFrame, maxHamming: Int): DataFrame = {
     require(maxHamming <= 3, "4-chunk pigeonhole guarantees recall only for hamming <= 3")
@@ -1533,10 +1482,7 @@ object Dedup {
       df: DataFrame, id: Column, vec: Column, dim: Int,
       tables: Int = 8, bitsPerTable: Int = 8, seed: Long = 7L,
       maxBucket: Int = DefaultMaxBucket): DataFrame =
-    bucketSelfJoin(
-      capBuckets(embeddingBucketed(df, id, vec, dim, tables, bitsPerTable, seed),
-        Seq("tbl", "bucket"), maxBucket),
-      Seq("tbl", "bucket"))
+    guardedEmbeddingCandidates(df, id, vec, dim, tables, bitsPerTable, seed, maxBucket)._1
 
   /** [[embeddingPairs]] that ALSO returns what the hot-bucket guard
     * skipped (see [[minhashKeepReported]]). */
@@ -1544,19 +1490,22 @@ object Dedup {
       df: DataFrame, id: Column, vec: Column, tau: Double, dim: Int,
       tables: Int = 8, bitsPerTable: Int = 8, seed: Long = 7L,
       maxBucket: Int = DefaultMaxBucket): (DataFrame, SkippedBuckets) = {
-    val (capped, report) = capWithReport(
-      embeddingBucketed(df, id, vec, dim, tables, bitsPerTable, seed),
-      Seq("tbl", "bucket"), maxBucket)
-    (embeddingVerify(bucketSelfJoin(capped, Seq("tbl", "bucket")), df, id, vec, tau), report)
+    val (cands, g) =
+      guardedEmbeddingCandidates(df, id, vec, dim, tables, bitsPerTable, seed, maxBucket)
+    (embeddingVerify(cands, df, id, vec, tau), g.skipped)
   }
 
-  /** `(_id, tbl, bucket)` — vectors do NOT ride the candidate shuffle. */
-  private def embeddingBucketed(
+  /** [[embeddingCandidates]] and the guard that capped them. Only
+    * `(_id, tbl, bucket)` rides the candidate shuffle, never vectors. */
+  private def guardedEmbeddingCandidates(
       df: DataFrame, id: Column, vec: Column, dim: Int,
-      tables: Int, bitsPerTable: Int, seed: Long): DataFrame =
-    Vec.hyperplaneBuckets(df.select(id.as("_id"), vec.as("_v")),
-      col("_v"), dim, tables, bitsPerTable, seed)
+      tables: Int, bitsPerTable: Int, seed: Long, maxBucket: Int): (DataFrame, Guarded) = {
+    val bk = Vec.hyperplaneBuckets(df.select(id.as("_id"), vec.as("_v")),
+        col("_v"), dim, tables, bitsPerTable, seed)
       .select("_id", "tbl", "bucket")
+    val g = guardBuckets(bk, Seq("tbl", "bucket"), maxBucket)
+    (bucketSelfJoin(g.capped, Seq("tbl", "bucket")), g)
+  }
 
   /** Exact-cosine verification: join vectors back by id, keep ≥ tau. */
   private def embeddingVerify(
@@ -1616,30 +1565,34 @@ object Dedup {
     * centroid training/assignment to the spec's recall gate. */
   def semanticCandidates(
       unit: Array[Array[Double]], df: DataFrame, id: Column, vec: Column,
-      maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    if (unit.isEmpty) return emptyPairs(df, id).select("id_a", "id_b")
-    val assigned = Ann.assignClusters(unit, df, id, vec).toDF("_id", "cid")
-    // No distinct needed (unlike bucketSelfJoin): top-1 assignment puts
-    // each id in exactly one cluster, so a pair arises at most once.
-    val capped = capBuckets(assigned, Seq("cid"), maxBucket)
-    val a = capped.toDF("id_a", "cid")
-    val b = capped.toDF("id_b", "cid")
-    a.join(b, Seq("cid")).where(col("id_a") < col("id_b")).select("id_a", "id_b")
-  }
+      maxBucket: Int = DefaultMaxBucket): DataFrame =
+    guardedSemanticCandidates(unit, df, id, vec, maxBucket)._1
 
   /** [[semanticPairs]] that ALSO returns what the hot-bucket guard
-    * skipped (see [[minhashKeepReported]]). */
+    * skipped (see [[minhashKeepReported]]); an empty quantizer yields
+    * no pairs and a `(0, 0)` report. */
   def semanticPairsReported(
       unit: Array[Array[Double]], df: DataFrame, id: Column, vec: Column,
       tau: Double, maxBucket: Int = DefaultMaxBucket): (DataFrame, SkippedBuckets) = {
-    require(unit.nonEmpty, "semanticPairsReported: empty quantizer")
-    val (capped, report) = capWithReport(
-      Ann.assignClusters(unit, df, id, vec).toDF("_id", "cid"), Seq("cid"), maxBucket)
-    val a = capped.toDF("id_a", "cid")
-    val b = capped.toDF("id_b", "cid")
-    val cand = a.join(b, Seq("cid")).where(col("id_a") < col("id_b")).select("id_a", "id_b")
-    (embeddingVerify(cand, df, id, vec, tau), report)
+    val (cands, g) = guardedSemanticCandidates(unit, df, id, vec, maxBucket)
+    (embeddingVerify(cands, df, id, vec, tau), g.fold(SkippedBuckets(0L, 0L))(_.skipped))
   }
+
+  /** [[semanticCandidates]] and the guard that capped them (None for an
+    * empty quantizer: nothing is assigned, nothing is guarded). */
+  private def guardedSemanticCandidates(
+      unit: Array[Array[Double]], df: DataFrame, id: Column, vec: Column,
+      maxBucket: Int): (DataFrame, Option[Guarded]) =
+    if (unit.isEmpty) (emptyPairs(df, id).select("id_a", "id_b"), None)
+    else {
+      val assigned = Ann.assignClusters(unit, df, id, vec).toDF("_id", "cid")
+      // No distinct needed (unlike bucketSelfJoin): top-1 assignment puts
+      // each id in exactly one cluster, so a pair arises at most once.
+      val g = guardBuckets(assigned, Seq("cid"), maxBucket)
+      val a = g.capped.toDF("id_a", "cid")
+      val b = g.capped.toDF("id_b", "cid")
+      (a.join(b, Seq("cid")).where(col("id_a") < col("id_b")).select("id_a", "id_b"), Some(g))
+    }
 
   /** Rows surviving semantic dedup: drop `id_b` of every verified pair
     * (min-id representative per duplicate relation), same left-anti
@@ -1648,11 +1601,8 @@ object Dedup {
     * duplication (mirror of decontamination's NULL-text contract). */
   def semanticKeep(
       unit: Array[Array[Double]], df: DataFrame, id: Column, vec: Column,
-      tau: Double, maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    val dups = semanticPairs(unit, df, id, vec, tau, maxBucket)
-      .select(col("id_b").as("_drop_id"))
-    df.join(dups, id === col("_drop_id"), "left_anti")
-  }
+      tau: Double, maxBucket: Int = DefaultMaxBucket): DataFrame =
+    dropLaterIds(df, id, semanticPairs(unit, df, id, vec, tau, maxBucket))
 
   /** Typed empty `(id_a, id_b, sim)` frame preserving `id`'s type. */
   private def emptyPairs(df: DataFrame, id: Column): DataFrame =

@@ -133,16 +133,29 @@ class DedupSpec extends SparkSpec {
     assert(constKeep == plain)
   }
 
-  test("collapseExact is a pure optimization: pairs and keeps match the raw path on real data") {
+  test("exact-copy collapse: pairs and keeps match an all-pairs exact-Jaccard reference") {
+    import org.apache.spark.sql.functions.{array_distinct, array_intersect, array_union, size}
+    // Independent reference on real data: every pair of the 500 docs
+    // (124,750 pairs) by cross join, exact shingle-set Jaccard >= 0.5 —
+    // no LSH, no buckets, no collapse.
     val d = graft.tables.documents(spark, "/root/testdata/sf0.001").toNative
-    def pairs(collapse: Boolean) =
-      Dedup.jaccardPairs(d, col("doc_id"), col("text"), 0.5, collapseExact = collapse)
-        .collect().map(r => (r.getLong(0), r.getLong(1), math.round(r.getDouble(2) * 1e9))).toSet
-    assert(pairs(collapse = true) == pairs(collapse = false))
-    def keeps(collapse: Boolean) =
-      Dedup.minhashKeep(d, col("doc_id"), col("text"), 0.5, collapseExact = collapse)
-        .collect().map(_.getAs[Long]("doc_id")).toSet
-    assert(keeps(collapse = true) == keeps(collapse = false))
+    val sets = d.select(col("doc_id"),
+      array_distinct(graft.functions.TextFns.shingles(col("text"), 3)).as("s"))
+    val ref = sets.toDF("id_a", "s_a").crossJoin(sets.toDF("id_b", "s_b"))
+      .where(col("id_a") < col("id_b") && size(array_union(col("s_a"), col("s_b"))) > 0)
+      .select(col("id_a"), col("id_b"),
+        (size(array_intersect(col("s_a"), col("s_b"))).cast("double") /
+          size(array_union(col("s_a"), col("s_b")))).as("jaccard"))
+      .where(col("jaccard") >= 0.5)
+      .collect().map(r => (r.getLong(0), r.getLong(1), math.round(r.getDouble(2) * 1e9))).toSet
+    assert(ref.nonEmpty)
+    val pairs = Dedup.jaccardPairs(d, col("doc_id"), col("text"), 0.5)
+      .collect().map(r => (r.getLong(0), r.getLong(1), math.round(r.getDouble(2) * 1e9))).toSet
+    assert(pairs == ref)
+    val ids = d.select("doc_id").collect().map(_.getLong(0)).toSet
+    val keeps = Dedup.minhashKeep(d, col("doc_id"), col("text"), 0.5)
+      .collect().map(_.getAs[Long]("doc_id")).toSet
+    assert(keeps == ids -- ref.map(_._2)) // no smaller-id partner in the reference
   }
 
   test("simhashPairs finds hamming-0 twins and nothing across content") {
@@ -332,7 +345,7 @@ class DedupSpec extends SparkSpec {
     assert(run() == first)
   }
 
-  test("incremental collapseExact is a pure optimization: keeps match the raw path, replay included") {
+  test("incremental exact-copy collapse: keeps match minhashKeep over history and batch, replayed too") {
     import spark.implicits._
     val old = Seq(Doc(1L, "the quick brown fox jumps over the lazy dog"))
     val batch = Seq(
@@ -345,18 +358,20 @@ class DedupSpec extends SparkSpec {
     val idx = java.nio.file.Files.createTempDirectory("graft-mh-collapse").toString + "/idx"
     Dedup.writeMinHashIndex(Tio.fromRows(spark, Docs, old).toNative, col("doc_id"), col("text"), idx)
     val newDf = Tio.fromRows(spark, Docs, batch).toNative
-    def run(collapse: Boolean) =
-      Dedup.minhashKeepIncremental(newDf, col("doc_id"), col("text"), idx, 0.5,
-          collapseExact = collapse)
-        .collect().map(_.getAs[Long]("doc_id")).toSet
-    val kept = run(collapse = true)
+    def run() = Dedup.minhashKeepIncremental(newDf, col("doc_id"), col("text"), idx, 0.5)
+      .collect().map(_.getAs[Long]("doc_id")).toSet
+    // reference: the one-shot keep over history ∪ batch, restricted to the batch
+    val batchIds = batch.map(_.doc_id).toSet
+    val ref = Dedup.minhashKeep(Tio.fromRows(spark, Docs, old ++ batch).toNative,
+        col("doc_id"), col("text"), 0.5)
+      .collect().map(_.getAs[Long]("doc_id")).toSet.intersect(batchIds)
+    val kept = run()
     assert(kept == Set(10L, 15L)) // 11,12 dup 10 in-batch; 13 dups indexed 1; 14 dups 13
-    assert(kept == run(collapse = false))
+    assert(kept == ref)
     // replay: whole batch (reps AND non-reps) already appended — the
     // guard must exclude stale self-copies for every member id
     Dedup.writeMinHashIndex(newDf, col("doc_id"), col("text"), idx, mode = "append")
-    assert(run(collapse = true) == kept)
-    assert(run(collapse = false) == kept)
+    assert(run() == ref)
   }
 
   test("index audit finds a crashed append's bucket-less ids; param-less data refuses appends") {
@@ -560,29 +575,46 @@ class DedupSpec extends SparkSpec {
     assert(rep(61L) == (("only sixtyone", 2L, 1L)))
   }
 
+  /** 100 docs repeating ONE 9-word cycle 2..101 times: identical
+    * shingle sets (the 7 in-cycle windows plus the 2 wrap-around ones),
+    * hence identical MinHash bands — one (band, bucket) group of 100
+    * per band — yet distinct md5 fingerprints (normText only lowercases
+    * and collapses whitespace), so the exact-copy collapse keeps every
+    * one a representative and the hot-bucket guard is what stands
+    * between the bucket and O(b²) pair rows. */
+  private val cycled = (0 until 100).map(i => Doc(100L + i,
+    Seq.fill(i + 2)("lorem ipsum dolor sit amet consectetur adipiscing elit sed").mkString(" ")))
+
+  /** 1000 EXACT copies of one text (ids 1000..1999): one fingerprint
+    * group, which the collapse bands as a single representative. */
+  private val clique = (1000L until 2000L).map(i =>
+    Doc(i, "lorem ipsum dolor sit amet consectetur adipiscing elit sed"))
+
+  /** Over-cap bucket groups and member rows of a bucket stream, via the
+    * public monitoring twin of the guard. */
+  private def oversized(bk: org.apache.spark.sql.DataFrame, keys: Seq[String], cap: Int) = {
+    val over = Dedup.oversizedBuckets(bk, keys, cap).select("bucket_size").collect()
+      .map(_.getLong(0))
+    Dedup.SkippedBuckets(over.length.toLong, over.sum)
+  }
+
   test("hot-bucket guard bounds a degenerate bucket and keeps true pairs") {
     import spark.implicits._
-    // 1000 identical template docs: one degenerate (band,bucket) group
-    // that would emit ~500k intra-bucket pairs without the guard.
-    val template = (100L until 1100L).map(i =>
-      Doc(i, "lorem ipsum dolor sit amet consectetur adipiscing elit sed"))
-    val all = Tio.fromRows(spark, Docs, docs ++ template).toNative
-    // raw member-level banding (collapseExact = false): the guard is
-    // what stands between a degenerate bucket and O(b²) pair rows
-    val cands = Dedup.minhashCandidates(all, col("doc_id"), col("text"), maxBucket = 50,
-        collapseExact = false)
+    val all = Tio.fromRows(spark, Docs, docs ++ cycled).toNative
+    val cands = Dedup.minhashCandidates(all, col("doc_id"), col("text"), maxBucket = 50)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // the template bucket is dropped; the planted true pairs survive
+    // the cycled bucket is dropped; the planted true pairs survive
     assert(cands == Set((1L, 2L), (1L, 3L), (2L, 3L)))
     // the monitoring twin surfaces exactly what the cap skipped
     val over = Dedup.oversizedBuckets(
       Dedup.minhashBuckets(all, col("doc_id"), col("text")),
       Seq("band", "bucket"), 50).collect()
-    assert(over.nonEmpty && over.forall(_.getAs[Long]("bucket_size") == 1000L))
-    // DEFAULT path: the exact-duplicate collapse bands ONE rep for the
-    // whole clique, so the cap never fires and the clique's pairs come
-    // from the fingerprint groups directly — complete, not capped
-    val collapsed = Dedup.minhashCandidates(all, col("doc_id"), col("text"), maxBucket = 50)
+    assert(over.length == 64 && over.forall(_.getAs[Long]("bucket_size") == 100L))
+    // EXACT copies never reach the guard: the collapse bands ONE rep for
+    // the whole clique and its pairs come from the fingerprint groups
+    // directly — complete, not capped
+    val copies = Tio.fromRows(spark, Docs, docs ++ clique).toNative
+    val collapsed = Dedup.minhashCandidates(copies, col("doc_id"), col("text"), maxBucket = 50)
     assert(collapsed.count() == 999L * 1000L / 2 + 3) // C(1000,2) within + 3 planted
     // at gate scale (no degenerate bucket) the default cap never fires
     val uncapped = Dedup.minhashCandidates(df, col("doc_id"), col("text"), maxBucket = 0)
@@ -662,29 +694,35 @@ class DedupSpec extends SparkSpec {
 
   test("reported variants surface exactly what the hot-bucket guard skipped") {
     import spark.implicits._
-    // 1000 identical template docs: every one of the 64 bands puts all
-    // 1000 in one bucket → 64 skipped groups, 64·1000 skipped rows —
-    // under raw member-level banding (collapseExact = false).
-    val template = (100L until 1100L).map(i =>
-      Doc(i, "lorem ipsum dolor sit amet consectetur adipiscing elit sed"))
-    val all = Tio.fromRows(spark, Docs, docs ++ template).toNative
+    import org.apache.spark.sql.functions.{array, explode, lit, shiftright, struct}
+    val all = Tio.fromRows(spark, Docs, docs ++ cycled).toNative
+    // every one of the 64 bands puts the 100 cycled docs in one bucket →
+    // 64 skipped groups, 6,400 skipped rows; the report is the guard's
+    // rep-level stream (exactKeep = the collapse's representatives)
     val (kept, rep) = Dedup.minhashKeepReported(all, col("doc_id"), col("text"), 0.5,
-      maxBucket = 50, collapseExact = false)
-    assert(rep == Dedup.SkippedBuckets(64L, 64000L))
+      maxBucket = 50)
+    assert(rep == Dedup.SkippedBuckets(64L, 6400L))
+    assert(rep == oversized(Dedup.minhashBuckets(
+      Dedup.exactKeep(all, col("text"), col("doc_id")), col("doc_id"), col("text")),
+      Seq("band", "bucket"), 50))
     val keptIds = kept.collect().map(_.getAs[Long]("doc_id")).toSet
-    assert(keptIds.contains(1L) && keptIds.contains(4L))
-    assert(!keptIds.contains(2L) && !keptIds.contains(3L)) // true pairs still dropped
-    assert(template.forall(d => keptIds.contains(d.doc_id))) // capped bucket: reported, not deduped
-
-    // DEFAULT path: exact copies collapse before banding, so the same
-    // corpus reports ZERO skips and the clique dedups fully to its min
-    // id — the guard is left for buckets that are hot WITHOUT being
-    // exact copies
-    val (keptC, repC) = Dedup.minhashKeepReported(all, col("doc_id"), col("text"), 0.5,
+    assert(keptIds == Set(1L, 4L) ++ cycled.map(_.doc_id)) // capped: reported, not deduped
+    // the reported frame is the plain operator's result
+    assert(keptIds == Dedup.minhashKeep(all, col("doc_id"), col("text"), 0.5, maxBucket = 50)
+      .collect().map(_.getAs[Long]("doc_id")).toSet)
+    // guard off: nothing skipped, the cycled docs dedup to their min id
+    val (keptOff, repOff) = Dedup.minhashKeepReported(all, col("doc_id"), col("text"), 0.5,
+      maxBucket = 0)
+    assert(repOff == Dedup.SkippedBuckets(0L, 0L))
+    assert(keptOff.collect().map(_.getAs[Long]("doc_id")).toSet == Set(1L, 4L, 100L))
+    // EXACT copies collapse before banding, so a clique of them reports
+    // ZERO skips and dedups fully to its min id — the guard is left for
+    // buckets that are hot WITHOUT being exact copies
+    val (keptC, repC) = Dedup.minhashKeepReported(
+      Tio.fromRows(spark, Docs, docs ++ clique).toNative, col("doc_id"), col("text"), 0.5,
       maxBucket = 50)
     assert(repC == Dedup.SkippedBuckets(0L, 0L))
-    val keptCIds = keptC.collect().map(_.getAs[Long]("doc_id")).toSet
-    assert(keptCIds == Set(1L, 4L, 100L)) // template clique → its min id
+    assert(keptC.collect().map(_.getAs[Long]("doc_id")).toSet == Set(1L, 4L, 1000L))
 
     // without a degenerate bucket the report is zero and the result
     // matches the plain API exactly
@@ -692,10 +730,17 @@ class DedupSpec extends SparkSpec {
     assert(rep2 == Dedup.SkippedBuckets(0L, 0L))
     assert(kept2.collect().map(_.getAs[Long]("doc_id")).toSet == Set(1L, 4L))
 
-    // simhash: identical docs agree on all 4 chunks
+    // simhash: the cycled docs share one signature, so all 4 chunks are hot
     val (sp, rep3) = Dedup.simhashPairsReported(all, col("doc_id"), col("text"), maxBucket = 50)
-    assert(rep3.groups == 4L && rep3.rows >= 4000L)
+    val chunks = Dedup.simhashSignatures(all, col("doc_id"), col("text"))
+      .select(col("doc_id"), explode(array((0 until 4).map(i => struct(lit(i).as("chunk"),
+        shiftright(col("sig"), i * 16).bitwiseAND(lit(0xFFFFL)).as("ckey"))): _*)).as("c"))
+      .select(col("doc_id"), col("c.chunk"), col("c.ckey"))
+    assert(rep3.groups == 4L && rep3.rows >= 400L)
+    assert(rep3 == oversized(chunks, Seq("chunk", "ckey"), 50))
     assert(sp.collect().map(r => (r.getLong(0), r.getLong(1))).toSet.contains((1L, 2L)))
+    assert(Dedup.simhashPairsReported(all, col("doc_id"), col("text"), maxBucket = 0)._2 ==
+      Dedup.SkippedBuckets(0L, 0L))
 
     // embedding: identical vectors agree in all 8 tables
     val tmplV = Seq(1f, 1f, 1f, 1f, 1f, 1f, 1f, 1f)
@@ -705,7 +750,11 @@ class DedupSpec extends SparkSpec {
     val e = Tio.fromRows(spark, Embs, embs).toNative
     val (ep, rep4) = Dedup.embeddingPairsReported(e, col("vec_id"), col("embedding"),
       tau = 0.95, dim = 8, maxBucket = 50)
+    val tables = graft.operators.Vec.hyperplaneBuckets(
+        e.select(col("vec_id").as("_id"), col("embedding").as("_v")), col("_v"), 8, 8, 8, 7L)
+      .select("_id", "tbl", "bucket")
     assert(rep4.groups == 8L && rep4.rows >= 4800L)
+    assert(rep4 == oversized(tables, Seq("tbl", "bucket"), 50))
     assert(ep.collect().map(r => (r.getLong(0), r.getLong(1))).toSet == Set((1L, 2L)))
   }
 

@@ -92,7 +92,7 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("hot-bucket guard reads a CACHED bucket stream — the hashing subtree runs once") {
-    // r12 regression gate: capBuckets references its bucket input twice
+    // r12 regression gate: the guard references its bucket input twice
     // (sizes groupBy + semi-join probe) and the self-join twice more; an
     // uncached input re-evaluates the upstream hashing (hyperplane
     // bucketing ×8 tables for the embedding path, simhash signatures)
@@ -103,8 +103,24 @@ class PlanAuditSpec extends SparkSpec {
     for (name <- Seq("dedup_embedding", "dedup_simhash")) {
       val plan = q(name)
       assert(plan.contains("InMemoryTableScan"),
-        s"$name: capBuckets input must be cached (single hashing pass):\n$plan")
+        s"$name: guard input must be cached (single hashing pass):\n$plan")
     }
+  }
+
+  test("minhashKeepReported reads its bucket stream CACHED, like the lazy guard") {
+    // The reported variant is the plain operator's plan plus a skip
+    // report over the same guard: the (id, band, bucket) stream is
+    // persisted once and read through InMemoryTableScan by the report,
+    // the sizes groupBy, the semi-join probe and both self-join sides —
+    // one hashing pass, never a checkpointed copy of its own.
+    import org.apache.spark.sql.functions.col
+    val d = tables.documents(spark, dir).toNative
+    val (kept, _) = graft.operators.Dedup.minhashKeepReported(d, col("doc_id"), col("text"), 0.5)
+    val plan = finalPlan(kept)
+    def bucketScan(op: String) = plan.linesIterator.exists(l =>
+      l.contains(op) && l.contains("band#") && l.contains("bucket#"))
+    assert(bucketScan("InMemoryTableScan"), s"bucket stream must be cached:\n$plan")
+    assert(!bucketScan("ExistingRDD"), s"bucket stream must not be checkpointed:\n$plan")
   }
 
   test("dedup_minhash / dedup_spans: no per-key window anywhere in the dedup paths") {

@@ -105,6 +105,16 @@ class SemDedupSpec extends SparkSpec {
     val got = pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == Set((1L, 2L)))
     assert(report.groups == 1L && report.rows == 50L)
+    // the report is exactly the monitoring twin over the same assignment stream
+    val over = Dedup.oversizedBuckets(
+        Ann.assignClusters(unit, e, col("vec_id"), col("embedding")), Seq("cid"), 10)
+      .select("bucket_size").collect().map(_.getLong(0))
+    assert(report == Dedup.SkippedBuckets(over.length.toLong, over.sum))
+    // guard off: no report, and the pile's pairs are no longer capped
+    val (all, off) = Dedup.semanticPairsReported(
+      unit, e, col("vec_id"), col("embedding"), tau = 0.95, maxBucket = 0)
+    assert(off == Dedup.SkippedBuckets(0L, 0L))
+    assert(all.count() > 1L)
   }
 
   test("empty corpus / untrainable quantizer yields an empty typed result") {

@@ -68,6 +68,29 @@ class ValidationSpec extends SparkSpec {
       assertThrows[GSchemaError] {
         Tio.fromRows(spark, Users, Seq(UserRow(1L, "", None, 5.0)))
       }
+      // ...and every other typed read/constructor goes through the same
+      // boundary: csv, json and wrapped frames are constraint-checked too.
+      val bad = Seq((1L, "", Option(1L), 5.0)).toDF("id", "name", "age", "score")
+      val dir = java.nio.file.Files.createTempDirectory("graft-val-boundary").toString
+      bad.write.option("header", "true").csv(s"$dir/csv")
+      bad.write.json(s"$dir/json")
+      assertThrows[GSchemaError](Tio.readCsv(spark, s"$dir/csv", Users))
+      assertThrows[GSchemaError](Tio.readJson(spark, s"$dir/json", Users))
+      assertThrows[GSchemaError](Tio.fromDF(bad, Users))
+      assertThrows[GSchemaError] {
+        Tio.fromDict(spark, Users,
+          Map("id" -> Seq(1L), "name" -> Seq(""), "age" -> Seq(1L), "score" -> Seq(5.0)))
+      }
+      // OFF: the same boundary runs no Spark job at all
+      GValidation.level = GValidation.Off
+      val sc = spark.sparkContext
+      sc.setJobGroup("graft-val-off", "validation off boundary")
+      try {
+        Tio.readCsv(spark, s"$dir/csv", Users)
+        Tio.readJson(spark, s"$dir/json", Users)
+        Tio.fromDF(bad, Users)
+        assert(sc.statusTracker.getJobIdsForGroup("graft-val-off").isEmpty)
+      } finally sc.clearJobGroup()
     } finally GValidation.level = old
   }
 
