@@ -96,8 +96,8 @@ object SparkEntry {
     * 64 Goertzel passes per clip; PNG deflate/inflate + DCT per image)
     * — otherwise inherits the source file's split count: documents
     * .parquet is ONE row group at every bench SF, so ONE task did all
-    * the codec work (plans/r21/multimodal_audio_fp_before.txt: the
-    * MapPartitions sit directly on the file scan). Explicit
+    * the codec work (the executed plan without the spread had the
+    * MapPartitions directly on the file scan). Explicit
     * numPartitions so AQE never coalesces the tiny shuffle back to one
     * partition; defaultParallelism keeps it scale-adaptive (local[N] →
     * N, a cluster → its total cores). Payloads still never shuffle —
@@ -939,9 +939,14 @@ object SparkEntry {
     // minhashKeep over the union restricted to the new half, which is
     // exactly what the all-pairs oracle checks.
     "dedup_incremental" -> { (s, dir) =>
-      val (cut, writeIndex, query) = incrementalPhases(s, dir)
-      cut(); writeIndex()
-      query().select("doc_id").orderBy("doc_id")
+      val docs = documents(s, dir).toNative
+      val cut = docs.agg(max(col("doc_id"))).head().getLong(0) / 2
+      val idx = tempShardDir("graft_mh_idx_", dir)
+      Dedup.writeMinHashIndex(
+        docs.where(col("doc_id") <= cut), col("doc_id"), col("text"), idx)
+      Dedup.minhashKeepIncremental(
+          docs.where(col("doc_id") > cut), col("doc_id"), col("text"), idx, 0.5)
+        .select("doc_id").orderBy("doc_id")
     },
 
     // L13: connected-components clustering over the verified pairs —
@@ -1325,9 +1330,7 @@ object SparkEntry {
     // each stage consumes the previous frame lazily, so Catalyst fuses
     // the narrow gates into the scan and the whole flow reads the
     // corpus once per shuffle stage rather than once per operator.
-    "corpus_prep" -> { (s, dir) =>
-      corpusPrepPhases(s, dir, near = false).last._2()
-    },
+    "corpus_prep" -> { (s, dir) => corpusPrep(s, dir, near = false) },
 
     // corpus_prep with the MinHash near-dedup stage the published
     // corpus recipes run between exact dedup and decontamination —
@@ -1338,9 +1341,7 @@ object SparkEntry {
     // and the decontam + packing stages consume the near-deduped frame.
     // Oracle: corpus_prep's CTE chain with dedup_minhash's all-pairs
     // Jaccard CTE spliced in at the same point.
-    "corpus_prep_near" -> { (s, dir) =>
-      corpusPrepPhases(s, dir, near = true).last._2()
-    },
+    "corpus_prep_near" -> { (s, dir) => corpusPrep(s, dir, near = true) },
 
     // L3: SimHash pairs within hamming 3 via 4x16-bit pigeonhole bands.
     // PARTIAL oracle: the hash kernel isn't ANSI-SQL-expressible, so
@@ -1910,33 +1911,11 @@ object SparkEntry {
     },
   )
 
-  /** corpus_prep(_near) split into named stages, each thunk returning
-    * that stage's frame — `queries("corpus_prep")`/`("corpus_prep_near")`
-    * are built from `.last`, so the split can never drift from what
-    * the gates run, and Bench's sidecar times each stage (the sf10
-    * sweeps saw corpus_prep swing 97→278 s across same-HEAD passes
-    * with no way to say WHICH stage moved — r16 verdict item #7).
-    * Stage boundaries are the flow's own `localCheckpoint`s:
-    *   - gate: the expensive narrow chain (regex tokenization +
-    *     language scores) pruned to (doc_id, text) and materialized
-    *     once — the dedup semi-join and decontam anti-join reference
-    *     their input subtree TWICE each, so without the boundary the
-    *     gates re-run 4× per action (12× across packByBudget's three
-    *     passes; measured 10× slower end-to-end). On a real cluster
-    *     use a reliable store for the boundary (the
-    *     Dedup.duplicateClusters checkpointDir tradeoff).
-    *   - (near only) exact_dedup: materialized separately — near-dedup
-    *     re-reads its input for shingling, banding, verify AND the
-    *     final anti-join.
-    *   - weights: dedup keep (+ near-dup keep) + decontamination +
-    *     the narrow (id, weight) projection, materialized once —
-    *     packByBudget drives three actions over its input.
-    *   - pack: the two-phase distributed prefix-sum shard assignment. */
-
-  /** PID-scoped temp shard dir for the synthetic-archive gates:
-    * concurrent Bench/Verify JVMs can't race each other's shards (the
-    * r17 ADVICE race), and a shutdown hook deletes the tree so repeated
-    * JVM runs don't accumulate archives in the tmpdir. */
+  /** PID-scoped temp dir for the gates that write files (synthetic
+    * archives, pack shards, the MinHash index, the PQ codes catalog):
+    * concurrent Bench/Verify JVMs over the same data dir can't race
+    * each other's files, and a shutdown hook deletes the tree so
+    * repeated JVM runs don't accumulate them in the tmpdir. */
   private val shardDirCleanups = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   private def tempShardDir(prefix: String, dir: String): String = {
     val d = new java.io.File(System.getProperty("java.io.tmpdir"),
@@ -1953,108 +1932,49 @@ object SparkEntry {
     path
   }
 
-  def corpusPrepPhases(
-      s: SparkSession, dir: String, near: Boolean): Seq[(String, () => DataFrame)] = {
+  /** The corpus_prep flow, with (`near`) or without the MinHash
+    * near-dedup stage. Its stage boundaries are `localCheckpoint`s,
+    * taken in this order while the frame is built:
+    *   - gate: the expensive narrow chain (regex tokenization +
+    *     language scores) pruned to (doc_id, text) and materialized
+    *     once — the dedup semi-join and decontam anti-join reference
+    *     their input subtree TWICE each, so without the boundary the
+    *     gates re-run 4× per action (12× across packByBudget's three
+    *     passes; measured 10× slower end-to-end). On a real cluster
+    *     use a reliable store for the boundary (the
+    *     Dedup.duplicateClusters checkpointDir tradeoff).
+    *   - (near only) exact dedup: materialized separately — near-dedup
+    *     re-reads its input for shingling, banding, verify AND the
+    *     final anti-join.
+    *   - (near only) near-dedup keep: decontaminatedKeep references
+    *     its corpus input TWICE (gram probe + anti-join), so an
+    *     unmaterialized near-dedup tail would re-run its verify joins
+    *     and keep anti-join per reference.
+    *   - weights: dedup keep (+ near-dup keep) + decontamination +
+    *     the narrow (id, weight) projection, materialized once —
+    *     packByBudget drives three actions over its input.
+    * The pack itself is the two-phase distributed prefix-sum shard
+    * assignment. */
+  private def corpusPrep(s: SparkSession, dir: String, near: Boolean): DataFrame = {
     val docs = documents(s, dir).toNative
     val bench = docs.where(col("doc_id") % 10 === 0)
     val corpus = docs.where(col("doc_id") % 10 =!= 0)
-    lazy val gated = TextFns.withLangId(corpus, col("text"), "_lang")
+    val gated = TextFns.withLangId(corpus, col("text"), "_lang")
       .where(TextFns.wordCount(col("text")) >= 8 && col("_lang") === "en")
       .select(col("doc_id"), col("text"))
       .localCheckpoint()
-    lazy val deduped =
-      if (near) Dedup.exactKeep(gated, col("text"), col("doc_id")).localCheckpoint()
-      else Dedup.exactKeep(gated, col("text"), col("doc_id"))
-    lazy val kept =
-      // near: materialize the near-dedup keep — decontaminatedKeep
-      // references its corpus input TWICE (gram probe + anti-join), so
-      // an unmaterialized near-dedup tail re-runs its verify joins and
-      // keep anti-join per reference (r22 audit; same rationale as the
-      // `gated` boundary above).
-      if (near) Dedup.minhashKeep(deduped, col("doc_id"), col("text"), 0.5).localCheckpoint()
+    val deduped = Dedup.exactKeep(gated, col("text"), col("doc_id"))
+    val kept =
+      if (near) Dedup.minhashKeep(deduped.localCheckpoint(), col("doc_id"), col("text"), 0.5)
+        .localCheckpoint()
       else deduped
-    lazy val weights = {
-      val clean = Dedup.decontaminatedKeep(
+    val weights = Dedup.decontaminatedKeep(
         kept, col("doc_id"), col("text"), bench, col("text"), k = 5)
-      clean.select(col("doc_id"),
-          TextFns.tokenCountWs(col("text")).cast("long").as("n_tokens"))
-        .localCheckpoint()
-    }
-    lazy val packed = Pack.packByBudget(weights, col("doc_id"), col("n_tokens"), budget = 2000)
-      .select(col("id").as("doc_id"), col("weight").as("n_tokens"), col("shard_id"))
-      .orderBy("doc_id")
-    val head = Seq("gate" -> (() => gated)) ++
-      (if (near) Seq("exact_dedup" -> (() => deduped)) else Nil)
-    head ++ Seq(
-      (if (near) "near_dedup_decontam_weights" else "dedup_decontam_weights") ->
-        (() => weights),
-      "pack" -> (() => packed))
-  }
-
-  /** The web_prep flow split into named stages — (ingest_extract,
-    * gate, dedup_decontam_weights, pack) — so the sf10 sidecar can
-    * localize a regression to a stage (r19 verdict #6: 108 s with no
-    * breakdown). The corpusPrepPhases convention: each thunk
-    * materializes its own boundary (localCheckpoint), so stage times
-    * sum to ~the official flow time; the gate itself stays the ONE
-    * composed lazy plan. */
-  def webPrepPhases(s: SparkSession, dir: String): Seq[(String, () => DataFrame)] = {
-    val docs = documents(s, dir).toNative.where(col("doc_id") % 8 === 0)
-    val html = concat(
-      lit("<html><head><title>Web</title><style>p{color:red}</style>" +
-        "<script>if (1 < 2) { x(); }</script></head><body><!-- crawl -->" +
-        "<h1>Web &amp; Prep</h1><p class=\"main\">"), col("text"),
-      lit(" « café § »&nbsp;&lt;end&gt;</p></body></html>"))
-    lazy val pages = {
-      val shardDir = tempShardDir("graft_webprep_ph_", dir)
-      val glob = graft.sources.Warc.writeSyntheticShards(
-        docs.select(col("doc_id"), html.as("html")), shardDir)
-      graft.sources.Warc.read(s, glob)
-        .where(col("valid") && col("warc_type") === "response")
-        .select(
-          regexp_extract(col("target_uri"), "/doc/(\\d+)$", 1).cast("long").as("doc_id"),
-          TextFns.htmlToText(col("payload_text")).as("text"))
-        .localCheckpoint()
-    }
-    lazy val bench = pages.where(col("doc_id") % 40 === 0)
-    lazy val gated = TextFns.withLangId(pages.where(col("doc_id") % 40 =!= 0),
-        col("text"), "_lang")
-      .where(TextFns.wordCount(col("text")) >= 8 && col("_lang") === "en")
-      .select(col("doc_id"), col("text"))
+      .select(col("doc_id"), TextFns.tokenCountWs(col("text")).cast("long").as("n_tokens"))
       .localCheckpoint()
-    lazy val weights = {
-      val deduped = Dedup.exactKeep(gated, col("text"), col("doc_id"))
-      val clean = Dedup.decontaminatedKeep(
-        deduped, col("doc_id"), col("text"), bench, col("text"), k = 6)
-      clean.select(col("doc_id"),
-          TextFns.tokenCountWs(col("text")).cast("long").as("n_tokens"))
-        .localCheckpoint()
-    }
-    lazy val packed = Pack.packByBudget(weights, col("doc_id"), col("n_tokens"), budget = 2000)
+    Pack.packByBudget(weights, col("doc_id"), col("n_tokens"), budget = 2000)
       .select(col("id").as("doc_id"), col("weight").as("n_tokens"), col("shard_id"))
       .orderBy("doc_id")
-    Seq(
-      "ingest_extract" -> (() => pages),
-      "gate" -> (() => gated),
-      "dedup_decontam_weights" -> (() => weights),
-      "pack" -> (() => packed))
-  }
-
-  /** The dedup_incremental flow split into its named phases — (cut,
-    * index write, query) — so Bench's sidecar can attribute time to
-    * each (the official per-query number still gates the full flow).
-    * `queries("dedup_incremental")` is built from these same thunks,
-    * so the split can never drift from what the gate runs. */
-  def incrementalPhases(s: SparkSession, dir: String): (() => Long, () => Unit, () => DataFrame) = {
-    val docs0 = documents(s, dir).toNative
-    lazy val cut = docs0.agg(max(col("doc_id"))).head().getLong(0) / 2
-    val idx = s"${System.getProperty("java.io.tmpdir")}/graft_mh_idx_" +
-      java.lang.Integer.toHexString(dir.hashCode)
-    (() => cut,
-     () => Dedup.writeMinHashIndex(
-       docs0.where(col("doc_id") <= cut), col("doc_id"), col("text"), idx),
-     () => Dedup.minhashKeepIncremental(
-       docs0.where(col("doc_id") > cut), col("doc_id"), col("text"), idx, 0.5))
   }
 
   /** Deterministic intermediate stages backing the PARTIAL oracles of
@@ -2211,39 +2131,6 @@ object SparkEntry {
         Ann.trainIvf(e, col("embedding"), dim = 64, nClusters = 16),
         Ann.trainPq(e, col("embedding"), dim = 64, m = 8, codes = 16),
         e, col("vec_id"), col("embedding"), probes, nProbe = 4, rerank = 50)
-    },
-  )
-
-  /** Sidecar-only bench A/B variants: NOT driver queries, never on the
-    * official line — Bench times each once per run and records it in
-    * the telemetry sidecar. Each is the interpreted HOF twin of a
-    * codegen'd kernel, so the sidecar keeps pricing what the kernel
-    * removed. */
-  def benchVariants: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // The r16 interpreted HOF token filter vs the codegen'd
-    // KeepTokensExpr kernel bm25_score now runs — same fit, same
-    // output, so the sidecar keeps measuring the per-token
-    // interpretation tax the kernel removed (r17).
-    "bm25_score_hof" -> { (s, dir) =>
-      val docs = documents(s, dir).toNative
-      Bm25.scoreHof(docs, col("doc_id"), col("text"),
-          Seq("spark", "window", "merge"), Bm25.fit(docs, col("text")))
-        .select(col("id").as("doc_id"), col("dl"), col("n_hits"), col("bm25_micro"))
-        .orderBy("doc_id")
-    },
-    // The r15 interpreted HOF projection vs the codegen'd
-    // PcaProjectExpr kernel pca_project now runs — same train, same
-    // output shape, so the per-round sidecar keeps measuring exactly
-    // the interpretation tax the kernel removed.
-    "pca_project_hof" -> { (s, dir) =>
-      import org.apache.spark.sql.functions.posexplode
-      val e = embeddings(s, dir).toNative
-      val model = graft.operators.Pca.train(e, col("embedding"), dim = 64, k = 8)
-      graft.operators.Pca.projectHof(e, col("embedding"), model)
-        .select(col("vec_id"), posexplode(col("proj")).as(Seq("cidx", "p")))
-        .select(col("vec_id"), col("cidx"),
-          org.apache.spark.sql.functions.round(col("p"), 6).as("p"))
-        .orderBy("vec_id", "cidx")
     },
   )
 

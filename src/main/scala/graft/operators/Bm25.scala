@@ -121,12 +121,11 @@ object Bm25 {
       broadcastModel: Boolean = true): DataFrame =
     scoreImpl(df, id, text, query, model, k1, b, broadcastModel, hofFilter = false)
 
-  /** Sidecar-A/B twin of [[score]] keeping the r16 INTERPRETED HOF
-    * token filter (`filter(toks, t => t.isin(query: _*))` — an
-    * interpreted predicate per token with an O(|query|) isin per
-    * call) so the per-round sidecar keeps measuring exactly the
-    * interpretation tax [[org.apache.spark.sql.graftexpr.KeepTokensExpr]]
-    * removed (the pca_project_hof pattern). Output-identical. */
+  /** Test reference for [[score]]: the r16 INTERPRETED HOF token
+    * filter (`filter(toks, t => t.isin(query: _*))` — an interpreted
+    * predicate per token with an O(|query|) isin per call) that
+    * [[org.apache.spark.sql.graftexpr.KeepTokensExpr]] replaced.
+    * Bm25Spec pins the two output-identical. */
   private[graft] def scoreHof(
       df: DataFrame, id: Column, text: Column, query: Seq[String],
       model: Bm25Model): DataFrame =

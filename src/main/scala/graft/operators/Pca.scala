@@ -115,7 +115,7 @@ object Pca {
     * ([[org.apache.spark.sql.graftexpr.PcaProjectExpr]]): the basis
     * ships once per task as a reference object and the per-row cost is
     * a primitive k·d loop. The interpreted HOF chain this replaces
-    * ([[projectHof]], kept as the measured A/B twin) paid SURVEY §4's
+    * ([[projectHof]], kept as the test reference) paid SURVEY §4's
     * 64–80× per-element interpretation tax on exactly the pass L50
     * exists to make cheap. Bit-identical arithmetic — PcaSpec pins the
     * two forms equal through `==` on every component. `vec` must be
@@ -131,10 +131,9 @@ object Pca {
   }
 
   /** The round-15 interpreted `zip_with`+`aggregate` projection — kept
-    * ONLY as [[project]]'s measurement twin (bench variant
-    * `pca_project_hof` and the PcaSpec bit-equality law). Do not use
-    * in pipelines. */
-  def projectHof(df: DataFrame, vec: Column, model: PcaModel,
+    * ONLY as the test reference for [[project]] (the PcaSpec
+    * bit-equality law). Do not use in pipelines. */
+  private[graft] def projectHof(df: DataFrame, vec: Column, model: PcaModel,
       outCol: String = "proj"): DataFrame = {
     val meanLit = array(model.mean.map(lit): _*)
     val staged = df.withColumn("_graft_cv",

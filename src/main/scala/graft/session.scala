@@ -20,6 +20,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * held between drains are tiny next to the blocks they unlock. */
 private[graft] object InternalCaches {
   private final case class Entry(threadId: Long, threadName: String, df: DataFrame)
+  private val log = org.slf4j.LoggerFactory.getLogger("graft.InternalCaches")
   private val reg = new java.util.concurrent.ConcurrentLinkedQueue[Entry]()
 
   /** Register a frame the operator just persisted; returns it. Entries
@@ -65,8 +66,8 @@ private[graft] object InternalCaches {
     var df = reg.poll()
     while (df != null) {
       if (df.threadId != self)
-        System.err.println(s"[graft] InternalCaches.drainAll: releasing cache " +
-          s"registered by thread '${df.threadName}' (#${df.threadId}) from " +
+        log.warn("drainAll: releasing cache registered by " +
+          s"thread '${df.threadName}' (#${df.threadId}) from " +
           s"'${Thread.currentThread().getName}' — if that flow is still running, " +
           "its persisted subtree will silently recompute")
       unpersist(df)

@@ -124,7 +124,7 @@ class Bm25Spec extends SparkSpec {
     assert(k0 == Seq(1L, 2L, 3L))
   }
 
-  test("scoreHof (the sidecar A/B twin) is output-identical to the kernel path") {
+  test("scoreHof (the interpreted test reference) is output-identical to the kernel path") {
     val m = Bm25.fit(docs, col("text"))
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("id", "dl", "n_hits", "bm25_micro")

@@ -653,7 +653,8 @@ class DedupSpec extends SparkSpec {
     // caches the DRAINING thread registered — a global drain here would
     // unpersist the other flow's bucket cache mid-query and silently
     // reinstate the double-evaluation the persist prevents. drainAll()
-    // (the releaseCachedBlocks path) still reaps everything.
+    // (the releaseCachedBlocks path) still reaps everything, and says
+    // so through logging.
     def emptyCache = spark.sharedState.cacheManager.isEmpty
     spark.sqlContext.clearCache()
     InternalCaches.drainAll()
@@ -667,8 +668,38 @@ class DedupSpec extends SparkSpec {
     assert(!emptyCache, "other flow should have registered a persisted bucket stream")
     InternalCaches.drain() // THIS thread's boundary: registered nothing
     assert(!emptyCache, "flow-scoped drain must not touch another thread's cache")
-    InternalCaches.drainAll() // whole-session cleanup reaps foreign entries
+    val warnings = captureWarnings("graft.InternalCaches") {
+      InternalCaches.drainAll() // whole-session cleanup reaps foreign entries
+    }
     assert(emptyCache)
+    assert(warnings.exists(w => w.contains("drainAll") && w.contains("graft-spec-other-flow")),
+      s"foreign-thread reap must warn through the logger, got $warnings")
+  }
+
+  /** Messages logged at WARN or above to `loggerName` while `body` runs,
+    * captured by a log4j appender (the session runs at ERROR). */
+  private def captureWarnings(loggerName: String)(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import scala.jdk.CollectionConverters._
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("spec-capture", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage): Unit
+    }
+    appender.start()
+    val logger = LogManager.getLogger(loggerName).asInstanceOf[Logger]
+    logger.addAppender(appender)
+    val restore = logger.getLevel
+    logger.setLevel(Level.WARN)
+    try body
+    finally {
+      logger.removeAppender(appender)
+      logger.setLevel(restore)
+      appender.stop()
+    }
+    seen.asScala.toSeq
   }
 
   test("simhash and embedding self-joins honor the hot-bucket cap") {

@@ -2,7 +2,9 @@
 """Local pre-flight for the driver's correctness gate: run each oracle
 SQL from a Verify outDir in DuckDB over the same sf parquet tables and
 compare rows/schema/values to the Spark result parquet. Mirrors the
-driver's compare (sort columns by name, order-insensitive row hash).
+driver's compare (sort columns by name, order-insensitive row hash). A result
+directory with no oracle entry is a failure, not a skip: the driver's
+gate would see rows it cannot check.
 
 IMPORTANT: the value compare stringifies each cell with raw str(v) and
 NO float canonicalization, byte-faithful to the driver's row hash. A
@@ -15,7 +17,7 @@ old %.9g normalization here masked exactly that mismatch).
 Usage: python3 tools/local_compare.py <sfDir> <verifyOutDir> [query ...]
        python3 tools/local_compare.py --selftest
 """
-import json, sys, duckdb
+import json, os, sys, tempfile, duckdb
 
 
 def canon(df):
@@ -34,6 +36,12 @@ def compare(o, s):
     return o, s, rows, schema, values
 
 
+def unmatched(out, oracles):
+    """Result directories under `out` with no oracle entry."""
+    return sorted(d for d in os.listdir(out)
+                  if os.path.isdir(os.path.join(out, d)) and d not in oracles)
+
+
 def selftest():
     """Regression: an uncast sum() OVER (HUGEINT -> float64) must FAIL
     against the BIGINT result a Spark LongType column would produce."""
@@ -50,7 +58,14 @@ def selftest():
         "— float canonicalization has crept back into canon()")
     _, _, rows2, schema2, values2 = compare(cast, cast.copy())
     assert rows2 and schema2 and values2, "selftest: identical frames must match"
-    print("selftest ok: uncast sum() OVER fails pre-flight, cast form passes")
+    with tempfile.TemporaryDirectory() as out:
+        for d in ("q1_agg", "q2_filter_sort"):
+            os.mkdir(os.path.join(out, d))
+        open(os.path.join(out, "oracle_sql.json"), "w").close()
+        assert unmatched(out, {"q1_agg": "SELECT 1"}) == ["q2_filter_sort"], (
+            "selftest FAILED: a result dir without an oracle entry went unreported")
+    print("selftest ok: uncast sum() OVER fails pre-flight, cast form passes, "
+          "a result dir without an oracle fails")
 
 
 if len(sys.argv) == 2 and sys.argv[1] == "--selftest":
@@ -68,6 +83,11 @@ for t in ["region", "nation", "customer", "supplier", "part", "orders",
 
 oracles = json.load(open(f"{out}/oracle_sql.json"))
 fail = 0
+for name in unmatched(out, oracles):
+    if only and name not in only:
+        continue
+    fail += 1
+    print(f"FAIL {name}: result dir has no oracle entry")
 for name, sql in sorted(oracles.items()):
     if only and name not in only:
         continue
