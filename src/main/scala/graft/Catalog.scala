@@ -34,11 +34,14 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 object Catalog {
 
   /** Read the committed params row at `path/params`, `None` when no
-    * committed catalog exists there (missing marker). `parse` reads
-    * columns BY NAME so a column-order change in the persisted file
-    * fails loudly instead of silently swapping fields. */
+    * committed catalog exists there: no marker dir (checked on the
+    * filesystem, so a fresh catalog costs no failed read), or a marker
+    * dir holding no committed file (a crashed marker write). `parse`
+    * reads columns BY NAME so a column-order change in the persisted
+    * file fails loudly instead of silently swapping fields. */
   def readParams[P](spark: SparkSession, path: String)(parse: Row => P): Option[P] =
-    try Some(parse(spark.read.parquet(s"$path/params").head()))
+    if (!dataExists(spark, path, Seq("params"))) None
+    else try Some(parse(spark.read.parquet(s"$path/params").head()))
     catch { case _: org.apache.spark.sql.AnalysisException => None }
 
   /** Whether any of the catalog's data dirs exist under `path` — data

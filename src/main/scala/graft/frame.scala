@@ -168,13 +168,14 @@ final class TFrame[S <: GSchema](val df: DataFrame, val schemaOpt: Option[S]) ex
     * (reference dataframe.py:653-673). */
   def withRaw(fn: DataFrame => DataFrame): TFrame[S] = {
     val out = same(fn(df))
-    if (GValidation.enabled) schemaOpt.foreach(s => Validator.structural(out.df, s))
+    if (GValidation.level(out.df.sparkSession) != GValidation.Off)
+      schemaOpt.foreach(s => Validator.structural(out.df, s))
     out
   }
 
   // --- Validation (reference dataframe.py:677-687) ---
   /** Always runs structural + value-level checks, independent of the
-    * global toggle — mirrors reference validate(). */
+    * session's level — mirrors reference validate(). */
   def validate(): TFrame[S] = {
     schemaOpt.foreach { s =>
       Validator.structural(df, s)

@@ -145,20 +145,19 @@ object UrlFns {
   /** Drop rows whose URL's registered domain appears in `blocked`
     * (single-column frame of domains) — broadcast LEFT ANTI join, so
     * the corpus never shuffles; a blocklist too large to broadcast
-    * (≫10⁷ rows) drops the hint for a shuffle anti join. Rows whose
-    * URL doesn't parse KEEP (a blocklist removes known-bad domains;
-    * it has no opinion on unparseable rows — compose with an
-    * `urlHost =!= ""` filter to drop those). */
+    * (≫10⁷ rows) opts out with `spark.sql.optimizer.disableHints=true`,
+    * set on a `spark.newSession()` because it drops every hint in that
+    * session. Rows whose URL doesn't parse KEEP (a blocklist removes
+    * known-bad domains; it has no opinion on unparseable rows — compose
+    * with an `urlHost =!= ""` filter to drop those). */
   def filterBlockedDomains(
       df: DataFrame, url: Column, blocked: DataFrame,
-      broadcastList: Boolean = true,
       psl: Option[Iterable[String]] = None): DataFrame = {
-    val b = blocked.toDF("_graft_blocked")
-    val side = if (broadcastList) broadcast(b) else b
     val domain = psl match {
       case Some(rules) => registeredDomainPsl(urlHost(url), rules)
       case None => registeredDomain(urlHost(url))
     }
-    df.join(side, domain === col("_graft_blocked"), "left_anti")
+    df.join(broadcast(blocked.toDF("_graft_blocked")),
+      domain === col("_graft_blocked"), "left_anti")
   }
 }

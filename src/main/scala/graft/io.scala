@@ -16,14 +16,15 @@ object Tio {
     typed(spark.read.parquet(path), schema)
 
   /** The typed boundary every read and constructor goes through:
-    * structural check (if validation is on) → prune to the schema's
-    * columns → value constraints (under `GValidation.Full`). Pruning
-    * BEFORE the constraints keeps their one aggregation pass scanning
-    * only schema columns. Under `Off` this runs no Spark job. */
+    * structural check (if the session's [[GValidation.level]] is on) →
+    * prune to the schema's columns → value constraints (under `Full`).
+    * Pruning BEFORE the constraints keeps their one aggregation pass
+    * scanning only schema columns. Under `Off` this runs no Spark job. */
   private def typed[S <: GSchema](raw: DataFrame, schema: S): TFrame[S] = {
-    if (GValidation.enabled) Validator.structural(raw, schema)
+    val level = GValidation.level(raw.sparkSession)
+    if (level != GValidation.Off) Validator.structural(raw, schema)
     val pruned = raw.select(schema.columnNames.map(col): _*)
-    if (GValidation.full) Validator.constraints(pruned, schema)
+    if (level == GValidation.Full) Validator.constraints(pruned, schema)
     new TFrame[S](pruned, Some(schema))
   }
 

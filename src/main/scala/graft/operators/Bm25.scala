@@ -117,9 +117,8 @@ object Bm25 {
     * array keeps zero-hit docs on one placeholder row each. */
   def score(
       df: DataFrame, id: Column, text: Column, query: Seq[String],
-      model: Bm25Model, k1: Double = 1.2, b: Double = 0.75,
-      broadcastModel: Boolean = true): DataFrame =
-    scoreImpl(df, id, text, query, model, k1, b, broadcastModel, hofFilter = false)
+      model: Bm25Model, k1: Double = 1.2, b: Double = 0.75): DataFrame =
+    scoreImpl(df, id, text, query, model, k1, b, hofFilter = false)
 
   /** Test reference for [[score]]: the r16 INTERPRETED HOF token
     * filter (`filter(toks, t => t.isin(query: _*))` — an interpreted
@@ -129,16 +128,14 @@ object Bm25 {
   private[graft] def scoreHof(
       df: DataFrame, id: Column, text: Column, query: Seq[String],
       model: Bm25Model): DataFrame =
-    scoreImpl(df, id, text, query, model, 1.2, 0.75, broadcastModel = true, hofFilter = true)
+    scoreImpl(df, id, text, query, model, 1.2, 0.75, hofFilter = true)
 
   private def scoreImpl(
       df: DataFrame, id: Column, text: Column, query: Seq[String],
-      model: Bm25Model, k1: Double, b: Double,
-      broadcastModel: Boolean, hofFilter: Boolean): DataFrame = {
+      model: Bm25Model, k1: Double, b: Double, hofFilter: Boolean): DataFrame = {
     val qn = normQuery(query)
     require(qn.nonEmpty, "BM25 needs at least one non-blank query term")
-    val qdf = model.docFreq.where(col("token").isin(qn: _*))
-    val vocab = if (broadcastModel) broadcast(qdf) else qdf
+    val vocab = broadcast(model.docFreq.where(col("token").isin(qn: _*)))
     import org.apache.spark.sql.graftbridge.Bridge
     val kept =
       if (hofFilter) filter(col("_toks"), t => t.isin(qn: _*))
@@ -239,11 +236,10 @@ object Bm25 {
     * last). Returns `(id, dl, n_hits, bm25_micro, rank)`. */
   def topK(
       df: DataFrame, id: Column, text: Column, query: Seq[String],
-      model: Bm25Model, n: Int, k1: Double = 1.2, b: Double = 0.75,
-      broadcastModel: Boolean = true): DataFrame = {
+      model: Bm25Model, n: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(n > 0, s"n must be positive, got $n")
     import org.apache.spark.sql.expressions.Window
-    val cut = score(df, id, text, query, model, k1, b, broadcastModel)
+    val cut = score(df, id, text, query, model, k1, b)
       .orderBy(col("bm25_micro").desc, col("id").asc)
       .limit(n)
     // rank over the n surviving rows only (bounded, single tiny task)

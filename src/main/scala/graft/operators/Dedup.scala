@@ -881,9 +881,10 @@ object Dedup {
     *
     * Scale shape: the benchmark side collapses to its DISTINCT window
     * fingerprints — eval sets are tiny next to a 100 TB corpus, so that
-    * set broadcasts (hinted; drop to a shuffled hash join by passing
-    * `broadcastBench = false` for a pathologically large bench). The
-    * corpus side streams once: shingle → 64-bit fingerprint →
+    * set broadcasts (hinted; a pathologically large bench opts out with
+    * `spark.sql.optimizer.disableHints=true`, set on a
+    * `spark.newSession()` because it drops every hint in that session).
+    * The corpus side streams once: shingle → 64-bit fingerprint →
     * broadcast-probe → groupBy(doc) with map-side combine. The only
     * shuffle carries (doc_id, partial counts); window text never moves.
     * Same 64-bit collision floor as [[spanDupStats]] — a collision
@@ -891,17 +892,16 @@ object Dedup {
   def contaminationStats(
       corpus: DataFrame, corpusId: Column, corpusText: Column,
       bench: DataFrame, benchText: Column,
-      k: Int = 8, broadcastBench: Boolean = true): DataFrame = {
-    val bfp0 = bench
+      k: Int = 8): DataFrame = {
+    val bfp = bench
       .select(explode(TextFns.shingles(benchText, k)).as("_g"))
       .select(xxhash64(col("_g")).as("_fp"))
       .distinct()
       .withColumn("_hit", lit(1L))
-    val bfp = if (broadcastBench) broadcast(bfp0) else bfp0
     corpus
       .select(corpusId.as("doc_id"), explode(TextFns.shingles(corpusText, k)).as("_g"))
       .select(col("doc_id"), xxhash64(col("_g")).as("_fp"))
-      .join(bfp, Seq("_fp"), "left")
+      .join(broadcast(bfp), Seq("_fp"), "left")
       .groupBy("doc_id")
       .agg(
         count(lit(1)).as("n_windows"),
@@ -929,8 +929,8 @@ object Dedup {
   def decontaminatedKeep(
       corpus: DataFrame, corpusId: Column, corpusText: Column,
       bench: DataFrame, benchText: Column,
-      k: Int = 8, broadcastBench: Boolean = true): DataFrame = {
-    val flagged = contaminationStats(corpus, corpusId, corpusText, bench, benchText, k, broadcastBench)
+      k: Int = 8): DataFrame = {
+    val flagged = contaminationStats(corpus, corpusId, corpusText, bench, benchText, k)
       .where(col("n_contaminated") > 0L)
       .select(col("doc_id").as("_drop_id"))
     corpus.join(flagged, corpusId === col("_drop_id"), "left_anti")
@@ -1053,17 +1053,16 @@ object Dedup {
       corpus: DataFrame, corpusId: Column, corpusText: Column,
       bench: DataFrame, benchId: Column, benchText: Column,
       threshold: Double, shingleK: Int, numHashes: Int, bands: Int,
-      maxBucket: Int, broadcastBench: Boolean): (DataFrame, Collapsed, Collapsed) = {
+      maxBucket: Int): (DataFrame, Collapsed, Collapsed) = {
     val c = collapseByText(corpus, corpusId, corpusText)
     val b = collapseByText(bench, benchId, benchText)
     val cb = minhashBuckets(c.reps, corpusId, corpusText, shingleK, numHashes, bands)
-    val bb0 = guardBuckets(
+    val bb = guardBuckets(
       minhashBuckets(b.reps, benchId, benchText, shingleK, numHashes, bands),
       BandKeys, maxBucket).capped
       .toDF("_bid", "band", "bucket")
-    val bb = if (broadcastBench) broadcast(bb0) else bb0
     val cands = persistedCands(
-      cb.join(bb, BandKeys)
+      cb.join(broadcast(bb), BandKeys)
         .select(col("_id").as("id_a"), col("_bid").as("id_b"))
         .distinct())
     val repPairs = jaccardVerify(cands,
@@ -1101,16 +1100,16 @@ object Dedup {
     * exact-verified by shingle-set Jaccard ([[jaccardVerify]] —
     * integer set sizes, bit-identical ratio), so LSH recall is the only
     * approximation: 128 hashes / 64 bands ⇒ P(miss | J≥0.5) ≈ 1e-8.
-    * `broadcastBench = false` drops to a shuffled join for a bench too
-    * large to broadcast. */
+    * A bench too large to broadcast opts out with
+    * `spark.sql.optimizer.disableHints=true`, set on a
+    * `spark.newSession()` because it drops every hint in that session. */
   def crossNearPairs(
       corpus: DataFrame, corpusId: Column, corpusText: Column,
       bench: DataFrame, benchId: Column, benchText: Column,
       threshold: Double, shingleK: Int = 3, numHashes: Int = 128, bands: Int = 64,
-      maxBucket: Int = DefaultMaxBucket, broadcastBench: Boolean = true): DataFrame = {
+      maxBucket: Int = DefaultMaxBucket): DataFrame = {
     val (repPairs, c, b) = crossNearRepPairs(corpus, corpusId, corpusText,
-      bench, benchId, benchText, threshold, shingleK, numHashes, bands,
-      maxBucket, broadcastBench)
+      bench, benchId, benchText, threshold, shingleK, numHashes, bands, maxBucket)
     // expand rep pairs to member pairs on BOTH sides (no id
     // reordering — the sides are distinct corpora by contract)
     val ma = c.member.select(col("_rid").as("id_a"), col("_mid").as("_ma"))
@@ -1130,10 +1129,9 @@ object Dedup {
       corpus: DataFrame, corpusId: Column, corpusText: Column,
       bench: DataFrame, benchId: Column, benchText: Column,
       threshold: Double, shingleK: Int = 3, numHashes: Int = 128, bands: Int = 64,
-      maxBucket: Int = DefaultMaxBucket, broadcastBench: Boolean = true): DataFrame = {
+      maxBucket: Int = DefaultMaxBucket): DataFrame = {
     val (repPairs, c, _) = crossNearRepPairs(corpus, corpusId, corpusText,
-      bench, benchId, benchText, threshold, shingleK, numHashes, bands,
-      maxBucket, broadcastBench)
+      bench, benchId, benchText, threshold, shingleK, numHashes, bands, maxBucket)
     // only the corpus side needs expanding: a member is contaminated
     // iff its rep is (equal text ⇒ equal Jaccard against everything),
     // and WHICH bench doc matched is irrelevant to the keep decision

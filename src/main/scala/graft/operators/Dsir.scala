@@ -30,8 +30,10 @@ import org.apache.spark.sql.functions._
   * Scale shape (100 TB): each fit is ONE word-count aggregate whose
   * output is capped at `buckets` rows (the shuffle carries map-side
   * combined bucket partials, never grams); the log-ratio table is ≤ B
-  * rows and BROADCASTS (`broadcastModel=false` shuffle fallback); the
-  * exploded gram stream never shuffles — only the per-doc partial agg
+  * rows and BROADCASTS (a table too large to broadcast opts out with
+  * `spark.sql.optimizer.disableHints=true`, set on a
+  * `spark.newSession()` because it drops every hint in that session);
+  * the exploded gram stream never shuffles — only the per-doc partial agg
   * exchanges (~1 row/doc/task). The paper's Gumbel-noise resampling
   * step is deliberately replaced by DETERMINISTIC composition:
   * normalize weights into rates for [[Sampling.sampleImportance]], cut
@@ -150,17 +152,15 @@ object Dsir {
   def scoreWeights(
       df: DataFrame, id: Column, text: Column,
       lrTable: DataFrame, defaultLr: Long, buckets: Int,
-      broadcastModel: Boolean = true, md5Hash: Boolean = false): DataFrame = {
-    val side = if (broadcastModel) broadcast(lrTable) else lrTable
+      md5Hash: Boolean = false): DataFrame =
     stagedBuckets(df, Seq("id" -> id), text, buckets, md5Hash)
       .select(col("id"), explode_outer(col("_graft_bs")).as("b"))
-      .join(side, Seq("b"), "left")
+      .join(broadcast(lrTable), Seq("b"), "left")
       .groupBy("id")
       .agg(
         count(col("b")).as("n_grams"),
         coalesce(sum(when(col("b").isNotNull,
           coalesce(col("lr_micro"), lit(defaultLr)))), lit(0L)).as("logw_micro"))
-  }
 
   /** The composed flow: fit target + raw (raw = the corpus itself, the
     * paper's default), build the ratio table, score every corpus doc.
@@ -169,11 +169,10 @@ object Dsir {
   def weights(
       corpus: DataFrame, id: Column, text: Column,
       target: DataFrame, targetText: Column,
-      buckets: Int = 10000, broadcastModel: Boolean = true,
-      md5Hash: Boolean = false): DataFrame = {
+      buckets: Int = 10000, md5Hash: Boolean = false): DataFrame = {
     val (table, default) = logRatioTable(
       fitBuckets(target, targetText, buckets, md5Hash),
       fitBuckets(corpus, text, buckets, md5Hash), buckets)
-    scoreWeights(corpus, id, text, table, default, buckets, broadcastModel, md5Hash)
+    scoreWeights(corpus, id, text, table, default, buckets, md5Hash)
   }
 }

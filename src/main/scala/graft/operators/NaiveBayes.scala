@@ -37,9 +37,10 @@ import org.apache.spark.sql.functions._
   *    columns in ONE per-doc aggregation (map-side combine), so the
   *    only exchange carries ~1 row per doc. Argmax is a narrow
   *    `array_min` over (-score, label) structs — score desc, min
-  *    label on ties, fully deterministic. `broadcastModel=false`
-  *    falls back to a shuffle join for ≫10⁷-type vocabs (Zipfian
-  *    skew notes as in [[NgramLM]]).
+  *    label on ties, fully deterministic. A ≫10⁷-type vocab opts
+  *    out with `spark.sql.optimizer.disableHints=true`, set on a
+  *    `spark.newSession()` because it drops every hint in that session
+  *    (Zipfian skew notes as in [[NgramLM]]).
   */
 object NaiveBayes {
 
@@ -122,9 +123,7 @@ object NaiveBayes {
     * floor `1/(n_tokens_c+V)`). Zero-token docs are classified by
     * prior alone. One broadcast join + one per-doc aggregation — the
     * token stream never shuffles. */
-  def score(
-      df: DataFrame, id: Column, text: Column, model: NbModel,
-      broadcastModel: Boolean = true): DataFrame = {
+  def score(df: DataFrame, id: Column, text: Column, model: NbModel): DataFrame = {
     val labels = model.labels.sortBy(_.label)
     // hand-rolled pivot: tokenCounts is one row per (label, token), so a
     // conditional max per label in ONE groupBy(token) aggregation gives
@@ -143,7 +142,6 @@ object NaiveBayes {
         l.nTokens.toDouble + model.vocabSize.toDouble).as(s"_graft_q_$i")
     }
     val piv = model.tokenCounts.groupBy("token").agg(pivAggs.head, pivAggs.tail: _*)
-    val side = if (broadcastModel) broadcast(piv) else piv
     val floors = labels.map(l =>
       microRound(math.log(1.0 / (l.nTokens.toDouble + model.vocabSize.toDouble)) * 1000000.0))
     val sums = labels.indices.map { i =>
@@ -153,7 +151,7 @@ object NaiveBayes {
     }
     val perDoc = df
       .select(id.as("id"), explode_outer(NgramLM.tokens(text)).as("token"))
-      .join(side, Seq("token"), "left")
+      .join(broadcast(piv), Seq("token"), "left")
       .groupBy("id")
       .agg(count(col("token")).as("n_tokens"), sums: _*)
     // narrow argmax: min over (-total, label) = max score, min label

@@ -32,14 +32,15 @@ import graft.functions.TextFns
   *
   * Scale shape (100 TB): fit is a word-count — ONE shuffle with
   * map-side partial aggregation, output |vocab| rows. Scoring joins
-  * the exploded token stream against the count table: with
-  * `broadcastModel=true` (default) the vocab broadcasts and the token
-  * stream NEVER shuffles — the only exchange is the per-doc partial
-  * aggregation, which map-side-combines to ~1 row per (doc, task).
-  * A vocab too big to broadcast (≫10⁷ types) sets it false for a
-  * shuffle join; token frequency is Zipfian, so that path relies on
-  * AQE skew-join splitting (sort-merge) — the broadcast path has no
-  * skew by construction and is the one to prefer.
+  * the exploded token stream against the count table: the vocab
+  * broadcasts and the token stream NEVER shuffles — the only exchange
+  * is the per-doc partial aggregation, which map-side-combines to ~1
+  * row per (doc, task). A vocab too large to broadcast (≫10⁷ types)
+  * opts out with `spark.sql.optimizer.disableHints=true`, set on a
+  * `spark.newSession()` because it drops every hint in that session;
+  * token frequency is Zipfian, so that path relies on AQE skew-join
+  * splitting (sort-merge) — the broadcast path has no skew by
+  * construction and is the one to prefer.
   */
 object NgramLM {
 
@@ -115,7 +116,8 @@ object NgramLM {
   /** Persist a fitted unigram LM (count table as parquet + one-row
     * params): fit once on the reference split, score every run after.
     * Loaded counts stay a LAZY scan — a ≫10⁷-type vocab is exactly as
-    * usable as a fresh fit (pair with `broadcastModel=false`). */
+    * usable as a fresh fit (score it with hints disabled, see the
+    * object doc). */
   def saveUnigram(model: UnigramModel, path: String): Unit = {
     val spark = model.counts.sparkSession
     import spark.implicits._
@@ -165,16 +167,13 @@ object NgramLM {
     * 1-occurrence pair of two hapaxes maximizes raw PMI.
     *
     * Plan shape: the model's count tables join by token — the unigram
-    * side is vocab-sized and broadcasts (falls back to shuffle via
-    * `broadcastModel = false`); the k-row result is a TakeOrdered, no
-    * global sort. Fit once with [[fitBigram]] (one corpus scan),
-    * derive collocations and score perplexity from the same model. */
-  def pmiTop(
-      model: BigramModel, k: Int, minCount: Long = 5L,
-      broadcastModel: Boolean = true): DataFrame = {
+    * side is vocab-sized and broadcasts (opt-out as in the object
+    * doc); the k-row result is a TakeOrdered, no global sort. Fit once
+    * with [[fitBigram]] (one corpus scan), derive collocations and
+    * score perplexity from the same model. */
+  def pmiTop(model: BigramModel, k: Int, minCount: Long = 5L): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     require(minCount >= 1, s"minCount must be >= 1, got $minCount")
-    def side(m: DataFrame) = if (broadcastModel) broadcast(m) else m
     val nU = model.unigrams.agg(coalesce(sum("cnt"), lit(0L))).head().getLong(0)
     val nB = model.bigrams.agg(coalesce(sum("cnt"), lit(0L))).head().getLong(0)
     require(nB > 0, "pmiTop: the fitted model has no bigrams")
@@ -186,8 +185,8 @@ object NgramLM {
       .select(col("bigram"), col("cnt").as("n_pair"),
         substring_index(col("bigram"), " ", 1).as("w1"),
         substring_index(col("bigram"), " ", -1).as("w2"))
-      .join(side(model.unigrams.select(col("token").as("w1"), col("cnt").as("n_w1"))), "w1")
-      .join(side(model.unigrams.select(col("token").as("w2"), col("cnt").as("n_w2"))), "w2")
+      .join(broadcast(model.unigrams.select(col("token").as("w1"), col("cnt").as("n_w1"))), "w1")
+      .join(broadcast(model.unigrams.select(col("token").as("w2"), col("cnt").as("n_w2"))), "w2")
       .select(col("bigram"), col("n_pair"), col("n_w1"), col("n_w2"),
         round(log(pPair / (pW1 * pW2)) * 1000000.0, 0).cast("long").as("pmi_micro"))
       .orderBy(col("pmi_micro").desc, col("bigram").asc)
@@ -271,9 +270,7 @@ object NgramLM {
     * model-sized broadcast join (continuation fan-in) — the exploded
     * pair stream still never shuffles before the per-doc agg. */
   def scoreKnBigram(
-      df: DataFrame, id: Column, text: Column, model: KnBigramModel,
-      broadcastModel: Boolean = true): DataFrame = {
-    def side(m: DataFrame) = if (broadcastModel) broadcast(m) else m
+      df: DataFrame, id: Column, text: Column, model: KnBigramModel): DataFrame = {
     val d = lit(model.discount)
     val denTV = lit(model.bigramTypes.toDouble + model.vocabSize.toDouble)
     val exploded = df
@@ -286,9 +283,9 @@ object NgramLM {
       + (d * col("n_follow").cast("double")) * pc) / col("c_ctx").cast("double")
     val p = when(col("c_ctx").isNull, pc).otherwise(pKnown)
     exploded
-      .join(side(model.bigrams.withColumnRenamed("cnt", "_bcnt")), Seq("bigram"), "left")
-      .join(side(model.ctx.withColumnRenamed("token", "w1")), Seq("w1"), "left")
-      .join(side(model.cont.withColumnRenamed("token", "w2")), Seq("w2"), "left")
+      .join(broadcast(model.bigrams.withColumnRenamed("cnt", "_bcnt")), Seq("bigram"), "left")
+      .join(broadcast(model.ctx.withColumnRenamed("token", "w1")), Seq("w1"), "left")
+      .join(broadcast(model.cont.withColumnRenamed("token", "w2")), Seq("w2"), "left")
       .groupBy("id")
       .agg(
         count(col("bigram")).as("n_bigrams"),
@@ -307,12 +304,10 @@ object NgramLM {
     * (0, 0, NULL). Returns `(id, n_tokens, logprob_micro,
     * avg_logprob)`. */
   def scoreUnigram(
-      df: DataFrame, id: Column, text: Column, model: UnigramModel,
-      broadcastModel: Boolean = true): DataFrame = {
-    val vocab = if (broadcastModel) broadcast(model.counts) else model.counts
+      df: DataFrame, id: Column, text: Column, model: UnigramModel): DataFrame = {
     val den = lit(model.totalTokens.toDouble + model.vocabSize.toDouble)
     df.select(id.as("id"), explode_outer(tokens(text)).as("token"))
-      .join(vocab, Seq("token"), "left")
+      .join(broadcast(model.counts), Seq("token"), "left")
       .groupBy("id")
       .agg(
         count(col("token")).as("n_tokens"),
@@ -334,16 +329,14 @@ object NgramLM {
     * broadcast joins (pair + context) on the exploded pair stream —
     * the stream itself still never shuffles before the per-doc agg. */
   def scoreBigram(
-      df: DataFrame, id: Column, text: Column, model: BigramModel,
-      broadcastModel: Boolean = true): DataFrame = {
-    def side(m: DataFrame) = if (broadcastModel) broadcast(m) else m
+      df: DataFrame, id: Column, text: Column, model: BigramModel): DataFrame = {
     val exploded = df
       .select(id.as("id"), tokens(text).as("_toks"))
       .select(col("id"), explode_outer(bigrams(col("_toks"))).as("bigram"))
       .withColumn("w1", substring_index(col("bigram"), " ", 1))
     exploded
-      .join(side(model.bigrams.withColumnRenamed("cnt", "_bcnt")), Seq("bigram"), "left")
-      .join(side(model.unigrams.withColumnRenamed("token", "w1")
+      .join(broadcast(model.bigrams.withColumnRenamed("cnt", "_bcnt")), Seq("bigram"), "left")
+      .join(broadcast(model.unigrams.withColumnRenamed("token", "w1")
         .withColumnRenamed("cnt", "_ucnt")), Seq("w1"), "left")
       .groupBy("id")
       .agg(

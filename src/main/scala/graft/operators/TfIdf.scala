@@ -32,9 +32,10 @@ import org.apache.spark.sql.functions._
   * Scale shape (100 TB): fit = one distinct-per-doc word-count (the
   * in-doc distinct is the NARROW `array_distinct`, so the shuffle
   * carries each (doc, term) once, not each occurrence); N is a
-  * driver scalar (bounded-artifact contract). `broadcastModel=false`
-  * falls back to a shuffle join for ≫10⁷-type vocabs — Zipfian skew
-  * notes as in [[NgramLM]]. */
+  * driver scalar (bounded-artifact contract). A vocab too large to
+  * broadcast opts out with `spark.sql.optimizer.disableHints=true`, set
+  * on a `spark.newSession()` because it drops every hint in that
+  * session — Zipfian skew notes as in [[NgramLM]]. */
 object TfIdf {
 
   /** Fitted document-frequency model: `docFreq` = (token, df) with df
@@ -64,12 +65,9 @@ object TfIdf {
     * exact) and `avg_idf` = that sum / 1e6 / n_tokens (nats; NULL for
     * token-less docs, which score (0, 0, NULL)). High avg means rare
     * vocabulary, low means stopword-heavy — the typicality signal. */
-  def score(
-      df: DataFrame, id: Column, text: Column, model: DfModel,
-      broadcastModel: Boolean = true): DataFrame = {
-    val vocab = if (broadcastModel) broadcast(model.docFreq) else model.docFreq
+  def score(df: DataFrame, id: Column, text: Column, model: DfModel): DataFrame =
     df.select(id.as("id"), explode_outer(NgramLM.tokens(text)).as("token"))
-      .join(vocab, Seq("token"), "left")
+      .join(broadcast(model.docFreq), Seq("token"), "left")
       .groupBy("id")
       .agg(
         count(col("token")).as("n_tokens"),
@@ -81,7 +79,6 @@ object TfIdf {
       .withColumn("avg_idf",
         when(col("n_tokens") > 0,
           col("tfidf_micro").cast("double") / (lit(1000000.0) * col("n_tokens"))))
-  }
 
   /** Persist a fitted model: the df table as parquet plus a one-row
     * params file — fit once on the reference corpus, score many runs.
@@ -108,15 +105,13 @@ object TfIdf {
     * map-side, so no partition materializes more than k rows per doc
     * beyond the scan). */
   def topTerms(
-      df: DataFrame, id: Column, text: Column, model: DfModel, k: Int,
-      broadcastModel: Boolean = true): DataFrame = {
+      df: DataFrame, id: Column, text: Column, model: DfModel, k: Int): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
-    val vocab = if (broadcastModel) broadcast(model.docFreq) else model.docFreq
     val w = Window.partitionBy("id")
       .orderBy(col("weight_micro").desc, col("term").asc)
     df.select(id.as("id"), explode(NgramLM.tokens(text)).as("token"))
       .groupBy("id", "token").agg(count(lit(1)).as("tf"))
-      .join(vocab, Seq("token"), "left")
+      .join(broadcast(model.docFreq), Seq("token"), "left")
       .select(col("id"), col("token").as("term"), col("tf"),
         (col("tf") * microIdf(coalesce(col("df"), lit(0L)), model.nDocs))
           .as("weight_micro"))

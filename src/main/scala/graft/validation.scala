@@ -1,28 +1,35 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Global validation level — colnade ValidationLevel / set_validation
-  * (reference src/colnade/validation.py:30-105). Defaults OFF, like the
-  * reference; override via code or the COLNADE-equivalent env var
-  * GRAFT_VALIDATE=off|structural|full. */
+/** Validation level — colnade ValidationLevel / set_validation
+  * (reference src/colnade/validation.py:30-105), held per Spark session:
+  * the session conf `spark.graft.validate=off|structural|full`, read at
+  * the typed boundary, so two sessions (a stream next to a batch job)
+  * can validate at different levels. A session that sets none takes
+  * the env var GRAFT_VALIDATE, and OFF when that is unset, like the
+  * reference. */
 object GValidation {
   sealed trait Level
   case object Off extends Level
   case object Structural extends Level
   case object Full extends Level
 
-  @volatile var level: Level =
-    sys.env.get("GRAFT_VALIDATE").map(_.toLowerCase) match {
-      case Some("structural") => Structural
-      case Some("full")       => Full
-      case _                  => Off
-    }
+  val Conf = "spark.graft.validate"
 
-  def enabled: Boolean = level != Off
-  def full: Boolean = level == Full
+  /** `spark`'s level; an unrecognised value fails loudly rather than
+    * silently validating less than asked. */
+  def level(spark: SparkSession): Level =
+    spark.conf.get(Conf, sys.env.getOrElse("GRAFT_VALIDATE", "off"))
+      .toLowerCase(java.util.Locale.ROOT) match {
+      case "off"        => Off
+      case "structural" => Structural
+      case "full"       => Full
+      case other => throw new IllegalArgumentException(
+        s"$Conf must be off, structural or full, got '$other'")
+    }
 }
 
 /** Schema + constraint validation, redesigned for scale.

@@ -42,4 +42,21 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.baselineShared.subsetOf(SparkEntry.queries.keySet))
     assert(l.getBytes("UTF-8").length <= 2000, s"${l.getBytes("UTF-8").length} bytes")
   }
+
+  test("with every SparkEntry query failed the line stays inside the budget, n_failed exact") {
+    import scala.jdk.CollectionConverters._
+    val names = SparkEntry.queries.keys.toSeq
+    val l = Bench.line("/data/sf100", Nil, names)
+    val j = json.readTree(l)
+    assert(l.getBytes("UTF-8").length <= 2000, s"${l.getBytes("UTF-8").length} bytes")
+    assert(j.get("n_failed").asInt == names.size)
+    assert(j.get("failed").elements.asScala.map(_.asText).toSeq ==
+      names.sorted.take(Bench.MaxFailedListed))
+    // the widest mix: every BASELINE query timed, every other one failed
+    val timed = Bench.baselineShared.toSeq.map(_ -> 12345.6789)
+    val rest = names.filterNot(Bench.baselineShared)
+    val mixed = Bench.line("/data/sf100", timed, rest)
+    assert(mixed.getBytes("UTF-8").length <= 2000, s"${mixed.getBytes("UTF-8").length} bytes")
+    assert(json.readTree(mixed).get("n_failed").asInt == rest.size)
+  }
 }

@@ -84,8 +84,11 @@ class Bm25Spec extends SparkSpec {
       df.select("id", "dl", "n_hits", "bm25_micro")
         .as[(Long, Long, Long, Long)].collect().sortBy(_._1).toSeq
     val base = rows(Bm25.score(docs, col("doc_id"), col("text"), Seq("cat", "the"), m))
-    assert(rows(Bm25.score(docs, col("doc_id"), col("text"), Seq("cat", "the"), m,
-      broadcastModel = false)) == base)
+    val shuffled = collectShuffled(
+        Bm25.score(docs, col("doc_id"), col("text"), Seq("cat", "the"), m)
+          .select("id", "dl", "n_hits", "bm25_micro"))
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).sortBy(_._1)
+    assert(shuffled == base)
     assert(rows(Bm25.score(docs.repartition(7), col("doc_id"), col("text"),
       Seq("cat", "the"), m)) == base)
     val dir = java.nio.file.Files.createTempDirectory("bm25").toString

@@ -25,9 +25,8 @@ class BucketSpec extends SparkSpec {
     val lu = Tio.readTable(spark, "bk_users", Users)
     val or = Tio.readTable(spark, "bk_orders", Orders2)
 
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force the shuffle-join path
-    try {
+    // force the shuffle-join path
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val j = lu.df.join(or.df, Seq("id")).groupBy("id")
         .agg(org.apache.spark.sql.functions.sum("amount").as("total"))
       val rows = j.collect()
@@ -39,7 +38,7 @@ class BucketSpec extends SparkSpec {
       }
       assert(!plan.contains("Exchange"),
         s"bucketed join + agg must be exchange-free:\n$plan")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("readTable round-trips the typed schema") {

@@ -66,13 +66,11 @@ class ContaminationSpec extends SparkSpec {
     assert(kept == Set(2L, 3L, 4L), s"NULL-text doc must be kept as clean, got $kept")
   }
 
-  test("shuffled-join path (broadcastBench = false) agrees with broadcast") {
-    val a = Dedup.contaminationStats(
-        corpus, col("doc_id"), col("text"), bench, col("text"), k = 5, broadcastBench = true)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val b = Dedup.contaminationStats(
-        corpus, col("doc_id"), col("text"), bench, col("text"), k = 5, broadcastBench = false)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+  test("shuffled-join opt-out (hints disabled) agrees with broadcast") {
+    def stats = Dedup.contaminationStats(
+        corpus, col("doc_id"), col("text"), bench, col("text"), k = 5)
+    val a = stats.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val b = collectShuffled(stats).map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(a == b)
   }
 
@@ -190,11 +188,14 @@ class ContaminationSpec extends SparkSpec {
   }
 
   test("crossNearPairs: broadcast and shuffle bench paths agree; no cartesian") {
-    def run(b: Boolean) = Dedup.crossNearPairs(
+    def pairs = Dedup.crossNearPairs(
         nearCorpus, col("doc_id"), col("text"),
-        nearBench, col("doc_id"), col("text"), threshold = 0.5, broadcastBench = b)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(run(true) == run(false))
+        nearBench, col("doc_id"), col("text"), threshold = 0.5)
+    def triples(rows: Seq[org.apache.spark.sql.Row]) =
+      rows.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val broadcastPairs = triples(pairs.collect().toSeq)
+    assert(broadcastPairs.nonEmpty)
+    assert(triples(collectShuffled(pairs)) == broadcastPairs)
     val plan = Dedup.crossNearPairs(
         nearCorpus, col("doc_id"), col("text"),
         nearBench, col("doc_id"), col("text"), threshold = 0.5)

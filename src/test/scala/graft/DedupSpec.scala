@@ -676,6 +676,18 @@ class DedupSpec extends SparkSpec {
       s"foreign-thread reap must warn through the logger, got $warnings")
   }
 
+  test("a first write into a fresh index probes its params marker without a failed read") {
+    // Spark's parquet reader warns from FileStreamSink when asked for a
+    // missing path; the catalog must find out "no marker yet" on the
+    // filesystem instead of by provoking that failure.
+    val idx = java.nio.file.Files.createTempDirectory("graft-mh-fresh").toString + "/index"
+    val warnings = captureWarnings("org.apache.spark.sql.execution.streaming.sinks.FileStreamSink") {
+      Dedup.writeMinHashIndex(df, col("doc_id"), col("text"), idx)
+    }
+    assert(warnings.isEmpty, s"fresh index write must not warn, got $warnings")
+    assert(Dedup.readIndexParams(spark, idx).contains((3, 128, 64)))
+  }
+
   /** Messages logged at WARN or above to `loggerName` while `body` runs,
     * captured by a log4j appender (the session runs at ERROR). */
   private def captureWarnings(loggerName: String)(body: => Unit): Seq[String] = {

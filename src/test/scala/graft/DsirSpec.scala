@@ -139,9 +139,9 @@ class DsirSpec extends SparkSpec {
     val repart = Dsir.weights(docs(corpus: _*).repartition(7), col("doc_id"), col("text"),
         docs(target: _*).repartition(3), col("text"), buckets = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
-    val shuffled = Dsir.weights(docs(corpus: _*), col("doc_id"), col("text"),
-        docs(target: _*), col("text"), buckets = 64, broadcastModel = false)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
+    val shuffled = collectShuffled(Dsir.weights(docs(corpus: _*), col("doc_id"), col("text"),
+        docs(target: _*), col("text"), buckets = 64))
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
     assert(base == repart && base == shuffled)
   }
 }

@@ -96,10 +96,8 @@ class NaiveBayesSpec extends SparkSpec {
   test("broadcast and shuffle-join scoring agree") {
     val m = NaiveBayes.fit(tiny, col("lab"), col("t"))
     val probe = Seq((1L, "a b c"), (2L, "c c"), (3L, "")).toDF("id", "t")
-    val b = NaiveBayes.score(probe, col("id"), col("t"), m, broadcastModel = true)
-      .orderBy("id").collect().toSeq
-    val s = NaiveBayes.score(probe, col("id"), col("t"), m, broadcastModel = false)
-      .orderBy("id").collect().toSeq
+    val b = NaiveBayes.score(probe, col("id"), col("t"), m).orderBy("id").collect().toSeq
+    val s = collectShuffled(NaiveBayes.score(probe, col("id"), col("t"), m).orderBy("id"))
     assert(b == s)
   }
 

@@ -83,17 +83,14 @@ class NgramLMSpec extends SparkSpec {
   test("single-token docs have no bigrams; shuffle join equals broadcast join") {
     val df = Seq((1L, "a b c"), (2L, "solo")).toDF("id", "t")
     val m = NgramLM.fitBigram(df, col("t"))
-    val b = NgramLM.scoreBigram(df, col("id"), col("t"), m, broadcastModel = true)
-      .orderBy("id").collect().toSeq
-    val s = NgramLM.scoreBigram(df, col("id"), col("t"), m, broadcastModel = false)
-      .orderBy("id").collect().toSeq
+    val b = NgramLM.scoreBigram(df, col("id"), col("t"), m).orderBy("id").collect().toSeq
+    val s = collectShuffled(NgramLM.scoreBigram(df, col("id"), col("t"), m).orderBy("id"))
     assert(b == s)
     assert(b(1).getLong(1) == 0L && b(1).getLong(2) == 0L && b(1).isNullAt(3))
-    val u1 = NgramLM.scoreUnigram(df, col("id"), col("t"),
-      NgramLM.fitUnigram(df, col("t")), broadcastModel = false).orderBy("id").collect()
-    val u2 = NgramLM.scoreUnigram(df, col("id"), col("t"),
-      NgramLM.fitUnigram(df, col("t")), broadcastModel = true).orderBy("id").collect()
-    assert(u1.toSeq == u2.toSeq)
+    val um = NgramLM.fitUnigram(df, col("t"))
+    val u1 = collectShuffled(NgramLM.scoreUnigram(df, col("id"), col("t"), um).orderBy("id"))
+    val u2 = NgramLM.scoreUnigram(df, col("id"), col("t"), um).orderBy("id").collect()
+    assert(u1 == u2.toSeq)
   }
 
   test("pmiTop: hand-computed PMI, minCount floor, deterministic tie cut") {
@@ -112,7 +109,7 @@ class NgramLMSpec extends SparkSpec {
     assert(got("y x") == ((2L, 3L, 3L, pmi(2, 3, 3))))
     // broadcast and shuffle paths agree; k cuts deterministically
     val b = NgramLM.pmiTop(m, k = 1, minCount = 2).head()
-    val s = NgramLM.pmiTop(m, k = 1, minCount = 2, broadcastModel = false).head()
+    val s = collectShuffled(NgramLM.pmiTop(m, k = 1, minCount = 2)).head
     assert(b.getString(0) == "x y" && s.getString(0) == "x y")
   }
 
@@ -177,8 +174,8 @@ class NgramLMSpec extends SparkSpec {
       micro(pKn(2, 3, 2, 1)) + micro(pKn(1, 1, 1, 2)),
       Some((micro(pKn(2, 3, 2, 1)) + micro(pKn(1, 1, 1, 2))).toDouble / 2e6))))
     // shuffle join path identical to broadcast
-    val sh = NgramLM.scoreKnBigram(docs, col("id"), col("t"), m, broadcastModel = false)
-      .collect().map(_.toSeq).toSet
+    val sh = collectShuffled(NgramLM.scoreKnBigram(docs, col("id"), col("t"), m))
+      .map(_.toSeq).toSet
     assert(sh == NgramLM.scoreKnBigram(docs, col("id"), col("t"), m).collect().map(_.toSeq).toSet)
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole forked test JVM — mirrors the
@@ -15,6 +16,41 @@ object TestSession {
 
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
+
+  /** Run `body` with the session confs `pairs` set; each key's prior
+    * value (or its absence) is restored in `finally`. */
+  def withConf[T](pairs: (String, String)*)(body: => T): T = {
+    val prior = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** Build and collect `df` under the session opt-out from broadcast
+    * joins (every hint dropped, auto-broadcast off), asserting that its
+    * executed plan really joins by shuffle: a SortMergeJoin or
+    * ShuffledHashJoin and no BroadcastHashJoin. The caches this
+    * thread's operators registered earlier are released first, so no
+    * subtree planned with broadcasts is reused. */
+  def collectShuffled(df: => DataFrame): Seq[Row] = {
+    InternalCaches.drain()
+    withConf("spark.sql.optimizer.disableHints" -> "true",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val d = df
+      val rows = d.collect().toSeq
+      val plan = d.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan.toString
+        case p => p.toString
+      }
+      assert(!plan.contains("BroadcastHashJoin") &&
+        (plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin")),
+        s"the opt-out must plan a shuffled join:\n$plan")
+      rows
+    }
+  }
 }
 
 /** Shared test schemas + rows (the e2e "users pipeline" shape from

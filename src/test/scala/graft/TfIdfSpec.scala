@@ -73,11 +73,9 @@ class TfIdfSpec extends SparkSpec {
 
   test("broadcast and shuffle model joins agree; partition invariance") {
     val m = TfIdf.fit(docs, col("text"))
-    val a = TfIdf.score(docs, col("doc_id"), col("text"), m, broadcastModel = true)
-      .collect().map(_.toSeq).toSet
-    val b = TfIdf.score(docs.repartition(7), col("doc_id"), col("text"), m,
-        broadcastModel = false)
-      .collect().map(_.toSeq).toSet
+    val a = TfIdf.score(docs, col("doc_id"), col("text"), m).collect().map(_.toSeq).toSet
+    val b = collectShuffled(TfIdf.score(docs.repartition(7), col("doc_id"), col("text"), m))
+      .map(_.toSeq).toSet
     assert(a == b)
   }
 }

@@ -126,8 +126,8 @@ class UrlFnsSpec extends SparkSpec {
     val kept = UrlFns.filterBlockedDomains(docs, col("url"), blocked)
       .select("id").collect().map(_.getLong(0)).toSet
     assert(kept == Set(2L, 4L))
-    val keptShuffle = UrlFns.filterBlockedDomains(docs, col("url"), blocked, broadcastList = false)
-      .select("id").collect().map(_.getLong(0)).toSet
+    val keptShuffle = collectShuffled(UrlFns.filterBlockedDomains(docs, col("url"), blocked)
+      .select("id")).map(_.getLong(0)).toSet
     assert(keptShuffle == kept)
   }
 }

@@ -56,24 +56,25 @@ class ValidationSpec extends SparkSpec {
   }
 
   test("validation level gates the boundary checks") {
-    val old = GValidation.level
-    try {
-      GValidation.level = GValidation.Off
-      assert(!GValidation.enabled && !GValidation.full)
-      GValidation.level = GValidation.Structural
-      assert(GValidation.enabled && !GValidation.full)
-      GValidation.level = GValidation.Full
-      assert(GValidation.enabled && GValidation.full)
+    withConf(GValidation.Conf -> "off")(assert(GValidation.level(spark) == GValidation.Off))
+    withConf(GValidation.Conf -> "Structural") {
+      assert(GValidation.level(spark) == GValidation.Structural)
+    }
+    withConf(GValidation.Conf -> "bogus") {
+      assertThrows[IllegalArgumentException](GValidation.level(spark))
+    }
+    val bad = Seq((1L, "", Option(1L), 5.0)).toDF("id", "name", "age", "score")
+    val dir = java.nio.file.Files.createTempDirectory("graft-val-boundary").toString
+    bad.write.option("header", "true").csv(s"$dir/csv")
+    bad.write.json(s"$dir/json")
+    withConf(GValidation.Conf -> "full") {
+      assert(GValidation.level(spark) == GValidation.Full)
       // FULL makes fromRows reject constraint-violating rows at the boundary.
       assertThrows[GSchemaError] {
         Tio.fromRows(spark, Users, Seq(UserRow(1L, "", None, 5.0)))
       }
       // ...and every other typed read/constructor goes through the same
       // boundary: csv, json and wrapped frames are constraint-checked too.
-      val bad = Seq((1L, "", Option(1L), 5.0)).toDF("id", "name", "age", "score")
-      val dir = java.nio.file.Files.createTempDirectory("graft-val-boundary").toString
-      bad.write.option("header", "true").csv(s"$dir/csv")
-      bad.write.json(s"$dir/json")
       assertThrows[GSchemaError](Tio.readCsv(spark, s"$dir/csv", Users))
       assertThrows[GSchemaError](Tio.readJson(spark, s"$dir/json", Users))
       assertThrows[GSchemaError](Tio.fromDF(bad, Users))
@@ -81,8 +82,9 @@ class ValidationSpec extends SparkSpec {
         Tio.fromDict(spark, Users,
           Map("id" -> Seq(1L), "name" -> Seq(""), "age" -> Seq(1L), "score" -> Seq(5.0)))
       }
-      // OFF: the same boundary runs no Spark job at all
-      GValidation.level = GValidation.Off
+    }
+    // OFF: the same boundary runs no Spark job at all
+    withConf(GValidation.Conf -> "off") {
       val sc = spark.sparkContext
       sc.setJobGroup("graft-val-off", "validation off boundary")
       try {
@@ -91,18 +93,32 @@ class ValidationSpec extends SparkSpec {
         Tio.fromDF(bad, Users)
         assert(sc.statusTracker.getJobIdsForGroup("graft-val-off").isEmpty)
       } finally sc.clearJobGroup()
-    } finally GValidation.level = old
+    }
+  }
+
+  test("the level is per session: a FULL session rejects what an OFF session next to it admits") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-val-sessions").toString
+    Seq((1L, "", Option(1L), 5.0)).toDF("id", "name", "age", "score")
+      .write.parquet(s"$dir/bad")
+    val strict = spark.newSession()
+    strict.conf.set("spark.graft.validate", "full")
+    def rejected() = intercept[GSchemaError](Tio.readParquet(strict, s"$dir/bad", Users))
+      .valueViolations.exists(_.constraint == "min_length=1")
+    withConf("spark.graft.validate" -> "off") {
+      assert(rejected())
+      assert(Tio.readParquet(spark, s"$dir/bad", Users).df.count() == 1L)
+      // reading through the OFF session changed nothing for the FULL one
+      assert(rejected())
+    }
   }
 
   test("explicit validate() runs both layers regardless of level") {
-    val old = GValidation.level
-    try {
-      GValidation.level = GValidation.Off
+    withConf(GValidation.Conf -> "off") {
       val f = Tio.fromRows(spark, Users, users)
       f.validate() // clean: no throw
       val badF = new TFrame[Users.type](
         Seq((1L, "", Option(1L), 5.0)).toDF("id", "name", "age", "score"), Some(Users))
       assertThrows[GSchemaError](badF.validate())
-    } finally GValidation.level = old
+    }
   }
 }
