@@ -64,12 +64,13 @@ object Bench {
     def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
       fn(spark, sfDir).queryExecution.toRdd.count(): Unit
 
-    // Between-query hygiene: the composed pipelines localCheckpoint
-    // intermediates, and checkpoint blocks are pinned (spillable, never
-    // evictable) until explicitly released. Left in place they
-    // accumulate across the sweep and squeeze execution memory for
-    // every later query (measured as a monotone pass-over-pass drift,
-    // e.g. text_langid 0.89→1.78→2.01). Runs AFTER the clock stops.
+    // Between-query hygiene: the composed pipelines checkpoint and
+    // persist intermediates, registered under this session; checkpoint
+    // blocks are pinned (spillable, never evictable) until released.
+    // Left in place they accumulate across the sweep and squeeze
+    // execution memory for every later query (measured as a monotone
+    // pass-over-pass drift, e.g. text_langid 0.89→1.78→2.01). Runs
+    // AFTER the clock stops.
     def release(): Unit = GraftSession.releaseCachedBlocks(spark)
 
     val qs = SparkEntry.queries.toSeq.sortBy(_._1)

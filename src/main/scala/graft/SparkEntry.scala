@@ -77,7 +77,7 @@ object SparkEntry {
     * joined by `\n` (the chunk_pack CTE shape). Duplicate docs then
     * share every line; distinct docs share none (10-word alignment). */
   private def docsMultiline(docs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.{array_join, expr, greatest, sequence, size, slice, split, transform, trim, regexp_replace}
+    import org.apache.spark.sql.functions.{array_join, greatest, sequence, size, slice, split, transform, trim, regexp_replace}
     val ws = split(trim(regexp_replace(col("text"), "\\s+", " ")), " ")
     docs.select(col("doc_id"), ws.as("_ws"))
       .select(col("doc_id"),
@@ -1587,18 +1587,17 @@ object SparkEntry {
       val shardDir = tempShardDir("graft_webprep_", dir)
       val glob = graft.sources.Warc.writeSyntheticShards(
         docs.select(col("doc_id"), html.as("html")), shardDir)
-      val pages = graft.sources.Warc.read(s, glob)
+      // several stages re-reference the parsed pages: parse archives
+      // ONCE. localCheckpoint is the GATE idiom only — it pins the
+      // materialization to executor lifetime; the 100 TB production
+      // flow persists the extracted pages to durable storage
+      // (write.parquet + re-read) instead, so stage retries and
+      // executor loss don't re-parse the crawl
+      val pages = InternalCaches.checkpoint(graft.sources.Warc.read(s, glob)
         .where(col("valid") && col("warc_type") === "response")
         .select(
           regexp_extract(col("target_uri"), "/doc/(\\d+)$", 1).cast("long").as("doc_id"),
-          TextFns.htmlToText(col("payload_text")).as("text"))
-        // several stages re-reference the parsed pages: parse archives
-        // ONCE. localCheckpoint is the GATE idiom only — it pins the
-        // materialization to executor lifetime; the 100 TB production
-        // flow persists the extracted pages to durable storage
-        // (write.parquet + re-read) instead, so stage retries and
-        // executor loss don't re-parse the crawl
-        .localCheckpoint()
+          TextFns.htmlToText(col("payload_text")).as("text")))
       val bench = pages.where(col("doc_id") % 40 === 0)
       val corpus = pages.where(col("doc_id") % 40 =!= 0)
       val gated = TextFns.withLangId(corpus, col("text"), "_lang")
@@ -1959,19 +1958,17 @@ object SparkEntry {
     val docs = documents(s, dir).toNative
     val bench = docs.where(col("doc_id") % 10 === 0)
     val corpus = docs.where(col("doc_id") % 10 =!= 0)
-    val gated = TextFns.withLangId(corpus, col("text"), "_lang")
+    val gated = InternalCaches.checkpoint(TextFns.withLangId(corpus, col("text"), "_lang")
       .where(TextFns.wordCount(col("text")) >= 8 && col("_lang") === "en")
-      .select(col("doc_id"), col("text"))
-      .localCheckpoint()
+      .select(col("doc_id"), col("text")))
     val deduped = Dedup.exactKeep(gated, col("text"), col("doc_id"))
     val kept =
-      if (near) Dedup.minhashKeep(deduped.localCheckpoint(), col("doc_id"), col("text"), 0.5)
-        .localCheckpoint()
+      if (near) InternalCaches.checkpoint(Dedup.minhashKeep(
+        InternalCaches.checkpoint(deduped), col("doc_id"), col("text"), 0.5))
       else deduped
-    val weights = Dedup.decontaminatedKeep(
+    val weights = InternalCaches.checkpoint(Dedup.decontaminatedKeep(
         kept, col("doc_id"), col("text"), bench, col("text"), k = 5)
-      .select(col("doc_id"), TextFns.tokenCountWs(col("text")).cast("long").as("n_tokens"))
-      .localCheckpoint()
+      .select(col("doc_id"), TextFns.tokenCountWs(col("text")).cast("long").as("n_tokens")))
     Pack.packByBudget(weights, col("doc_id"), col("n_tokens"), budget = 2000)
       .select(col("id").as("doc_id"), col("weight").as("n_tokens"), col("shard_id"))
       .orderBy("doc_id")

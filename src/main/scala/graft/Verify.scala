@@ -44,8 +44,9 @@ object Verify {
             s"${e.getClass.getName}: ${e.getMessage}\n")
           Some(name)
         }
-      // Result is on disk — release the query's localCheckpoint blocks
-      // so the full sequential sweep doesn't stack pinned frames (see
+      // Result is on disk — release the persists and checkpoints the
+      // query's operators registered under this session, so the full
+      // sequential sweep doesn't stack pinned frames (see
       // GraftSession.releaseCachedBlocks).
       GraftSession.releaseCachedBlocks(spark)
       r

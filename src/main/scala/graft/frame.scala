@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Row}
 import org.apache.spark.sql.functions._
 
 /** Typed frame over a Spark DataFrame — colnade DataFrame[S]/LazyFrame[S]

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Encoders
 
 /** Audio content fingerprinting (SURVEY §2.5 L48b) — the AV leg of

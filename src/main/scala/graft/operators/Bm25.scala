@@ -51,10 +51,11 @@ object Bm25 {
     * scan: per doc, the distinct tokens (tag `d`) and one `s` row
     * carrying dl explode into a single tagged stream feeding one
     * map-side-combined aggregate; only the vocab-sized count table
-    * persists (drained at the flow's job boundary). */
+    * persists (released with the session's releaseCachedBlocks). Scans
+    * with → without: bm25_score 2 → 3, bm25_many 5 → 6. */
   def fit(df: DataFrame, text: Column): Bm25Model = {
     val toked = df.select(toksOrEmpty(text).as("_toks"))
-    val counts = graft.InternalCaches.register(toked
+    val counts = graft.InternalCaches.persist(toked
       .select(explode(concat(
         transform(array_distinct(col("_toks")),
           t => struct(lit("d").as("tag"), t.as("gram"), lit(1L).as("w"))),
@@ -62,8 +63,7 @@ object Bm25 {
           size(col("_toks")).cast("long").as("w")))
       )).as("_tg"))
       .groupBy(col("_tg.tag").as("tag"), col("_tg.gram").as("gram"))
-      .agg(count(lit(1)).as("cnt"), sum(col("_tg.w")).as("wsum"))
-      .persist())
+      .agg(count(lit(1)).as("cnt"), sum(col("_tg.w")).as("wsum")))
     val docFreq = counts.where(col("tag") === "d")
       .select(col("gram").as("token"), col("cnt").as("df"))
     // an empty corpus has no `s` row at all — headOption, so the

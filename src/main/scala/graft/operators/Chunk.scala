@@ -58,10 +58,9 @@ object Chunk {
     *
     * Returns `(doc_id, chunk_id, n_tokens, shard_id)`. */
   def packChunks(chunks: DataFrame, budget: Long, targetBlocks: Int = 1024): DataFrame = {
-    val synth = chunks.select(
+    val synth = graft.InternalCaches.checkpoint(chunks.select(
       (col("doc_id") * lit(1L << 32) + col("chunk_id")).as("_cid"),
-      col("n_tokens"))
-      .localCheckpoint(true)
+      col("n_tokens")))
     Pack.packByBudget(synth, col("_cid"), col("n_tokens"), budget, targetBlocks)
       .select(
         expr("id div 4294967296").as("doc_id"),

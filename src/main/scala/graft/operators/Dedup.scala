@@ -107,10 +107,11 @@ object Dedup {
       // scans/joins, and a frame released by session hygiene recomputes
       // instead of dying. The downstream bucketed self-join's two sides
       // share the same cached blocks too. Registered with
-      // InternalCaches: Dataset persist entries never auto-release, so
-      // job boundaries (dedupStream micro-batches, releaseCachedBlocks)
-      // drain them.
-      val mat = InternalCaches.register(bk.persist())
+      // InternalCaches under the session: Dataset persist entries never
+      // auto-release, so the session's releaseCachedBlocks frees them.
+      // Scans with → without: dedup_simhash 1 → 3, dedup_minhash 6 → 9,
+      // dedup_incremental 16 → 21.
+      val mat = InternalCaches.persist(bk)
       val sizes = bucketSizes(mat, keys)
       val small = sizes.where(col("_bsz") <= maxBucket).select(keys.map(col): _*)
       // re-select: the USING-join moves key columns first, and callers
@@ -201,9 +202,11 @@ object Dedup {
     * is the banding self-join: without the persist each reference
     * re-runs candidate generation. Same discipline as the hot-bucket
     * guard / collapse member map (InternalCaches-registered, lineage
-    * kept). */
+    * kept). Scans with → without: decontam_near 9 → 11,
+    * dedup_incremental 16 → 17 (dedup_minhash 6 → 6: exchange reuse
+    * already covers the plain verify shape). */
   private def persistedCands(cands: DataFrame): DataFrame =
-    InternalCaches.register(cands.persist())
+    InternalCaches.persist(cands)
 
   /** `docs` restricted to the ids on `side` ("id_a" / "id_b") of the
     * candidate stream — applied BELOW the shingle projection, so only
@@ -259,9 +262,10 @@ object Dedup {
     // FULL md5-fingerprint scan + groupBy over the corpus text (the r21
     // plan audit counted the fingerprint subtree 8× in dedup_jaccard).
     // Two longs per doc; same persist discipline (and InternalCaches
-    // registration) as the hot-bucket guard's bucket stream.
-    val member = InternalCaches.register(
-      m.join(repOf, "_mfp").select(col("_mid"), col("_rid")).persist())
+    // registration) as the hot-bucket guard's bucket stream. Scans with
+    // → without: dedup_minhash 6 → 10, dedup_incremental 16 → 19.
+    val member = InternalCaches.persist(
+      m.join(repOf, "_mfp").select(col("_mid"), col("_rid")))
     // reps via the cached member (its _rid column carries every rep id;
     // a semi-join ignores the duplication) — repOf itself is then
     // consumed exactly once, when member first materializes.
@@ -551,8 +555,10 @@ object Dedup {
     * rather than failing the audit itself. */
   def indexMissingBucketIds(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
     val sh = spark.read.parquet(s"$path/shingles").select("id").distinct()
-    val bk = try spark.read.parquet(s"$path/buckets").select("id").distinct()
-      catch { case _: org.apache.spark.sql.AnalysisException => sh.limit(0) }
+    val bk =
+      if (!graft.Catalog.dataExists(spark, path, Seq("buckets"))) sh.limit(0)
+      else try spark.read.parquet(s"$path/buckets").select("id").distinct()
+      catch { case _: org.apache.spark.sql.AnalysisException => sh.limit(0) } // exists, unreadable
     sh.join(bk, Seq("id"), "left_anti")
   }
 
@@ -594,13 +600,11 @@ object Dedup {
     // or not the copy was a representative.
     val c = collapseByText(newDocs, id, text)
     // ONE normalization+shingling pass over the batch text (the dominant
-    // per-batch cost): materialize the shingle sets via localCheckpoint
-    // and derive BOTH the bucket stream and the verify side from the
-    // materialized blocks. Unlike a persist() — which this function
-    // could never release (the result is lazy) — localCheckpoint blocks
-    // are freed by the ContextCleaner once the returned frame is
-    // garbage-collected: their lifetime is the result's, not the
-    // session's, so no lingering-cache tax on later jobs.
+    // per-batch cost): materialize the shingle sets via a registered
+    // checkpoint and derive BOTH the bucket stream and the verify side
+    // from the materialized blocks. The blocks live until the session's
+    // releaseCachedBlocks (or until the ContextCleaner collects the
+    // unreferenced result), so the caller consumes the result first.
     // Two consequences, accepted deliberately: (1) this call is eager —
     // it launches the shingling job now; (2) checkpoint blocks have no
     // lineage, so losing an executor before the result is consumed
@@ -608,7 +612,7 @@ object Dedup {
     // which is cheap because the batch is the small side and safe
     // because this function is replay-idempotent (the contract
     // [[GStream.dedupStream]]'s foreachBatch retries already rely on).
-    val newSets = shingleSets(c.reps, id, text, shingleK).localCheckpoint(eager = true)
+    val newSets = InternalCaches.checkpoint(shingleSets(c.reps, id, text, shingleK))
     val newIds = newDocs.select(id.as("_nid"))
     val newBk = newSets.select(col("_jid").as("_id"),
         posexplode(TextFns.minhashBands(col("_set"), numHashes, bands)))
@@ -746,12 +750,12 @@ object Dedup {
     // flag aggregation AND the removal join's probe side, and the probe
     // reference would otherwise re-run the whole tokenize+shingle+hash
     // scan (the hot-bucket guard's discipline — three longs per window,
-    // InternalCaches-registered, lineage kept).
-    val occ = InternalCaches.register(base
+    // InternalCaches-registered, lineage kept). Scans with → without:
+    // span_removal 2 → 3.
+    val occ = InternalCaches.persist(base
       .select(col("doc_id"),
         posexplode(TextFns.shingles(col("_text"), k)).as(Seq("_pos", "_gram")))
-      .select(col("doc_id"), col("_pos"), xxhash64(col("_gram")).as("_fp"))
-      .persist())
+      .select(col("doc_id"), col("_pos"), xxhash64(col("_gram")).as("_fp")))
     val flagged = occ
       .groupBy("_fp", "doc_id").agg(count(lit(1)).as("_n"))
       .groupBy("_fp").agg(count(lit(1)).as("_nd"), min(col("doc_id")).as("_rep"))
@@ -837,14 +841,14 @@ object Dedup {
       minDf: Int = 2, keepRep: Boolean = true): DataFrame = {
     require(minDf >= 2, s"minDf counts distinct docs sharing a line; need >= 2, got $minDf")
     val base = df.select(id.as("doc_id"), text.as("_text"))
-    // persisted for the same two-consumer reason as [[removeDupSpans]]
-    val occ = InternalCaches.register(base
+    // persisted for the same two-consumer reason as [[removeDupSpans]];
+    // scans with → without: line_removal 2 → 3
+    val occ = InternalCaches.persist(base
       .select(col("doc_id"), posexplode(split(col("_text"), "\n")).as(Seq("_pos", "_line")))
       .select(col("doc_id"), col("_pos"),
         xxhash64(TextFns.normText(col("_line"))).as("_fp"),
         (TextFns.normText(col("_line")) =!= "").as("_nb"))
-      .where(col("_nb"))
-      .persist())
+      .where(col("_nb")))
     val flagged = occ
       .groupBy("_fp", "doc_id").agg(count(lit(1)).as("_n"))
       .groupBy("_fp").agg(count(lit(1)).as("_nd"), min(col("doc_id")).as("_rep"))
@@ -1010,12 +1014,12 @@ object Dedup {
       k: Int = 8, fpp: Double = 0.01, expectedItems: Option[Long] = None): DataFrame = {
     require(fpp > 0 && fpp < 1, s"fpp must be in (0,1), got $fpp")
     // distinct bench fps are read three times (count, sketch build,
-    // exact verify) — registered persist, same rationale as guardBuckets
-    val bfp = InternalCaches.register(
+    // exact verify) — registered persist, same rationale as guardBuckets;
+    // scans with → without: dedup_bloom_keep 3 → 5
+    val bfp = InternalCaches.persist(
       bench.select(explode(TextFns.shingles(benchText, k)).as("_g"))
         .select(xxhash64(col("_g")).as("_fp"))
-        .distinct()
-        .persist())
+        .distinct())
     val n = expectedItems.getOrElse(math.max(bfp.count(), 1L))
     val bloom = bfp.stat.bloomFilter("_fp", n, fpp)
     val bytes = {
@@ -1187,7 +1191,7 @@ object Dedup {
         df.write.parquet(p)
         // explicit schema: a zero-row snapshot has no footer to infer from
         (spark.read.schema(df.schema).parquet(p), Some(p))
-      case None => (df.localCheckpoint(eager = true), None)
+      case None => (InternalCaches.checkpoint(df), None)
     }
     def drop(path: Option[String]): Unit = path.foreach { d =>
       val p = new org.apache.hadoop.fs.Path(d)
@@ -1289,7 +1293,7 @@ object Dedup {
         val p = s"$base/step-$step"; step += 1
         df.write.parquet(p)
         (spark.read.schema(df.schema).parquet(p), Some(p))
-      case None => (df.localCheckpoint(eager = true), None)
+      case None => (InternalCaches.checkpoint(df), None)
     }
     def drop(path: Option[String]): Unit = path.foreach { d =>
       val p = new org.apache.hadoop.fs.Path(d)

@@ -121,9 +121,10 @@ object Dsir {
       target: DataFrame, raw: DataFrame, buckets: Int): (DataFrame, Long) = {
     // the ≤B-row count models are each read twice more below (the
     // union merge + the scoring broadcast) — persist so the corpus
-    // fit-scan behind them runs ONCE, not per consumer
-    val t = graft.InternalCaches.register(target.persist())
-    val r = graft.InternalCaches.register(raw.persist())
+    // fit-scan behind them runs ONCE, not per consumer. Scans with →
+    // without, per persist: dsir_weights 3 → 4
+    val t = graft.InternalCaches.persist(target)
+    val r = graft.InternalCaches.persist(raw)
     val np = t.agg(coalesce(sum("cnt"), lit(0L))).head().getLong(0)
     val nq = r.agg(coalesce(sum("cnt"), lit(0L))).head().getLong(0)
     val denP = lit(np.toDouble + buckets)

@@ -355,7 +355,7 @@ object Jpeg {
             }
             val reader = new BitReader(c, pos + len)
             decodeScanProgressive(reader, scan, comps, pSs, pSe, ah, al,
-              restartInterval, dcTabs, acTabs, coefs, blocksW, blocksH,
+              restartInterval, dcTabs, acTabs, coefs, blocksW,
               mcusW, mcusH, w, h, hMax, vMax)
             pos = reader.pos
           }
@@ -530,7 +530,7 @@ object Jpeg {
       r: BitReader, scan: Array[Component], comps: Array[Component],
       ss: Int, se: Int, ah: Int, al: Int, ri: Int,
       dcTabs: Array[HuffTable], acTabs: Array[HuffTable],
-      coefs: Array[Array[Int]], blocksW: Array[Int], blocksH: Array[Int],
+      coefs: Array[Array[Int]], blocksW: Array[Int],
       mcusW: Int, mcusH: Int, w: Int, h: Int, hMax: Int, vMax: Int): Unit = {
 
     var eobrun = 0

@@ -76,14 +76,14 @@ object NaiveBayes {
     * wrap every token in a struct to save a near-free scan. All
     * driver-side state is the bounded |labels|-row stats + 3 scalars;
     * the count table itself stays distributed (registered persist,
-    * read by the stats/vocab aggregates and the scoring pivot). */
+    * read by the stats/vocab aggregates and the scoring pivot). Scans
+    * with → without: nb_classify 3 → 4. */
   def fit(df: DataFrame, label: Column, text: Column): NbModel = {
-    val counts = graft.InternalCaches.register(df
+    val counts = graft.InternalCaches.persist(df
       .where(label.isNotNull)
       .select(label.cast("string").as("label"), explode(NgramLM.tokens(text)).as("token"))
       .groupBy("label", "token")
-      .agg(count(lit(1)).as("cnt"))
-      .persist())
+      .agg(count(lit(1)).as("cnt")))
     val docCounts = df.where(label.isNotNull)
       .groupBy(label.cast("string").as("label")).agg(count(lit(1)).as("n_docs"))
       .collect() // bounded artifact: one row per class

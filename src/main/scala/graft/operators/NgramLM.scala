@@ -89,7 +89,7 @@ object NgramLM {
     * tokens and consecutive pairs explode into a single tagged stream
     * (`u`/`b`) feeding ONE word-count aggregate (map-side partial).
     * Only the model-sized count table persists (registered with
-    * [[graft.InternalCaches]], drained at the flow's job boundary);
+    * [[graft.InternalCaches]], released with the session's caches);
     * the corpus itself is never cached and never scanned twice —
     * at fit-on-100 TB the scan IS the cost, so halving it matters. */
   def fitBigram(df: DataFrame, text: Column): BigramModel = {
@@ -100,17 +100,17 @@ object NgramLM {
   }
 
   /** The shared tagged u/b count table (cached, model-sized) both
-    * bigram fits read — one corpus scan, one aggregate. */
+    * bigram fits read — one corpus scan, one aggregate. Scans with →
+    * without: lm_bigram 2 → 4, lm_kn 2 → 5, text_pmi 1 → 5. */
   private def taggedCounts(df: DataFrame, text: Column): DataFrame = {
     val toked = df.select(tokens(text).as("_toks"))
-    graft.InternalCaches.register(toked
+    graft.InternalCaches.persist(toked
       .select(explode(concat(
         transform(col("_toks"), t => struct(lit("u").as("tag"), t.as("gram"))),
         transform(bigrams(col("_toks")), g => struct(lit("b").as("tag"), g.as("gram")))
       )).as("_tg"))
       .groupBy(col("_tg.tag").as("tag"), col("_tg.gram").as("gram"))
-      .agg(count(lit(1)).as("cnt"))
-      .persist())
+      .agg(count(lit(1)).as("cnt")))
   }
 
   /** Persist a fitted unigram LM (count table as parquet + one-row

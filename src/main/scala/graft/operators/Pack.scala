@@ -197,11 +197,11 @@ object Pack {
     *
     * EAGER: this call runs Spark jobs at construction time (the
     * snapshot + the totals pass) and the returned frame is backed by
-    * the lineage-truncated snapshot. In the default mode do NOT call
-    * `GraftSession.releaseCachedBlocks` (or otherwise drop executor
-    * storage) before consuming the result — the frame cannot recompute
-    * once its localCheckpoint blocks are gone. Consume first, release
-    * after.
+    * the lineage-truncated snapshot, registered under `df`'s session.
+    * In the default mode do NOT call `GraftSession.releaseCachedBlocks`
+    * on that session before consuming the result — the frame cannot
+    * recompute once its checkpoint blocks are gone. Consume first,
+    * release after. Another session's release leaves it alone.
     *
     * `checkpointDir`: by default the sorted projection is pinned with
     * `localCheckpoint`, whose blocks live in EXECUTOR-LOCAL storage —
@@ -237,10 +237,9 @@ object Pack {
       weight.cast("long").as("weight"), score.cast("double").as("score"))
     checkpointDir match {
       case None =>
-        val sorted = proj
+        val sorted = graft.InternalCaches.checkpoint(proj
           .repartitionByRange(col("score").desc, col("id").asc)
-          .sortWithinPartitions(col("score").desc, col("id").asc)
-          .localCheckpoint(true)
+          .sortWithinPartitions(col("score").desc, col("id").asc))
         val ds = sorted.as[(Long, Option[Long], Option[Double])]
         val totals = ds.rdd
           .mapPartitionsWithIndex { (pid, it) =>
@@ -381,7 +380,7 @@ object Pack {
 
     checkpointDir match {
       case None =>
-        val sorted = proj.localCheckpoint(true)
+        val sorted = graft.InternalCaches.checkpoint(proj)
         val ds = sorted.as[(Long, Option[String], Option[Long], Option[Double])]
         val totals = ds.rdd
           .mapPartitionsWithIndex { (pid, it) =>

@@ -406,15 +406,14 @@ object Sampling {
     // encodes (partitionId << 33 | position), assigned in the
     // in-partition sort order and FROZEN by the checkpoint, so
     // position-within-partition is (mid − min mid of the group's run).
-    val sorted = filtered
+    val sorted = graft.InternalCaches.checkpoint(filtered
       .select(group.cast("string").as("_graft_g"),
         hashDraw(key, seed).as("_graft_d"), key.as("_graft_k"))
       .repartitionByRange(col("_graft_g"), col("_graft_d"), col("_graft_k"))
       .sortWithinPartitions("_graft_g", "_graft_d", "_graft_k")
       .select(col("_graft_g"), col("_graft_k"),
         spark_partition_id().as("_graft_p"),
-        monotonically_increasing_id().as("_graft_mid"))
-      .localCheckpoint(true)
+        monotonically_increasing_id().as("_graft_mid")))
     // Phase 2: bounded counts → exclusive per-group prefix offsets.
     // addend(p, g) = (rows of g in earlier partitions) + 1 − first mid
     // of g's run in p, so rank = mid + addend in one narrow add.

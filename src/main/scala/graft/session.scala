@@ -1,77 +1,61 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 
-/** Registry for operator-INTERNAL persisted frames (currently the
-  * hot-bucket guard's narrow bucket stream). Dataset-level `persist()`
-  * registers a CacheManager entry that is NEVER auto-released — unlike
-  * `localCheckpoint` RDDs, which the ContextCleaner collects once
-  * unreferenced — so a long-lived session that builds many dedup plans
-  * (a streaming micro-batch loop, a 53-query benchmark sweep) would
-  * accumulate entries and blocks without bound. Operators register what
-  * they persist; job boundaries drain: [[GStream.dedupStream]] after
-  * each micro-batch, [[GraftSession.releaseCachedBlocks]] for
-  * batch/bench flows. Draining only unpersists — the frames keep their
-  * lineage (persist, not checkpoint), so a late consumer recomputes
-  * instead of failing. References are STRONG deliberately: the
-  * CacheManager holds the entry (plan + columnar blocks) regardless of
-  * whether any Dataset object survives GC, so a weak registry would
-  * lose the only handle that can remove the entry; the wrapper objects
-  * held between drains are tiny next to the blocks they unlock. */
+/** Per-session registry of what graft ITSELF materializes: the
+  * operator-internal persists (hot-bucket guard, candidate and collapse
+  * maps, span/line occurrence streams, Bloom fingerprints, model count
+  * tables) and the eager `localCheckpoint`s of the composed pipelines.
+  * A Dataset `persist()` leaves a CacheManager entry that is never
+  * auto-released, and checkpoint blocks cannot be evicted (only
+  * spilled), so a long-lived session that builds many such plans would
+  * accumulate both without bound. Every entry is keyed by the session
+  * that built the frame; [[release]] frees exactly that session's
+  * entries. Other sessions of the same SparkContext, and every cache or
+  * checkpoint the caller made itself, are left alone.
+  *
+  * Persist handles are STRONG deliberately: the CacheManager holds the
+  * entry (plan + columnar blocks) regardless of whether any Dataset
+  * object survives GC, so a weak handle would lose the only way to
+  * remove the entry. Checkpoint RDDs are held WEAKLY: the ContextCleaner
+  * already frees an unreferenced checkpoint, and a strong handle would
+  * pin every earlier round of an iterative loop until the release. */
 private[graft] object InternalCaches {
-  private final case class Entry(threadId: Long, threadName: String, df: DataFrame)
-  private val log = org.slf4j.LoggerFactory.getLogger("graft.InternalCaches")
+  private final case class Entry(session: SparkSession, free: () => Unit)
   private val reg = new java.util.concurrent.ConcurrentLinkedQueue[Entry]()
 
-  /** Register a frame the operator just persisted; returns it. Entries
-    * are tagged with the registering thread — the "flow" scope: a plan
-    * is built and its caches registered on the thread that constructs
-    * it (the main thread for batch/bench sweeps, the micro-batch
-    * execution thread for a stream), and the SAME flow drains at its
-    * own job boundary. */
-  def register(df: DataFrame): DataFrame = {
-    reg.add(Entry(Thread.currentThread().getId, Thread.currentThread().getName, df))
-    df
+  /** Persist `df` and register it under its session; returns it. The
+    * frame keeps its lineage, so a consumer that runs after a release
+    * recomputes instead of failing. Each call site notes its measured
+    * "scans with → without": the leaf scans, summed over every job a
+    * SparkEntry query launches on sf0.01, with the persist and without
+    * it (exchange reuse counted). */
+  def persist(df: DataFrame): DataFrame = {
+    val p = df.persist()
+    reg.add(Entry(p.sparkSession, () => p.unpersist(blocking = false)))
+    p
   }
 
-  private def unpersist(e: Entry): Unit =
-    try e.df.unpersist(blocking = false)
-    catch { case _: Throwable => () }
+  /** Eager `localCheckpoint` of `df`, its checkpoint RDD registered under
+    * the frame's session; returns the checkpointed frame. The frame has
+    * no lineage: it cannot be re-executed after its session's release. */
+  def checkpoint(df: DataFrame): DataFrame = {
+    val cp = df.localCheckpoint(eager = true)
+    val rdd = new java.lang.ref.WeakReference(cp.queryExecution.logical.asInstanceOf[LogicalRDD].rdd)
+    reg.add(Entry(cp.sparkSession, () => Option(rdd.get).foreach(_.unpersist(blocking = true))))
+    cp
+  }
 
-  /** Unpersist (and forget) the frames registered by THIS flow (= this
-    * thread). Per-job-boundary hygiene: with two concurrent jobs in one
-    * JVM (a streaming micro-batch loop next to a batch query), a global
-    * drain here would unpersist the OTHER job's still-in-use bucket
-    * cache mid-query — correctness survives (lineage is kept) but the
-    * double-evaluation the persist exists to prevent silently returns.
-    * Thread scoping removes that hazard for every current caller
-    * (register and drain happen on the same thread in all flows). */
-  def drain(): Unit = {
-    val self = Thread.currentThread().getId
+  /** Unpersist and forget every entry registered under `spark`. */
+  def release(spark: SparkSession): Unit = {
     val it = reg.iterator()
     while (it.hasNext) {
       val e = it.next()
-      if (e.threadId == self) { it.remove(); unpersist(e) }
-    }
-  }
-
-  /** Unpersist (and forget) EVERY registered frame, any flow —
-    * whole-session cleanup for [[GraftSession.releaseCachedBlocks]],
-    * whose contract already requires all prior results consumed. Warns
-    * when it reaps another thread's entries: that is either a flow that
-    * forgot its own boundary drain (a leak this backstop exists for) or
-    * a concurrent job whose cache is being pulled mid-query. */
-  def drainAll(): Unit = {
-    val self = Thread.currentThread().getId
-    var df = reg.poll()
-    while (df != null) {
-      if (df.threadId != self)
-        log.warn("drainAll: releasing cache registered by " +
-          s"thread '${df.threadName}' (#${df.threadId}) from " +
-          s"'${Thread.currentThread().getName}' — if that flow is still running, " +
-          "its persisted subtree will silently recompute")
-      unpersist(df)
-      df = reg.poll()
+      if (e.session eq spark) {
+        it.remove()
+        try e.free() catch { case _: Throwable => () }
+      }
     }
   }
 }
@@ -98,36 +82,28 @@ object GraftSession {
     configure(SparkSession.builder().master(s"local[$cpus]").appName(appName), cpus)
       .getOrCreate()
 
-  /** Drop every block the session's persisted / `localCheckpoint`ed
-    * frames hold in the block manager.
+  /** Release what graft's own operators materialized in `spark`: the
+    * registered persists and `localCheckpoint`s of [[InternalCaches]].
     *
     * The composed pipelines (corpus prep, incremental MinHash, token
-    * chunking, cluster propagation) deliberately `localCheckpoint`
-    * intermediate frames — that is the correct per-job shape (each
-    * boundary kills a measured recompute). But checkpoint blocks are a
-    * lineage truncation point: Spark can spill them, never evict them,
-    * so in a long-lived session that runs MANY such jobs the blocks
-    * accumulate and squeeze execution memory for every later job
-    * (measured: a 54-query benchmark sweep degrades ~10% pass-over-pass
-    * from exactly this). Call this between jobs once a job's result has
-    * been fully consumed.
+    * chunking, cluster propagation) deliberately checkpoint
+    * intermediate frames — each boundary kills a measured recompute.
+    * Checkpoint blocks can be spilled, never evicted, so in a
+    * long-lived session that runs MANY such jobs they accumulate and
+    * squeeze execution memory for every later job. Call this between
+    * jobs once a job's result has been fully consumed.
     *
-    * Contract: after release, frames whose lineage was truncated by the
-    * dropped blocks CANNOT be re-executed (there is nothing left to
+    * Scope: only entries registered under `spark` are freed. Other
+    * sessions of the same SparkContext keep theirs, and frames the
+    * caller `cache()`d or checkpointed itself are the caller's to
+    * release (the ContextCleaner frees an unreferenced checkpoint).
+    *
+    * Contract: after release, a frame backed by a released graft
+    * checkpoint CANNOT be re-executed (there is nothing left to
     * recompute from) — only call when prior results are consumed or
-    * persisted externally. Blocking so the memory is actually free when
-    * the next job starts. */
-  def releaseCachedBlocks(spark: SparkSession): Unit = {
-    // Dataset-level operator caches first: unpersisting through the
-    // Dataset removes the CacheManager ENTRY, not just the blocks —
-    // entries otherwise accumulate per built plan and are never GC'd.
-    // drainAll (not the flow-scoped drain): this is whole-session
-    // cleanup, and its contract above already demands prior results be
-    // consumed; foreign-flow entries are reaped with a warning.
-    InternalCaches.drainAll()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
-  }
+    * persisted externally. Checkpoint RDDs unpersist blocking, so the
+    * memory is free when the next job starts. */
+  def releaseCachedBlocks(spark: SparkSession): Unit = InternalCaches.release(spark)
 
   /** Apply graft's required confs to any builder (cluster deploys too).
     * Also registers the native kernels as SQL functions

@@ -138,11 +138,12 @@ object GStream {
               mode = "append")
         } finally {
           kept.unpersist(blocking = false)
-          // Operator-internal caches (the hot-bucket guard's persisted
-          // bucket stream) registered during this batch's plan: without
-          // a per-batch drain a long-running stream accumulates one
-          // never-released CacheManager entry per micro-batch.
-          InternalCaches.drain()
+          // Release what the batch's operators registered (guard, collapse
+          // and candidate persists, the shingle-set checkpoint): without a
+          // per-batch release a long-running stream accumulates them per
+          // micro-batch. Each micro-batch runs on the stream's own clone
+          // of the session, so this never touches the caller's caches.
+          GraftSession.releaseCachedBlocks(batch.sparkSession)
         }
       }
       .start()

@@ -407,6 +407,19 @@ class DedupSpec extends SparkSpec {
     }
     assert(err.getMessage.contains("no params"))
     assert(!Dedup.indexDataIsEmpty(spark, idx)) // real state: NOT auto-repairable
+
+    // The very first write crashed before its bucket commit: the audit
+    // finds the absent buckets/ on the filesystem, not by a failed read
+    // that makes Spark's parquet reader warn from FileStreamSink.
+    val fresh = java.nio.file.Files.createTempDirectory("graft-mh-first").toString + "/idx"
+    batch.select(col("doc_id").as("id"),
+        array_distinct(graft.functions.TextFns.shingles(col("text"), 3)).as("shingles"))
+      .write.parquet(s"$fresh/shingles")
+    val warnings = captureWarnings("org.apache.spark.sql.execution.streaming.sinks.FileStreamSink") {
+      assert(Dedup.indexMissingBucketIds(spark, fresh)
+        .collect().map(_.getAs[Long]("id")).toSet == Set(50L, 51L))
+    }
+    assert(warnings.isEmpty, s"an absent buckets/ must not warn, got $warnings")
   }
 
   test("index audits survive the worst crash shapes: absent buckets/, unreadable wreckage") {
@@ -625,55 +638,46 @@ class DedupSpec extends SparkSpec {
   }
 
   test("guard-internal caches drain at job boundaries (no CacheManager accumulation)") {
-    import spark.implicits._
     // The guard persist()s its bucket stream; a Dataset cache entry is
-    // never auto-released, so the registry + drain is what keeps a
+    // never auto-released, so the registry + release is what keeps a
     // micro-batch loop / query sweep from accumulating one entry per
-    // built plan. Consume a guard-bearing query, then drain: the
+    // built plan. Consume a guard-bearing query, then release: the
     // session's CacheManager must be empty again, and (lineage kept —
     // persist, not checkpoint) the same operator re-runs fine after.
     def emptyCache = spark.sharedState.cacheManager.isEmpty
     spark.sqlContext.clearCache() // isolate from earlier tests' leftovers
-    InternalCaches.drain()
+    GraftSession.releaseCachedBlocks(spark)
     assert(emptyCache)
     val pairs = Dedup.simhashPairs(df, col("doc_id"), col("text"), maxBucket = 50).collect()
     assert(!emptyCache, "guard should have registered a persisted bucket stream")
-    InternalCaches.drain()
-    assert(emptyCache, "drain must remove the Dataset cache ENTRY, not just blocks")
+    GraftSession.releaseCachedBlocks(spark)
+    assert(emptyCache, "release must remove the Dataset cache ENTRY, not just blocks")
     val again = Dedup.simhashPairs(df, col("doc_id"), col("text"), maxBucket = 50).collect()
     assert(again.map(r => (r.getLong(0), r.getLong(1))).toSet ==
       pairs.map(r => (r.getLong(0), r.getLong(1))).toSet)
-    InternalCaches.drain()
+    GraftSession.releaseCachedBlocks(spark)
   }
 
   test("drain is flow-scoped: one flow's boundary drain leaves another flow's cache alone") {
-    import spark.implicits._
-    // Two concurrent jobs in one JVM (a streaming micro-batch loop next
-    // to a batch sweep): the per-job-boundary drain() must release only
-    // caches the DRAINING thread registered — a global drain here would
-    // unpersist the other flow's bucket cache mid-query and silently
-    // reinstate the double-evaluation the persist prevents. drainAll()
-    // (the releaseCachedBlocks path) still reaps everything, and says
-    // so through logging.
+    // A flow is a session: two sessions of one SparkContext (a streaming
+    // micro-batch loop next to a batch sweep) share its CacheManager and
+    // block manager. A boundary release must free only the caches
+    // registered under the releasing session — freeing another session's
+    // bucket cache mid-query would silently reinstate the double
+    // evaluation the persist prevents.
     def emptyCache = spark.sharedState.cacheManager.isEmpty
     spark.sqlContext.clearCache()
-    InternalCaches.drainAll()
+    GraftSession.releaseCachedBlocks(spark)
     assert(emptyCache)
-    // "other flow": register a guard-bearing query from a second thread
-    val other = new Thread(() => {
-      Dedup.simhashPairs(df, col("doc_id"), col("text"), maxBucket = 50).collect()
-      ()
-    }, "graft-spec-other-flow")
-    other.start(); other.join()
-    assert(!emptyCache, "other flow should have registered a persisted bucket stream")
-    InternalCaches.drain() // THIS thread's boundary: registered nothing
-    assert(!emptyCache, "flow-scoped drain must not touch another thread's cache")
-    val warnings = captureWarnings("graft.InternalCaches") {
-      InternalCaches.drainAll() // whole-session cleanup reaps foreign entries
-    }
+    val other = spark.newSession()
+    import other.implicits._
+    val otherDocs = Tio.fromRows(other, Docs, docs).toNative
+    Dedup.simhashPairs(otherDocs, col("doc_id"), col("text"), maxBucket = 50).collect()
+    assert(!emptyCache, "the other session should have registered a persisted bucket stream")
+    GraftSession.releaseCachedBlocks(spark) // the base session registered nothing
+    assert(!emptyCache, "the base session's release must not touch another session's cache")
+    GraftSession.releaseCachedBlocks(other)
     assert(emptyCache)
-    assert(warnings.exists(w => w.contains("drainAll") && w.contains("graft-spec-other-flow")),
-      s"foreign-thread reap must warn through the logger, got $warnings")
   }
 
   test("a first write into a fresh index probes its params marker without a failed read") {

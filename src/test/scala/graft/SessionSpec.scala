@@ -1,0 +1,53 @@
+package graft
+
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.storage.StorageLevel
+
+import graft.operators.{NaiveBayes, Pack}
+
+/** `GraftSession.releaseCachedBlocks` frees what graft registered under
+  * the releasing session, and nothing of another session or the caller. */
+class SessionSpec extends SparkSpec {
+
+  test("a session's release leaves another session's checkpoints and user caches intact") {
+    val a = spark
+    val b = spark.newSession()
+    val sc = a.sparkContext
+    def persistentIds = sc.getPersistentRDDs.keySet
+
+    // A: a frame backed by a graft checkpoint, and a user cache()
+    val before = persistentIds
+    val src = a.range(0, 2000).select(col("id"),
+      (col("id") % 7 + 1).as("w"), (col("id") * 37 % 1000).cast("double").as("score"))
+    val picked = Pack.selectByBudget(src, col("id"), col("w"), col("score"), budget = 500)
+    val checkpointIds = persistentIds -- before
+    assert(checkpointIds.nonEmpty, "selectByBudget should hold a checkpoint RDD")
+    val cached = a.range(0, 1000).select((col("id") * 3).as("x")).cache()
+    assert(cached.count() == 1000L)
+    val cachedRdd = cached.queryExecution.withCachedData.collectFirst {
+      case r: InMemoryRelation => r.cacheBuilder.cachedColumnBuffers
+    }.get
+
+    // B: an operator that registers a persist, then B's release
+    val bDocs = b.createDataFrame(Seq(("spam", "buy cheap pills now"), ("ham", "see you at lunch")))
+      .toDF("label", "text")
+    val bCounts = NaiveBayes.fit(bDocs, col("label"), col("text")).tokenCounts
+    assert(bCounts.storageLevel != StorageLevel.NONE)
+    GraftSession.releaseCachedBlocks(b)
+
+    val kept = picked.collect()
+    assert(kept.map(_.getAs[Long]("weight")).sum <= 500L && kept.nonEmpty)
+    val rel = cached.queryExecution.withCachedData.collectFirst { case r: InMemoryRelation => r }.get
+    assert(rel.cacheBuilder.isCachedColumnBuffersLoaded)
+    assert(sc.getRDDStorageInfo.exists(i => i.id == cachedRdd.id && i.numCachedPartitions > 0),
+      "A's user cache must keep its blocks")
+    assert(bCounts.storageLevel == StorageLevel.NONE, "B's entry must be gone")
+
+    // A's own release frees A's checkpoint, and still not the user cache
+    GraftSession.releaseCachedBlocks(a)
+    assert((persistentIds intersect checkpointIds).isEmpty)
+    assert(persistentIds.contains(cachedRdd.id))
+    cached.unpersist(blocking = true)
+  }
+}

@@ -33,10 +33,10 @@ trait SparkSpec extends AnyFunSuite {
     * joins (every hint dropped, auto-broadcast off), asserting that its
     * executed plan really joins by shuffle: a SortMergeJoin or
     * ShuffledHashJoin and no BroadcastHashJoin. The caches this
-    * thread's operators registered earlier are released first, so no
+    * session's operators registered earlier are released first, so no
     * subtree planned with broadcasts is reused. */
   def collectShuffled(df: => DataFrame): Seq[Row] = {
-    InternalCaches.drain()
+    GraftSession.releaseCachedBlocks(spark)
     withConf("spark.sql.optimizer.disableHints" -> "true",
         "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val d = df

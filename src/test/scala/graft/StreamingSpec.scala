@@ -348,6 +348,55 @@ class StreamingSpec extends SparkSpec {
     assert(graft.operators.Dedup.readIndexParams(spark, s"$tmp/idx").contains((3, 128, 64)))
   }
 
+  test("ST3: dedupStream releases its micro-batch caches and never the caller's") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.storage.StorageLevel
+    val cm = spark.sharedState.cacheManager
+    spark.sqlContext.clearCache()
+    GraftSession.releaseCachedBlocks(spark)
+    // a persist the CALLER's session registered, alive across the stream
+    val mine = InternalCaches.persist(spark.range(0, 100).select((col("id") * 2).as("x")))
+    assert(mine.count() == 100L)
+
+    val tmp = java.nio.file.Files.createTempDirectory("graft-sdedup-rel").toString
+    val input = MemoryStream(Encoders.product[Doc], spark)
+    // each micro-batch runs on the stream's own clone of the session
+    val batchSessions = new java.util.concurrent.ConcurrentLinkedQueue[AnyRef]()
+    val probe = input.toDF().writeStream
+      .foreachBatch { (b: DataFrame, _: Long) => batchSessions.add(b.sparkSession); () }
+      .start()
+    val q = GStream.dedupStream(input.toDF(), col("doc_id"), col("text"),
+      s"$tmp/idx", s"$tmp/out", threshold = 0.5, checkpointDir = s"$tmp/ckpt")
+    try {
+      input.addData(Seq(
+        Doc(1L, "the quick brown fox jumps over the lazy dog"),
+        Doc(2L, "The quick  brown fox jumps over the lazy dog"), // in-batch dup of 1
+        Doc(3L, "completely different content about spark executors tonight")))
+      q.processAllAvailable()
+      input.addData(Seq(
+        Doc(10L, "the quick brown fox jumps over the lazy dog"), // dup of INDEXED 1
+        Doc(11L, "yet another entirely new document with fresh words")))
+      q.processAllAvailable()
+      input.addData(Seq(
+        Doc(20L, "completely different content about spark executors tonight"))) // dup of 3
+      q.processAllAvailable()
+      probe.processAllAvailable()
+      assert(q.exception.isEmpty)
+    } finally { q.stop(); probe.stop() }
+
+    assert(!batchSessions.isEmpty && batchSessions.toArray.forall(_ ne spark))
+    val ids = spark.read.parquet(s"$tmp/out")
+      .collect().map(_.getAs[Long]("doc_id")).toSet
+    assert(ids == Set(1L, 3L, 11L))
+    // the caller's entry is intact and is the only one left: the stream
+    // released what its batches registered and nothing else
+    assert(mine.storageLevel != StorageLevel.NONE)
+    assert(mine.collect().map(_.getLong(0)).toSet == (0L until 200L by 2).toSet)
+    GraftSession.releaseCachedBlocks(spark)
+    assert(cm.isEmpty)
+  }
+
   test("ST3: dedupStream resumes after restart — the index carries dedup state across queries") {
     import org.apache.spark.sql.functions.col
     val tmp = java.nio.file.Files.createTempDirectory("graft-sdedup-rs").toString
