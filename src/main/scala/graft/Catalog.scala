@@ -41,7 +41,7 @@ object Catalog {
     * file fails loudly instead of silently swapping fields. */
   def readParams[P](spark: SparkSession, path: String)(parse: Row => P): Option[P] =
     if (!dataExists(spark, path, Seq("params"))) None
-    else try Some(parse(spark.read.parquet(s"$path/params").head()))
+    else try Some(parse(Parquet.read(spark, s"$path/params").head()))
     catch { case _: org.apache.spark.sql.AnalysisException => None }
 
   /** Whether any of the catalog's data dirs exist under `path` — data

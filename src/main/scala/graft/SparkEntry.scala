@@ -1285,7 +1285,7 @@ object SparkEntry {
         TextFns.tokenCountWs(col("text")), budget = 2000)
       val out = tempShardDir("graft_packwrite_", dir)
       Pack.writeShards(packed, out, shardCol = "shard_id", orderCol = "id")
-      s.read.parquet(out)
+      Parquet.read(s, out)
         .select(col("shard_id").cast("long").as("shard_id"), col("position"),
           col("id").as("doc_id"), col("weight").as("n_tokens"))
         .orderBy("shard_id", "position")

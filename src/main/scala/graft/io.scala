@@ -7,13 +7,16 @@ import org.apache.spark.sql.functions.col
   * (reference colnade-polars/src/colnade_polars/io.py:25-105).
   *
   * Spark is lazy, so read ≡ scan (the reference's eager/lazy read split
-  * collapses). Every typed read projects exactly the schema's columns so
-  * the parquet scan's ReadSchema is pruned even if the file carries more.
+  * collapses): a typed parquet read pins its schema from one footer read
+  * on the driver ([[Parquet.read]]), so building the frame launches no
+  * hidden schema-inference job, and `collect()` is the first action.
+  * Every typed read projects exactly the schema's columns so the parquet
+  * scan's ReadSchema is pruned even if the file carries more.
   */
 object Tio {
 
   def readParquet[S <: GSchema](spark: SparkSession, path: String, schema: S): TFrame[S] =
-    typed(spark.read.parquet(path), schema)
+    typed(Parquet.read(spark, path), schema)
 
   /** The typed boundary every read and constructor goes through:
     * structural check (if the session's [[GValidation.level]] is on) →

@@ -170,7 +170,7 @@ object Ann {
 
   /** Load a quantizer saved by [[saveIvf]], in cid order. */
   def loadIvf(spark: org.apache.spark.sql.SparkSession, path: String): Array[Array[Double]] =
-    spark.read.parquet(path).orderBy("cid")
+    graft.Parquet.read(spark, path).orderBy("cid")
       .collect().map(_.getSeq[Double](1).toArray)
 
   /** Nearest-centroid assignment `(id, cid)` for a trained quantizer —
@@ -305,7 +305,7 @@ object Ann {
   /** Load a quantizer saved by [[savePq]]. An empty save loads back as
     * an empty (search-returns-empty) quantizer with a 1×1 shape. */
   def loadPq(spark: org.apache.spark.sql.SparkSession, path: String): PqCodebooks = {
-    val rows = spark.read.parquet(path).orderBy("sub", "cid")
+    val rows = graft.Parquet.read(spark, path).orderBy("sub", "cid")
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2)))
     if (rows.isEmpty) PqCodebooks(1, 1, 1, Nil)
     else PqCodebooks(rows.map(_._1).max + 1, rows.head._3.length,
@@ -548,7 +548,7 @@ object Ann {
       return probes.select(col("probe_id"), lit(0L).as("neighbor_id"),
         lit(0.0).as("sim"), lit(0).as("rank")).where(lit(false))
     }
-    val encoded = spark.read.parquet(s"$path/codes")
+    val encoded = graft.Parquet.read(spark, s"$path/codes")
       .select(col("id").as("neighbor_id"), col("codes").as("_codes"))
     exactRerank(pqScoreEncoded(cb, encoded, probes, rerank), raw, id, vec, probes, k)
   }

@@ -258,8 +258,8 @@ object Bm25 {
 
   /** Load a model saved by [[save]] (params read BY NAME). */
   def load(spark: org.apache.spark.sql.SparkSession, path: String): Bm25Model = {
-    val p = spark.read.parquet(s"$path/params").select("n_docs", "avgdl_micro").head()
-    Bm25Model(spark.read.parquet(s"$path/df"), p.getLong(0), p.getLong(1))
+    val p = graft.Parquet.read(spark, s"$path/params").select("n_docs", "avgdl_micro").head()
+    Bm25Model(graft.Parquet.read(spark, s"$path/df"), p.getLong(0), p.getLong(1))
   }
 }
 

@@ -291,6 +291,6 @@ object Bpe {
 
   /** Load merges saved as [[toFrame]] parquet (by rank order). */
   def load(spark: org.apache.spark.sql.SparkSession, path: String): Seq[(String, String)] =
-    spark.read.parquet(path).select("rank", "left", "right")
+    graft.Parquet.read(spark, path).select("rank", "left", "right")
       .collect().sortBy(_.getInt(0)).map(r => (r.getString(1), r.getString(2))).toSeq
 }

@@ -173,12 +173,11 @@ object Dedup {
     * intersection/union sizes, so the double ratio is bit-identical
     * across engines.
     *
-    * CALLER CONTRACT (the candidate-prune discipline): pass `cands`
-    * through [[persistedCands]] and derive each sets side from docs
-    * pruned by [[candSideDocs]] (or an equivalent id-level semi-join)
-    * — the verify is an inner equi-join on id, so rows whose id never
-    * appears among the candidates contribute nothing, yet an unpruned
-    * side tokenizes + shingles its ENTIRE input (the r21 plan audit:
+    * CALLER CONTRACT (the candidate-prune discipline): derive each
+    * sets side from docs pruned by [[candSideDocs]] (or an equivalent
+    * id-level semi-join) — the verify is an inner equi-join on id, so
+    * rows whose id never appears among the candidates contribute
+    * nothing, yet an unpruned side tokenizes + shingles its ENTIRE input (the r21 plan audit:
     * `word_shingles` evaluated over the full rep set on BOTH verify
     * sides). Pruning at the sets level does NOT work: the optimizer
     * keeps the semi-join above the shingle projection (measured
@@ -197,14 +196,16 @@ object Dedup {
       .select("id_a", "id_b", "jaccard")
 
   /** Persist + register the narrow candidate stream `(id_a, id_b)` —
-    * two longs per pair. Consumed three times by the verify shape (two
-    * [[candSideDocs]] prune sides + the probe itself), and its lineage
-    * is the banding self-join: without the persist each reference
-    * re-runs candidate generation. Same discipline as the hot-bucket
-    * guard / collapse member map (InternalCaches-registered, lineage
-    * kept). Scans with → without: decontam_near 9 → 11,
-    * dedup_incremental 16 → 17 (dedup_minhash 6 → 6: exchange reuse
-    * already covers the plain verify shape). */
+    * two longs per pair — where the verify shape consumes it three times
+    * (two prune sides + the probe itself) and exchange reuse cannot
+    * stand in for it: the cross-corpus and incremental shapes, whose
+    * candidate lineage is not one reusable exchange. Same discipline as
+    * the hot-bucket guard / collapse member map (InternalCaches-
+    * registered, lineage kept). Scans with → without: decontam_near
+    * 9 → 11, dedup_incremental 16 → 17. The plain self-join verify
+    * ([[guardedJaccardPairs]]) does not persist: exchange reuse already
+    * runs its candidate generation once (dedup_minhash 6 → 6,
+    * dedup_jaccard 5 → 5). */
   private def persistedCands(cands: DataFrame): DataFrame =
     InternalCaches.persist(cands)
 
@@ -360,8 +361,7 @@ object Dedup {
       df: DataFrame, id: Column, text: Column, threshold: Double,
       shingleK: Int, numHashes: Int, bands: Int, maxBucket: Int): (DataFrame, Guarded) = {
     val c = collapseByText(df, id, text)
-    val (repCands, g) = repCandidates(c, id, text, shingleK, numHashes, bands, maxBucket)
-    val cands = persistedCands(repCands)
+    val (cands, g) = repCandidates(c, id, text, shingleK, numHashes, bands, maxBucket)
     // Prune df, not c.reps: every candidate id IS a rep id (the
     // bucket stream was built from reps), so df ⋉ cand-ids ≡
     // (df ⋉ member-rids) ⋉ cand-ids — identical rows, and the verify
@@ -522,26 +522,22 @@ object Dedup {
     graft.Catalog.dataExists(spark, path, Seq("buckets", "shingles"))
 
   /** Whether the index data directories at `path` are VERIFIABLY empty:
-    * each of `buckets/` and `shingles/` is absent, or reads as zero
-    * committed rows. True means the index holds no accumulated dedup
-    * state — e.g. an empty-index bootstrap that crashed before its
-    * params write (a zero-row parquet write commits readable footers) —
-    * so re-creating it loses nothing. A directory that EXISTS but has no
-    * readable parquet (only `_temporary/` task files from a crashed
-    * write) is NOT verifiably empty: the crashed write may have been
-    * seeding real data, so this returns false and the caller refuses.
-    * Callers use this to distinguish a repairable orphan from a real
-    * half-written index (see [[GStream.dedupStream]]'s bootstrap). */
-  def indexDataIsEmpty(spark: org.apache.spark.sql.SparkSession, path: String): Boolean = {
-    val conf = spark.sparkContext.hadoopConfiguration
+    * each of `buckets/` and `shingles/` is absent, or holds committed
+    * parquet whose footers record zero rows. True means the index holds
+    * no accumulated dedup state — e.g. an empty-index bootstrap that
+    * crashed before its params write (a zero-row parquet write commits
+    * readable footers) — so re-creating it loses nothing. A directory
+    * that EXISTS but has no data file (only `_temporary/` task files
+    * from a crashed write) is NOT verifiably empty: the crashed write
+    * may have been seeding real data, so this returns false and the
+    * caller refuses. Answered from the file listing and footers on the
+    * driver, so it runs no Spark job. Callers use this to distinguish a
+    * repairable orphan from a real half-written index (see
+    * [[GStream.dedupStream]]'s bootstrap). */
+  def indexDataIsEmpty(spark: org.apache.spark.sql.SparkSession, path: String): Boolean =
     Seq("buckets", "shingles").forall { d =>
-      val p = new org.apache.hadoop.fs.Path(s"$path/$d")
-      !p.getFileSystem(conf).exists(p) || {
-        try spark.read.parquet(p.toString).isEmpty
-        catch { case _: org.apache.spark.sql.AnalysisException => false } // exists, unreadable: wreckage of unknown size
-      }
+      !graft.Catalog.dataExists(spark, path, Seq(d)) || graft.Parquet.holdsNoRows(spark, s"$path/$d")
     }
-  }
 
   /** Append-consistency audit: ids present in `shingles/` but absent
     * from `buckets/` — the signature of an append that crashed between
@@ -554,10 +550,10 @@ object Dedup {
     * before any bucket commit — reports EVERY shingled id as missing
     * rather than failing the audit itself. */
   def indexMissingBucketIds(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
-    val sh = spark.read.parquet(s"$path/shingles").select("id").distinct()
+    val sh = graft.Parquet.read(spark, s"$path/shingles").select("id").distinct()
     val bk =
       if (!graft.Catalog.dataExists(spark, path, Seq("buckets"))) sh.limit(0)
-      else try spark.read.parquet(s"$path/buckets").select("id").distinct()
+      else try graft.Parquet.read(spark, s"$path/buckets").select("id").distinct()
       catch { case _: org.apache.spark.sql.AnalysisException => sh.limit(0) } // exists, unreadable
     sh.join(bk, Seq("id"), "left_anti")
   }
@@ -617,7 +613,7 @@ object Dedup {
     val newBk = newSets.select(col("_jid").as("_id"),
         posexplode(TextFns.minhashBands(col("_set"), numHashes, bands)))
       .toDF("_id", "band", "bucket")
-    val oldBk = spark.read.parquet(s"$indexPath/buckets")
+    val oldBk = graft.Parquet.read(spark, s"$indexPath/buckets")
       .join(newIds, col("id") === col("_nid"), "left_anti") // replay safety: drop stale self-copies
       .join(newBk.select("band", "bucket").distinct(), BandKeys, "left_semi")
       .select(col("id").as("_id"), col("band"), col("bucket"))
@@ -646,7 +642,7 @@ object Dedup {
     // hint on the id sides for the same reason as [[candSideDocs]]:
     // without it the stats-less prune plans as a SortMergeJoin that
     // shuffles the stored set arrays by id.
-    val aSets = spark.read.parquet(s"$indexPath/shingles")
+    val aSets = graft.Parquet.read(spark, s"$indexPath/shingles")
       .join(newIds, col("id") === col("_nid"), "left_anti") // mirror the bucket-side exclusion
       .select(col("id").as("_jid"), col("shingles").as("_set"))
       .union(newSets)

@@ -317,7 +317,7 @@ object LogReg {
 
   /** Load a model saved by [[save]] (columns read by name). */
   def load(spark: org.apache.spark.sql.SparkSession, path: String): LrModel = {
-    val m = spark.read.parquet(path).select("i", "w")
+    val m = graft.Parquet.read(spark, path).select("i", "w")
       .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
     LrModel(Array.tabulate(m.size)(m(_)))
   }

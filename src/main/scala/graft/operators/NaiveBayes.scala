@@ -180,12 +180,12 @@ object NaiveBayes {
   /** Load a model saved by [[save]]. Columns read BY NAME so a
     * column-order change in the persisted files fails loudly. */
   def load(spark: SparkSession, path: String): NbModel = {
-    val labels = spark.read.parquet(s"$path/labels")
+    val labels = graft.Parquet.read(spark, s"$path/labels")
       .select("label", "n_docs", "n_tokens", "prior_micro")
       .orderBy("label").collect()
       .map(r => NbLabel(r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .toSeq
-    val p = spark.read.parquet(s"$path/params").select("v", "n_docs_total").head()
-    NbModel(spark.read.parquet(s"$path/counts"), labels, p.getLong(0), p.getLong(1))
+    val p = graft.Parquet.read(spark, s"$path/params").select("v", "n_docs_total").head()
+    NbModel(graft.Parquet.read(spark, s"$path/counts"), labels, p.getLong(0), p.getLong(1))
   }
 }

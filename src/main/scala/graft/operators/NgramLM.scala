@@ -129,8 +129,8 @@ object NgramLM {
     * (not ordinal) so a column-order change in the persisted file
     * fails loudly instead of silently swapping N and V. */
   def loadUnigram(spark: org.apache.spark.sql.SparkSession, path: String): UnigramModel = {
-    val p = spark.read.parquet(s"$path/params").select("n", "v").head()
-    UnigramModel(spark.read.parquet(s"$path/counts"), p.getLong(0), p.getLong(1))
+    val p = graft.Parquet.read(spark, s"$path/params").select("n", "v").head()
+    UnigramModel(graft.Parquet.read(spark, s"$path/counts"), p.getLong(0), p.getLong(1))
   }
 
   /** Persist a fitted bigram LM — see [[saveUnigram]]. */
@@ -146,9 +146,9 @@ object NgramLM {
     * [[loadUnigram]]). */
   def loadBigram(spark: org.apache.spark.sql.SparkSession, path: String): BigramModel =
     BigramModel(
-      spark.read.parquet(s"$path/bigrams"),
-      spark.read.parquet(s"$path/unigrams"),
-      spark.read.parquet(s"$path/params").select("v").head().getLong(0))
+      graft.Parquet.read(spark, s"$path/bigrams"),
+      graft.Parquet.read(spark, s"$path/unigrams"),
+      graft.Parquet.read(spark, s"$path/params").select("v").head().getLong(0))
 
   /** Top-`k` collocations by pointwise mutual information (Church &
     * Hanks 1990 — the classic collocation statistic; tokenizer/vocab

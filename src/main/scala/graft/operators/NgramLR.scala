@@ -279,7 +279,7 @@ object NgramLR {
 
   /** Load a model saved by [[save]]. */
   def load(spark: org.apache.spark.sql.SparkSession, path: String): NgramLrModel = {
-    val m = spark.read.parquet(path).select("i", "w")
+    val m = graft.Parquet.read(spark, path).select("i", "w")
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val b = m.size - 2 - LenBins
     NgramLrModel(b, m(b.toLong), m(b.toLong + 1),

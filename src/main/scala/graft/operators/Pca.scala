@@ -161,7 +161,7 @@ object Pca {
 
   /** Load a basis saved by [[save]] (columns read by name). */
   def load(spark: org.apache.spark.sql.SparkSession, path: String): PcaModel = {
-    val rows = spark.read.parquet(path).select("cidx", "comp")
+    val rows = graft.Parquet.read(spark, path).select("cidx", "comp")
       .collect().map(r => r.getInt(0) -> r.getSeq[Double](1).toArray).toMap
     val k = rows.keySet.max + 1
     PcaModel(rows(-1), Array.tabulate(k)(rows(_)))

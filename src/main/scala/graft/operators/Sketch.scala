@@ -221,7 +221,7 @@ object Sketch {
   def readSketches(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
     require(readSketchParams(spark, path).isDefined,
       s"no committed sketch catalog at $path (params/ missing)")
-    spark.read.parquet(s"$path/sketches")
+    graft.Parquet.read(spark, s"$path/sketches")
   }
 
   /** Pairwise overlap matrix from PERSISTED sketches — the

@@ -94,8 +94,8 @@ object TfIdf {
   /** Load a model saved by [[save]]. Params read BY NAME so a
     * column-order change in the file fails loudly, never misreads. */
   def load(spark: org.apache.spark.sql.SparkSession, path: String): DfModel =
-    DfModel(spark.read.parquet(s"$path/df"),
-      spark.read.parquet(s"$path/params").select("n_docs").head().getLong(0))
+    DfModel(graft.Parquet.read(spark, s"$path/df"),
+      graft.Parquet.read(spark, s"$path/params").select("n_docs").head().getLong(0))
 
   /** Per-doc top-`k` terms by tf·idf weight: `(id, term, tf,
     * weight_micro, rank)`, ties broken by term (ascending) so the cut

@@ -125,12 +125,12 @@ object tables {
     import org.apache.spark.sql.functions.{col => fcol, expr}
     import org.apache.spark.sql.types.{LongType, TimestampType, TimestampNTZType}
     // On a session WITHOUT the nanosAsLong conf, a TIMESTAMP(NANOS) file
-    // fails schema inference right here ("Illegal Parquet type:
-    // INT64 (TIMESTAMP(NANOS,...))") — before any dtype can be matched —
-    // so the GraftSession pointer must wrap the scan itself. (With the
-    // conf set, the same file scans as a plain Long.)
+    // fails the footer's schema conversion right here ("Illegal Parquet
+    // type: INT64 (TIMESTAMP(NANOS,...))") — before any dtype can be
+    // matched — so the GraftSession pointer must wrap the scan itself.
+    // (With the conf set, the same file scans as a plain Long.)
     val scanned =
-      try s.read.parquet(s"$dir/events.parquet")
+      try Parquet.read(s, s"$dir/events.parquet")
       catch {
         case e: Throwable if String.valueOf(e.getMessage).contains("TIMESTAMP(NANOS") =>
           throw new IllegalArgumentException(

@@ -692,32 +692,6 @@ class DedupSpec extends SparkSpec {
     assert(Dedup.readIndexParams(spark, idx).contains((3, 128, 64)))
   }
 
-  /** Messages logged at WARN or above to `loggerName` while `body` runs,
-    * captured by a log4j appender (the session runs at ERROR). */
-  private def captureWarnings(loggerName: String)(body: => Unit): Seq[String] = {
-    import org.apache.logging.log4j.{Level, LogManager}
-    import org.apache.logging.log4j.core.{LogEvent, Logger}
-    import org.apache.logging.log4j.core.appender.AbstractAppender
-    import org.apache.logging.log4j.core.config.Property
-    import scala.jdk.CollectionConverters._
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val appender = new AbstractAppender("spec-capture", null, null, true, Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage): Unit
-    }
-    appender.start()
-    val logger = LogManager.getLogger(loggerName).asInstanceOf[Logger]
-    logger.addAppender(appender)
-    val restore = logger.getLevel
-    logger.setLevel(Level.WARN)
-    try body
-    finally {
-      logger.removeAppender(appender)
-      logger.setLevel(restore)
-      appender.stop()
-    }
-    seen.asScala.toSeq
-  }
-
   test("simhash and embedding self-joins honor the hot-bucket cap") {
     import spark.implicits._
     val template = (100L until 700L).map(i =>

@@ -51,6 +51,32 @@ trait SparkSpec extends AnyFunSuite {
       rows
     }
   }
+
+  /** Messages logged at WARN or above to `loggerName` while `body` runs,
+    * captured by a log4j appender (the session runs at ERROR). */
+  def captureWarnings(loggerName: String)(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import scala.jdk.CollectionConverters._
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("spec-capture", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage): Unit
+    }
+    appender.start()
+    val logger = LogManager.getLogger(loggerName).asInstanceOf[Logger]
+    logger.addAppender(appender)
+    val restore = logger.getLevel
+    logger.setLevel(Level.WARN)
+    try body
+    finally {
+      logger.removeAppender(appender)
+      logger.setLevel(restore)
+      appender.stop()
+    }
+    seen.asScala.toSeq
+  }
 }
 
 /** Shared test schemas + rows (the e2e "users pipeline" shape from
