@@ -1158,47 +1158,21 @@ object Dedup {
     * is read from an `observe` metric collected DURING the
     * materializing pass — no separate probe job per round.
     *
-    * `checkpointDir`: by default rounds truncate lineage with
-    * `localCheckpoint`, whose blocks live on executors — fine on
-    * local[n], but on a real cluster losing one executor mid-iteration
-    * loses the (truncated) lineage and kills the job. Pass a reliable
-    * store path (HDFS/S3) to snapshot each round to parquet there
-    * instead. Reliable mode never touches the SparkContext-global
-    * checkpoint directory, and it cleans up after itself: each round's
-    * snapshot is deleted as soon as the next round is on disk, so the
-    * footprint is O(1) snapshots rather than one per round. On
-    * SUCCESSFUL return exactly one `graft-cc-<uuid>/` run directory
-    * remains — it backs the returned (lazy) frame — and is the
-    * caller's to delete once the result is consumed. On ANY failure
-    * (non-convergence, a Spark job dying mid-round) the whole run
-    * directory is best-effort deleted before the error propagates:
-    * a failed call leaves nothing behind to leak. */
+    * `checkpointDir` selects where each round is frozen, per the
+    * contract of [[graft.InternalCaches.snapshots]]: executor-local
+    * `localCheckpoint` by default, else parquet snapshots under one
+    * `graft-cc-<uuid>/` run directory. A round's snapshot is dropped as
+    * soon as the next round is on disk; on any failure (non-convergence,
+    * a Spark job dying mid-round) the run directory is deleted. */
   def duplicateClusters(
       pairs: DataFrame, maxIters: Int = 25,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val spark = pairs.sparkSession
-    val runDir = checkpointDir.map(d => s"$d/graft-cc-${java.util.UUID.randomUUID()}")
-    var step = 0
-    // (frame, snapshot path): reliable mode round-trips through parquet —
-    // truncated lineage that survives executor loss, re-readable by path.
-    def snap(df: DataFrame): (DataFrame, Option[String]) = runDir match {
-      case Some(base) =>
-        val p = s"$base/step-$step"; step += 1
-        df.write.parquet(p)
-        // explicit schema: a zero-row snapshot has no footer to infer from
-        (spark.read.schema(df.schema).parquet(p), Some(p))
-      case None => (InternalCaches.checkpoint(df), None)
-    }
-    def drop(path: Option[String]): Unit = path.foreach { d =>
-      val p = new org.apache.hadoop.fs.Path(d)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    }
-    try {
+      checkpointDir: Option[String] = None): DataFrame =
+    InternalCaches.snapshots(pairs.sparkSession, checkpointDir, "graft-cc") { run =>
       val p = pairs.select(col("id_a"), col("id_b"))
-      val (edges, edgesPath) = snap( // materialize once: candidate gen never re-runs per round
+      val (edges, edgesPath) = run.freeze( // materialize once: candidate gen never re-runs per round
         p.select(col("id_a").as("u"), col("id_b").as("v"))
           .union(p.select(col("id_b").as("u"), col("id_a").as("v"))))
-      var (labels, labelsPath) = snap(
+      var (labels, labelsPath) = run.freeze(
         edges.select(col("u").as("id")).distinct()
           .select(col("id"), col("id").as("cluster_id")))
       var changed = true
@@ -1208,7 +1182,7 @@ object Dedup {
         val nmin = edges.join(labels, edges("v") === labels("id"))
           .groupBy("u").agg(min("cluster_id").as("_nmin"))
         val obs = Observation()
-        val (next, nextPath) = snap(
+        val (next, nextPath) = run.freeze(
           labels.join(nmin, labels("id") === nmin("u"), "left")
             .select(labels("id"),
               least(col("cluster_id"), coalesce(col("_nmin"), col("cluster_id"))).as("cluster_id"),
@@ -1217,7 +1191,7 @@ object Dedup {
         val viaObs = if (obsHealthy) observedChanged(obs) else None
         if (viaObs.isEmpty) obsHealthy = false
         changed = viaObs.getOrElse(next.where(col("_c")).limit(1).count() > 0)
-        drop(labelsPath) // round N-1's snapshot: unreferenced once round N is on disk
+        run.drop(labelsPath) // round N-1's snapshot: unreferenced once round N is on disk
         labelsPath = nextPath
         labels = next.drop("_c")
         it += 1
@@ -1225,18 +1199,9 @@ object Dedup {
       if (changed)
         throw new IllegalStateException(
           s"duplicateClusters: not converged after $maxIters rounds (component diameter > $maxIters); raise maxIters")
-      drop(edgesPath) // the loop is done; only the final label snapshot stays live
+      run.drop(edgesPath) // the loop is done; only the final label snapshot stays live
       labels
-    } catch {
-      case t: Throwable =>
-        // Nothing is returned on failure, so the whole run directory —
-        // edges plus whatever round snapshots the crash stranded — is
-        // garbage. Best-effort delete; the original error wins.
-        try drop(runDir)
-        catch { case cleanup: Throwable => t.addSuppressed(cleanup) }
-        throw t
     }
-  }
 
   /** [[duplicateClusters]] by alternating star contraction — same
     * output contract (`(id, cluster_id)`, cluster_id = component min,
@@ -1275,26 +1240,12 @@ object Dedup {
     * root is its component's minimum, and neither star operation ever
     * splits or merges components.
     *
-    * Same `checkpointDir` semantics as [[duplicateClusters]]:
-    * localCheckpoint rounds by default, reliable parquet snapshots
-    * (O(1) retained, self-cleaning on failure) with a path. */
+    * `checkpointDir`: as [[duplicateClusters]], per
+    * [[graft.InternalCaches.snapshots]], with `graft-ccs-<uuid>/` run
+    * directories. */
   def duplicateClustersStar(
       pairs: DataFrame, maxIters: Int = 25,
       checkpointDir: Option[String] = None): DataFrame = {
-    val spark = pairs.sparkSession
-    val runDir = checkpointDir.map(d => s"$d/graft-ccs-${java.util.UUID.randomUUID()}")
-    var step = 0
-    def snap(df: DataFrame): (DataFrame, Option[String]) = runDir match {
-      case Some(base) =>
-        val p = s"$base/step-$step"; step += 1
-        df.write.parquet(p)
-        (spark.read.schema(df.schema).parquet(p), Some(p))
-      case None => (InternalCaches.checkpoint(df), None)
-    }
-    def drop(path: Option[String]): Unit = path.foreach { d =>
-      val p = new org.apache.hadoop.fs.Path(d)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    }
     def largeStar(e: DataFrame): DataFrame = {
       val b = e.select(col("a"), col("b"))
         .union(e.select(col("b").as("a"), col("a").as("b")))
@@ -1314,13 +1265,13 @@ object Dedup {
       nbr.union(mm.select(col("a"), col("_m").as("b")))
         .where(col("a") =!= col("b")).distinct()
     }
-    try {
+    InternalCaches.snapshots(pairs.sparkSession, checkpointDir, "graft-ccs") { run =>
       val p0 = pairs.select(col("id_a"), col("id_b"))
         .where(col("id_a") =!= col("id_b"))
         .select(greatest(col("id_a"), col("id_b")).as("a"),
           least(col("id_a"), col("id_b")).as("b"))
         .distinct()
-      var (edges, edgesPath) = snap(p0)
+      var (edges, edgesPath) = run.freeze(p0)
       // Star-forest test (see scaladoc): targets never re-occur as
       // sources AND every source has out-degree 1. Both violation
       // indicators union into ONE limit-1 probe — a single job per
@@ -1337,9 +1288,9 @@ object Dedup {
       var converged = flattened(edges)
       var it = 0
       while (!converged && it < maxIters) {
-        val (next, nextPath) = snap(smallStar(largeStar(edges)))
+        val (next, nextPath) = run.freeze(smallStar(largeStar(edges)))
         converged = flattened(next)
-        drop(edgesPath)
+        run.drop(edgesPath)
         edges = next; edgesPath = nextPath
         it += 1
       }
@@ -1350,11 +1301,6 @@ object Dedup {
       // heads, roots self-label
       edges.select(col("a").as("id"), col("b").as("cluster_id"))
         .union(edges.select(col("b").as("id"), col("b").as("cluster_id")).distinct())
-    } catch {
-      case t: Throwable =>
-        try drop(runDir)
-        catch { case cleanup: Throwable => t.addSuppressed(cleanup) }
-        throw t
     }
   }
 

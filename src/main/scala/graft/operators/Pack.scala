@@ -88,13 +88,12 @@ object Pack {
       .orderBy("_blk").collect()
     assert(totals.length <= targetBlocks,
       s"block arithmetic bound violated: ${totals.length} blocks > $targetBlocks")
-    var acc = 0L
-    val offsetRows = totals.map { r =>
-      // a block whose weights are ALL NULL sums to NULL — contribute 0
-      // to the running offset instead of NPE-ing the driver (the rows
-      // themselves still carry NULL cumsums, matching SQL semantics)
-      val off = acc; acc += (if (r.isNullAt(1)) 0L else r.getLong(1)); (r.getLong(0), off)
-    }.toSeq
+    // a block whose weights are ALL NULL sums to NULL — contribute 0
+    // to the running offset instead of NPE-ing the driver (the rows
+    // themselves still carry NULL cumsums, matching SQL semantics)
+    val blockTotals = totals.toSeq.map(r =>
+      (r.getLong(0), (), if (r.isNullAt(1)) 0L else r.getLong(1)))
+    val offsetRows = blockTotals.map(_._1).zip(exclusiveOffsets(blockTotals))
     val session = df.sparkSession
     import session.implicits._
     val offsets = offsetRows.toDF("_blk", "_off")
@@ -170,6 +169,24 @@ object Pack {
       .partitionBy(shardCol).format(format).save(path)
   }
 
+  /** Exclusive prefix offsets along the part order, per group: the
+    * offset of `totals(i) = (part, group, total)` is the sum of that
+    * group's totals over every earlier part. Aligned with `totals`;
+    * `(part, group)` pairs must be unique. The driver-side step of every
+    * two-phase prefix sum here ([[packByBudget]], the budget cuts,
+    * [[Sampling.interleaveByWeight]]): tiny by construction, one row
+    * per (part, group), never the data. */
+  private[graft] def exclusiveOffsets[P: Ordering, G](totals: Seq[(P, G, Long)]): Seq[Long] = {
+    val running = scala.collection.mutable.Map.empty[G, Long]
+    val offsets = new Array[Long](totals.size)
+    totals.indices.sortBy(i => totals(i)._1).foreach { i =>
+      val (_, g, t) = totals(i)
+      offsets(i) = running.getOrElse(g, 0L)
+      running(g) = offsets(i) + t
+    }
+    offsets.toSeq
+  }
+
   /** Quality-ordered token-budget SELECTION — the curation step before
     * [[packByBudget]]'s sharding: keep the best-scoring documents whose
     * cumulative weight stays within `budget` ("train on the top N
@@ -183,47 +200,9 @@ object Pack {
     * NULL weights count 0 (kept for free, like SQL `sum` skipping
     * nulls).
     *
-    * Scale shape: the naive `sum(w) OVER (ORDER BY score DESC)` is a
-    * one-partition global sort. Instead: `repartitionByRange` on the
-    * order keys (sampled bounds — fine here, because the kept set
-    * depends only on the TOTAL order, never on where partition cuts
-    * land) + in-partition sort, materialized ONCE so the two passes
-    * below see identical partitions; then (1) one narrow pass for
-    * per-partition totals (≤ shuffle-partitions rows to the driver),
-    * exclusive offsets computed locally; (2) one in-order pass per
-    * partition accumulating offset + running weight — no window
-    * exchange, and in the default mode partitions whose offset already
-    * exceeds the budget short-circuit without reading a row.
-    *
-    * EAGER: this call runs Spark jobs at construction time (the
-    * snapshot + the totals pass) and the returned frame is backed by
-    * the lineage-truncated snapshot, registered under `df`'s session.
-    * In the default mode do NOT call `GraftSession.releaseCachedBlocks`
-    * on that session before consuming the result — the frame cannot
-    * recompute once its checkpoint blocks are gone. Consume first,
-    * release after. Another session's release leaves it alone.
-    *
-    * `checkpointDir`: by default the sorted projection is pinned with
-    * `localCheckpoint`, whose blocks live in EXECUTOR-LOCAL storage —
-    * fine on local[n], but on a real cluster an executor loss mid-job
-    * kills the query (lineage truncated, blocks gone). Pass a reliable
-    * store path (HDFS/S3) to snapshot the projection to parquet there
-    * instead, exactly like [[Dedup.duplicateClusters]]. Because a
-    * parquet read does NOT preserve partition indexes (files are
-    * bin-packed by size), reliable mode stamps each row with its sort
-    * partition id before the write and re-co-locates on that column
-    * for the walk — one extra narrow-row shuffle, same semantics. On
-    * successful return one `graft-sb-<uuid>/` directory remains (it
-    * backs the returned lazy frame) and is the caller's to delete once
-    * consumed; on failure it is best-effort deleted.
-    *
-    * Note: the totals pass and the walk run as RDD `mapPartitions` over
-    * object rows — the ONE hot loop in this library outside Tungsten /
-    * whole-stage codegen. That is deliberate: the walk carries cross-row
-    * mutable state (the running prefix) that no codegen'd expression
-    * expresses, and the scanned projection is a narrow ~24 B/row
-    * (id, weight, score) triple, so the object-row overhead is bounded
-    * by design rather than by luck.
+    * This is [[selectByBudgetPerGroup]] over one group: same scale
+    * shape, eagerness and `checkpointDir` contract, with
+    * `graft-sb-<uuid>/` run directories.
     *
     * Returns `(id, weight, score, cum_weight)`; [[selectByBudgetKeep]]
     * returns the full kept rows instead. */
@@ -231,86 +210,8 @@ object Pack {
       df: DataFrame, id: Column, weight: Column, score: Column,
       budget: Long, checkpointDir: Option[String] = None): DataFrame = {
     require(budget >= 0, s"budget must be non-negative, got $budget")
-    val session = df.sparkSession
-    import session.implicits._
-    val proj = df.select(id.cast("long").as("id"),
-      weight.cast("long").as("weight"), score.cast("double").as("score"))
-    checkpointDir match {
-      case None =>
-        val sorted = graft.InternalCaches.checkpoint(proj
-          .repartitionByRange(col("score").desc, col("id").asc)
-          .sortWithinPartitions(col("score").desc, col("id").asc))
-        val ds = sorted.as[(Long, Option[Long], Option[Double])]
-        val totals = ds.rdd
-          .mapPartitionsWithIndex { (pid, it) =>
-            var s = 0L
-            it.foreach { case (rid, w, _) =>
-              val wv = w.getOrElse(0L)
-              require(wv >= 0, s"selectByBudget requires non-negative weights; id=$rid has $wv")
-              s += wv
-            }
-            Iterator.single((pid, s))
-          }
-          .collect().sortBy(_._1).map(_._2)
-        // exclusive prefix offsets, one Long per partition — closure-shipped
-        val offsets = totals.scanLeft(0L)(_ + _)
-        val kept = ds.rdd.mapPartitionsWithIndex { (pid, it) =>
-          var cum = offsets(pid)
-          if (cum > budget) Iterator.empty // whole partition is past the cut
-          else it.flatMap { case (rid, w, sc) =>
-            cum += w.getOrElse(0L)
-            if (cum <= budget) Some((rid, w, sc, cum)) else None
-          }
-        }
-        kept.toDF("id", "weight", "score", "cum_weight")
-
-      case Some(dir) =>
-        val runDir = s"$dir/graft-sb-${java.util.UUID.randomUUID()}"
-        try {
-          // Stamp the sort partition id BEFORE the write: the parquet
-          // read bin-packs files by size, so physical read partitions
-          // carry no order — the stamped column does.
-          val sorted = proj
-            .repartitionByRange(col("score").desc, col("id").asc)
-            .sortWithinPartitions(col("score").desc, col("id").asc)
-            .withColumn("_pid", spark_partition_id())
-          sorted.write.parquet(runDir)
-          val snap = session.read.schema(sorted.schema).parquet(runDir)
-          // Pass 1: per-sort-partition totals + a weight floor check.
-          val totRows = snap.groupBy("_pid")
-            .agg(sum(col("weight")).as("_tot"), min(col("weight")).as("_minw"))
-            .collect()
-          totRows.foreach { r =>
-            require(r.isNullAt(2) || r.getLong(2) >= 0,
-              s"selectByBudget requires non-negative weights; partition ${r.getInt(0)} has ${r.getLong(2)}")
-          }
-          val byPid = totRows.map(r => r.getInt(0) -> (if (r.isNullAt(1)) 0L else r.getLong(1))).toMap
-          val maxPid = if (byPid.isEmpty) -1 else byPid.keys.max
-          val offsets = (0 to maxPid).map(byPid.getOrElse(_, 0L)).scanLeft(0L)(_ + _).toArray
-          // Pass 2: co-locate each sort partition (hash on _pid — several
-          // pids may share a task; each pid's run is contiguous after the
-          // in-partition sort, so a keyed walk resumes cleanly per run).
-          val ds = snap
-            .repartition(math.max(1, maxPid + 1), col("_pid"))
-            .sortWithinPartitions(col("_pid").asc, col("score").desc, col("id").asc)
-            .as[(Long, Option[Long], Option[Double], Int)]
-          ds.mapPartitions { it =>
-            var cur = -1
-            var cum = 0L
-            it.flatMap { case (rid, w, sc, pid) =>
-              if (pid != cur) { cur = pid; cum = offsets(pid) }
-              cum += w.getOrElse(0L)
-              if (cum <= budget) Some((rid, w, sc, cum)) else None
-            }
-          }.toDF("id", "weight", "score", "cum_weight")
-        } catch {
-          case e: Throwable =>
-            val p = new org.apache.hadoop.fs.Path(runDir)
-            try p.getFileSystem(session.sparkContext.hadoopConfiguration).delete(p, true)
-            catch { case _: Throwable => () }
-            throw e
-        }
-    }
+    cutByBudget(df, id, weight, score, lit(""), Map("" -> budget), checkpointDir, "graft-sb")
+      .drop("group")
   }
 
   /** [[selectByBudget]] returning the FULL kept rows of `df` instead of
@@ -338,117 +239,116 @@ object Pack {
     * order; groups ABSENT from `budgets` are dropped entirely (budget
     * 0) — a mixture is an explicit contract, not a default-keep.
     *
-    * Scale shape: range-partition on (group, score DESC, id) so every
-    * partition holds contiguous runs of at most a few groups; pass 1
-    * aggregates per-(partition, group) totals (rows = partitions ×
-    * groups-per-partition — small for mixture-sized group counts, which
-    * is the intended regime: languages/domains, not high-cardinality
-    * keys); the driver computes each group's running offset along the
-    * partition order; pass 2 walks each partition once, accumulating
-    * per group. No window exchange, no global sort. Returns
-    * `(id, group, weight, score, cum_weight)`.
+    * Scale shape: the naive `sum(w) OVER (PARTITION BY group ORDER BY
+    * score DESC)` puts each group in one task. Instead:
+    * `repartitionByRange` on (group, score DESC, id) (sampled bounds —
+    * fine, the kept set depends only on the TOTAL order, never on where
+    * partition cuts land) + in-partition sort, each row stamped with its
+    * sort partition `_pid`, frozen ONCE so both passes see identical
+    * runs; then (1) one narrow pass for per-(`_pid`, group) totals
+    * (partitions × groups-per-partition rows to the driver — small for
+    * mixture-sized group counts: languages/domains, not high-cardinality
+    * keys), exclusive offsets per group along the `_pid` order computed
+    * locally ([[exclusiveOffsets]]); (2) one in-order walk of each
+    * `_pid` run accumulating offset + running weight — no window
+    * exchange, no global sort. In the default mode a partition whose
+    * every group is already past its cut is skipped without reading a
+    * row. Returns `(id, group, weight, score, cum_weight)`.
     *
-    * Same eagerness caveat as [[selectByBudget]] (jobs run at
-    * construction; consume before releasing cached blocks), and the
-    * same `checkpointDir` escape hatch: pass a reliable store path to
-    * snapshot via parquet (partition ids stamped pre-write, re-located
-    * post-read) instead of executor-local `localCheckpoint` blocks. */
+    * EAGER: this call runs Spark jobs at construction time (the
+    * snapshot + the totals pass) and the returned frame is backed by
+    * the lineage-truncated snapshot, registered under `df`'s session.
+    * In the default mode do NOT call `GraftSession.releaseCachedBlocks`
+    * on that session before consuming the result — the frame cannot
+    * recompute once its checkpoint blocks are gone. Consume first,
+    * release after. Another session's release leaves it alone.
+    *
+    * `checkpointDir`: where the sorted projection is frozen, per the
+    * contract of [[graft.InternalCaches.snapshots]] (`graft-sbg-<uuid>/`
+    * run directories). A parquet read does NOT preserve partition
+    * indexes (files are bin-packed by size), which is why the passes key
+    * on the stamped `_pid` column; reliable mode re-co-locates on it
+    * before the walk — one extra narrow-row shuffle, same semantics.
+    *
+    * Note: the totals pass and the walk run as RDD/Dataset
+    * `mapPartitions` over object rows — the ONE hot loop in this
+    * library outside Tungsten / whole-stage codegen. That is
+    * deliberate: the walk carries cross-row mutable state (the running
+    * prefix) that no codegen'd expression expresses, and the scanned
+    * projection is a narrow (id, group, weight, score, _pid) tuple, so
+    * the object-row overhead is bounded by design rather than by luck. */
   def selectByBudgetPerGroup(
       df: DataFrame, id: Column, weight: Column, score: Column,
       group: Column, budgets: Map[String, Long],
       checkpointDir: Option[String] = None): DataFrame = {
     require(budgets.values.forall(_ >= 0), s"budgets must be non-negative, got $budgets")
+    cutByBudget(df, id, weight, score, group, budgets, checkpointDir, "graft-sbg")
+  }
+
+  private def cutByBudget(
+      df: DataFrame, id: Column, weight: Column, score: Column,
+      group: Column, budgets: Map[String, Long],
+      checkpointDir: Option[String], runPrefix: String): DataFrame = {
     val session = df.sparkSession
     import session.implicits._
-    val proj = df
+    val order = Seq(col("group").asc, col("score").desc, col("id").asc)
+    val sorted = df
       .select(id.cast("long").as("id"), group.cast("string").as("group"),
         weight.cast("long").as("weight"), score.cast("double").as("score"))
-      .repartitionByRange(col("group").asc, col("score").desc, col("id").asc)
-      .sortWithinPartitions(col("group").asc, col("score").desc, col("id").asc)
+      .repartitionByRange(order: _*)
+      .sortWithinPartitions(order: _*)
+      .withColumn("_pid", spark_partition_id())
     val budgetFor: Option[String] => Long = g => g.flatMap(budgets.get).getOrElse(0L)
-
-    def offsetsOf(totals: Array[(Int, Option[String], Long)]): Map[(Int, Option[String]), Long] = {
-      // per-group exclusive offsets along the partition order — tiny
-      // (partitions × groups-per-partition rows), computed locally
-      val running = scala.collection.mutable.Map.empty[Option[String], Long]
-      totals.sortBy(_._1).map { case (pid, g, t) =>
-        val off = running.getOrElse(g, 0L)
-        running(g) = off + t
-        (pid, g) -> off
-      }.toMap
-    }
-
-    checkpointDir match {
-      case None =>
-        val sorted = graft.InternalCaches.checkpoint(proj)
-        val ds = sorted.as[(Long, Option[String], Option[Long], Option[Double])]
-        val totals = ds.rdd
-          .mapPartitionsWithIndex { (pid, it) =>
-            val acc = scala.collection.mutable.LinkedHashMap.empty[Option[String], Long]
-            it.foreach { case (rid, g, w, _) =>
-              val wv = w.getOrElse(0L)
-              require(wv >= 0,
-                s"selectByBudgetPerGroup requires non-negative weights; id=$rid has $wv")
-              acc(g) = acc.getOrElse(g, 0L) + wv
-            }
-            acc.iterator.map { case (g, t) => (pid, g, t) }
+    graft.InternalCaches.snapshots(session, checkpointDir, runPrefix) { run =>
+      val (frozen, _) = run.freeze(sorted)
+      val rows = frozen.as[(Long, Option[String], Option[Long], Option[Double], Int)]
+      // Pass 1, keyed by the stamped column, not the task: a task of a
+      // parquet re-read may hold several runs or part of one, so the
+      // per-task sums merge on the driver.
+      val totals = rows.rdd
+        .mapPartitions { it =>
+          val acc = scala.collection.mutable.LinkedHashMap.empty[(Int, Option[String]), Long]
+          it.foreach { case (rid, g, w, _, pid) =>
+            val wv = w.getOrElse(0L)
+            require(wv >= 0, s"budget cuts require non-negative weights; id=$rid has $wv")
+            acc((pid, g)) = acc.getOrElse((pid, g), 0L) + wv
           }
-          .collect()
-        val offsetByPidGroup = offsetsOf(totals)
-        val kept = ds.rdd.mapPartitionsWithIndex { (pid, it) =>
-          val cums = scala.collection.mutable.Map.empty[Option[String], Long]
-          it.flatMap { case (rid, g, w, sc) =>
-            val cum = cums.getOrElse(g, offsetByPidGroup.getOrElse((pid, g), 0L)) + w.getOrElse(0L)
-            cums(g) = cum
-            if (cum <= budgetFor(g)) Some((rid, g, w, sc, cum)) else None
-          }
+          acc.iterator
         }
-        kept.toDF("id", "group", "weight", "score", "cum_weight")
-
-      case Some(dir) =>
-        val runDir = s"$dir/graft-sbg-${java.util.UUID.randomUUID()}"
-        try {
-          val sorted = proj.withColumn("_pid", spark_partition_id())
-          sorted.write.parquet(runDir)
-          val snap = session.read.schema(sorted.schema).parquet(runDir)
-          val totRows = snap.groupBy("_pid", "group")
-            .agg(sum(col("weight")).as("_tot"), min(col("weight")).as("_minw"))
-            .collect()
-          totRows.foreach { r =>
-            require(r.isNullAt(3) || r.getLong(3) >= 0,
-              s"selectByBudgetPerGroup requires non-negative weights; group ${r.get(1)} has ${r.getLong(3)}")
-          }
-          val totals = totRows.map { r =>
-            (r.getInt(0), Option(r.getString(1)), if (r.isNullAt(2)) 0L else r.getLong(2))
-          }
-          val offsetByPidGroup = offsetsOf(totals)
-          val maxPid = if (totals.isEmpty) -1 else totals.map(_._1).max
-          val ds = snap
-            .repartition(math.max(1, maxPid + 1), col("_pid"))
-            .sortWithinPartitions(col("_pid").asc, col("group").asc,
-              col("score").desc, col("id").asc)
-            .as[(Long, Option[String], Option[Long], Option[Double], Int)]
-          ds.mapPartitions { it =>
-            var curPid = -1
-            var curG: Option[String] = None
-            var started = false
-            var cum = 0L
-            it.flatMap { case (rid, g, w, sc, pid) =>
-              if (!started || pid != curPid || g != curG) {
-                started = true; curPid = pid; curG = g
-                cum = offsetByPidGroup.getOrElse((pid, g), 0L)
-              }
-              cum += w.getOrElse(0L)
-              if (cum <= budgetFor(g)) Some((rid, g, w, sc, cum)) else None
-            }
-          }.toDF("id", "group", "weight", "score", "cum_weight")
-        } catch {
-          case e: Throwable =>
-            val p = new org.apache.hadoop.fs.Path(runDir)
-            try p.getFileSystem(session.sparkContext.hadoopConfiguration).delete(p, true)
-            catch { case _: Throwable => () }
-            throw e
+        .collect().groupMapReduce(_._1)(_._2)(_ + _).toSeq
+      val runs = totals.map(_._1)
+      val offsets = runs.zip(exclusiveOffsets(totals.map { case ((p, g), t) => (p, g, t) })).toMap
+      // Pass 2: walk each (_pid, group) run in order from its offset.
+      val walk: Iterator[(Long, Option[String], Option[Long], Option[Double], Int)] =>
+          Iterator[(Long, Option[String], Option[Long], Option[Double], Long)] = { it =>
+        var curPid = -1
+        var curG: Option[String] = None
+        var cum = 0L
+        it.flatMap { case (rid, g, w, sc, pid) =>
+          if (pid != curPid || g != curG) { curPid = pid; curG = g; cum = offsets((pid, g)) }
+          cum += w.getOrElse(0L)
+          if (cum <= budgetFor(g)) Some((rid, g, w, sc, cum)) else None
         }
+      }
+      val out = Seq("id", "group", "weight", "score", "cum_weight")
+      checkpointDir match {
+        case None =>
+          // the local snapshot keeps partition i == run _pid i: a
+          // partition whose every group is past its cut reads no row
+          val pastCut = offsets.groupBy(_._1._1).collect {
+            case (pid, gs) if gs.forall { case ((_, g), off) => off > budgetFor(g) } => pid
+          }.toSet
+          rows.rdd.mapPartitionsWithIndex { (pid, it) =>
+            if (pastCut(pid)) Iterator.empty else walk(it)
+          }.toDF(out: _*)
+        case Some(_) =>
+          // a parquet read bin-packs files: re-co-locate each _pid run
+          // (several may share a task; each stays contiguous and ordered)
+          val nPids = if (runs.isEmpty) 1 else runs.map(_._1).max + 1
+          rows.repartition(nPids, col("_pid"))
+            .sortWithinPartitions(col("_pid") +: order: _*)
+            .mapPartitions(walk).toDF(out: _*)
+      }
     }
   }
 

@@ -421,11 +421,9 @@ object Sampling {
       .agg(count(lit(1)).as("_n"), min("_graft_mid").as("_first"))
       .collect()
       .map(r => (r.getInt(0), r.getString(1), r.getLong(2), r.getLong(3)))
-    val addRows = counts.groupBy(_._2).toSeq.flatMap { case (g, rows) =>
-      var start = 0L
-      rows.sortBy(_._1).map { case (p, _, n, first) =>
-        val a = (p, g, start + 1L - first); start += n; a
-      }
+    val starts = Pack.exclusiveOffsets(counts.toSeq.map { case (p, g, n, _) => (p, g, n) })
+    val addRows = counts.toSeq.zip(starts).map { case ((p, g, _, first), start) =>
+      (p, g, start + 1L - first)
     }
     import spark.implicits._
     val addTable = addRows.toDF("_graft_p", "_graft_g", "_graft_add")

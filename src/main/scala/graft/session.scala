@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
 
 /** Per-session registry of what graft ITSELF materializes: the
   * operator-internal persists (hot-bucket guard, candidate and collapse
@@ -30,12 +32,17 @@ private[graft] object InternalCaches {
     * recomputes instead of failing. Each call site notes its measured
     * "scans with → without": the leaf scans, summed over every job a
     * SparkEntry query launches on sf0.01, with the persist and without
-    * it (exchange reuse counted). */
-  def persist(df: DataFrame): DataFrame = {
-    val p = df.persist()
-    reg.add(Entry(p.sparkSession, () => p.unpersist(blocking = false)))
-    p
-  }
+    * it (exchange reuse counted). A plan that is already cached is
+    * returned as is, unregistered: the CacheManager keeps one entry per
+    * plan and `unpersist` drops it by plan, so releasing a second
+    * registration would drop the cache its first owner still uses. */
+  def persist(df: DataFrame): DataFrame =
+    if (df.storageLevel != StorageLevel.NONE) df
+    else {
+      val p = df.persist()
+      reg.add(Entry(p.sparkSession, () => p.unpersist(blocking = false)))
+      p
+    }
 
   /** Eager `localCheckpoint` of `df`, its checkpoint RDD registered under
     * the frame's session; returns the checkpointed frame. The frame has
@@ -45,6 +52,65 @@ private[graft] object InternalCaches {
     val rdd = new java.lang.ref.WeakReference(cp.queryExecution.logical.asInstanceOf[LogicalRDD].rdd)
     reg.add(Entry(cp.sparkSession, () => Option(rdd.get).foreach(_.unpersist(blocking = true))))
     cp
+  }
+
+  /** The one storage decision of every operator that takes a
+    * `checkpointDir` ([[graft.operators.Dedup.duplicateClusters]],
+    * [[graft.operators.Dedup.duplicateClustersStar]],
+    * [[graft.operators.Pack.selectByBudget]],
+    * [[graft.operators.Pack.selectByBudgetPerGroup]]): runs `body` with a
+    * [[Snapshots]] run whose [[Snapshots.freeze]] pins a frame's layout.
+    * The `checkpointDir` contract:
+    *
+    *  - `None` (default): each freeze is an eager [[checkpoint]], whose
+    *    blocks live in EXECUTOR-LOCAL storage. Fine on local[n]; on a
+    *    real cluster an executor lost mid-job kills the query (lineage
+    *    truncated, blocks gone).
+    *  - `Some(dir)`: pass a reliable store path (HDFS/S3). Each freeze
+    *    writes a parquet snapshot under ONE run directory
+    *    `<dir>/<prefix>-<uuid>/` and re-reads it with the written schema
+    *    pinned (a zero-row snapshot has no footer to infer from). The
+    *    SparkContext-global checkpoint directory is never touched.
+    *  - On successful return exactly one run directory remains: it backs
+    *    the returned lazy frame, and it is the caller's to delete once
+    *    the result is consumed. Superseded steps are dropped as the body
+    *    goes, so an iterative loop keeps O(1) snapshots.
+    *  - On ANY failure the whole run directory is best-effort deleted
+    *    before the error propagates (the original error wins; a cleanup
+    *    error rides along as suppressed): a failed call leaves nothing. */
+  def snapshots[T](spark: SparkSession, checkpointDir: Option[String], prefix: String)(
+      body: Snapshots => T): T = {
+    val run = new Snapshots(spark,
+      checkpointDir.map(d => s"$d/$prefix-${java.util.UUID.randomUUID()}"))
+    try body(run)
+    catch {
+      case t: Throwable =>
+        try run.drop(run.runDir)
+        catch { case cleanup: Throwable => t.addSuppressed(cleanup) }
+        throw t
+    }
+  }
+
+  /** One operator call's frozen steps; see [[snapshots]]. */
+  final class Snapshots private[InternalCaches] (
+      spark: SparkSession, private[InternalCaches] val runDir: Option[String]) {
+    private var step = 0
+
+    /** Materialize `df` now. Returns the frozen frame and, in reliable
+      * mode, the step directory that backs it (for [[drop]]). */
+    def freeze(df: DataFrame): (DataFrame, Option[String]) = runDir match {
+      case Some(base) =>
+        val p = s"$base/step-$step"; step += 1
+        df.write.parquet(p)
+        (spark.read.schema(df.schema).parquet(p), Some(p))
+      case None => (checkpoint(df), None)
+    }
+
+    /** Delete a superseded step; a local checkpoint has nothing to drop. */
+    def drop(path: Option[String]): Unit = path.foreach { d =>
+      val p = new Path(d)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    }
   }
 
   /** Unpersist and forget every entry registered under `spark`. */

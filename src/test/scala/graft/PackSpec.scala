@@ -226,6 +226,47 @@ class PackSpec extends SparkSpec {
         col("id"), col("w"), col("s"), col("g"), budgets, checkpointDir = Some(dir))
         .collect().map(_.getLong(0)).toSet
       assert(got == expect)
+      val runs = new java.io.File(dir).listFiles()
+      assert(runs != null && runs.count(_.getName.startsWith("graft-sbg-")) == 1)
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+  }
+
+  test("each budget cut launches at most 4 jobs while being built, in both modes") {
+    // range-bound sampling, the snapshot (its shuffle map stage and its
+    // checkpoint or write), the one narrow totals pass
+    val dir = java.nio.file.Files.createTempDirectory("graft-sb-jobs").toString
+    try {
+      val rows = (1L to 600L).map(id => (id, s"g${id % 3}", id % 50, (id * 37 % 101).toDouble))
+        .toDF("id", "g", "w", "s")
+      for (ckpt <- Seq(None, Some(dir))) {
+        val (_, single) = jobsDuring(
+          Pack.selectByBudget(rows, col("id"), col("w"), col("s"), 5000, ckpt))
+        val (_, perGroup) = jobsDuring(Pack.selectByBudgetPerGroup(rows, col("id"), col("w"),
+          col("s"), col("g"), Map("g0" -> 2000L, "g1" -> 500L), ckpt))
+        assert(single <= 4 && perGroup <= 4, s"checkpointDir=$ckpt: $single and $perGroup jobs")
+      }
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+  }
+
+  test("both budget cuts in reliable mode leave no run directory behind on failure") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-sb-fail").toString
+    try {
+      // the negative weight fails the totals pass, after the snapshot is written
+      val neg = Seq((1L, "en", 4L, 2.0), (2L, "en", -5L, 1.0)).toDF("id", "g", "w", "s")
+      intercept[Exception] {
+        Pack.selectByBudget(neg, col("id"), col("w"), col("s"), 10, checkpointDir = Some(dir))
+      }
+      intercept[Exception] {
+        Pack.selectByBudgetPerGroup(neg, col("id"), col("w"), col("s"), col("g"),
+          Map("en" -> 10L), checkpointDir = Some(dir))
+      }
+      val leftovers = new java.io.File(dir).listFiles()
+      assert(leftovers != null && leftovers.isEmpty,
+        s"expected no leaked run dirs, found: ${leftovers.map(_.getName).mkString(", ")}")
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import graft.operators.Dedup
-import org.apache.spark.GraftTestAccess
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.functions.col
 
@@ -17,22 +15,6 @@ class ParquetReadSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(prefix: String): String = Files.createTempDirectory(prefix).toString
-
-  /** `body`'s result and the number of Spark jobs it launched. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
-    }
-    GraftTestAccess.drainListeners(sc)
-    sc.addSparkListener(listener)
-    try {
-      val r = body
-      GraftTestAccess.drainListeners(sc)
-      (r, jobs.get)
-    } finally sc.removeSparkListener(listener)
-  }
 
   private def usersDir(parts: Int, partitionBy: Seq[String] = Nil): String = {
     val dir = tmp("graft-pq-users") + "/t"

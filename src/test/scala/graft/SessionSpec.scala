@@ -28,6 +28,15 @@ class SessionSpec extends SparkSpec {
     val cachedRdd = cached.queryExecution.withCachedData.collectFirst {
       case r: InMemoryRelation => r.cacheBuilder.cachedColumnBuffers
     }.get
+    // a plan the user cached that graft then persists too (twice): graft
+    // must register nothing, or its release would drop the user's entry
+    val shared = a.range(0, 500).select((col("id") * 5).as("y")).cache()
+    assert(shared.count() == 500L)
+    val recached = captureWarnings("org.apache.spark.sql.execution.CacheManager") {
+      InternalCaches.persist(shared)
+      InternalCaches.persist(a.range(0, 500).select((col("id") * 5).as("y")))
+    }
+    assert(recached.isEmpty, s"graft re-persisted a cached plan: $recached")
 
     // B: an operator that registers a persist, then B's release
     val bDocs = b.createDataFrame(Seq(("spam", "buy cheap pills now"), ("ham", "see you at lunch")))
@@ -48,6 +57,9 @@ class SessionSpec extends SparkSpec {
     GraftSession.releaseCachedBlocks(a)
     assert((persistentIds intersect checkpointIds).isEmpty)
     assert(persistentIds.contains(cachedRdd.id))
+    assert(shared.storageLevel != StorageLevel.NONE,
+      "the user's cache of a plan graft also persisted must survive graft's release")
     cached.unpersist(blocking = true)
+    shared.unpersist(blocking = true)
   }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.GraftTestAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.scalatest.funsuite.AnyFunSuite
@@ -50,6 +52,22 @@ trait SparkSpec extends AnyFunSuite {
         s"the opt-out must plan a shuffled join:\n$plan")
       rows
     }
+  }
+
+  /** `body`'s result and the number of Spark jobs it launched. */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
+    }
+    GraftTestAccess.drainListeners(sc)
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      GraftTestAccess.drainListeners(sc)
+      (r, jobs.get)
+    } finally sc.removeSparkListener(listener)
   }
 
   /** Messages logged at WARN or above to `loggerName` while `body` runs,
