@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.InternalCaches
+import graft.{InternalCaches, Observed}
 import graft.functions.TextFns
 import org.apache.spark.sql.graftbridge.Bridge
 
@@ -1155,8 +1155,9 @@ object Dedup {
     * chains/cliques of a few docs, so a handful in practice; raise
     * `maxIters` for adversarial chains). Lineage is truncated per
     * round (the classic iterative-Spark requirement) and convergence
-    * is read from an `observe` metric collected DURING the
-    * materializing pass — no separate probe job per round.
+    * is the round's changed-label count, observed on the freeze that
+    * materializes it ([[graft.Observed]]): no separate probe job per
+    * round.
     *
     * `checkpointDir` selects where each round is frozen, per the
     * contract of [[graft.InternalCaches.snapshots]]: executor-local
@@ -1177,20 +1178,17 @@ object Dedup {
           .select(col("id"), col("id").as("cluster_id")))
       var changed = true
       var it = 0
-      var obsHealthy = true // one delivery failure → stop polling, probe directly
       while (changed && it < maxIters) {
         val nmin = edges.join(labels, edges("v") === labels("id"))
           .groupBy("u").agg(min("cluster_id").as("_nmin"))
-        val obs = Observation()
-        val (next, nextPath) = run.freeze(
-          labels.join(nmin, labels("id") === nmin("u"), "left")
+        val ((next, nextPath), observed) = Observed.run { observe =>
+          observe(labels.join(nmin, labels("id") === nmin("u"), "left")
             .select(labels("id"),
               least(col("cluster_id"), coalesce(col("_nmin"), col("cluster_id"))).as("cluster_id"),
-              (coalesce(col("_nmin"), col("cluster_id")) < col("cluster_id")).as("_c"))
-            .observe(obs, sum(when(col("_c"), 1L).otherwise(0L)).as("n_changed")))
-        val viaObs = if (obsHealthy) observedChanged(obs) else None
-        if (viaObs.isEmpty) obsHealthy = false
-        changed = viaObs.getOrElse(next.where(col("_c")).limit(1).count() > 0)
+              (coalesce(col("_nmin"), col("cluster_id")) < col("cluster_id")).as("_c")),
+            "n_changed", Seq(count(when(col("_c"), 1))))
+        }(run.freeze)
+        changed = observed("n_changed").getLong(0) > 0L
         run.drop(labelsPath) // round N-1's snapshot: unreferenced once round N is on disk
         labelsPath = nextPath
         labels = next.drop("_c")
@@ -1301,23 +1299,6 @@ object Dedup {
       // heads, roots self-label
       edges.select(col("a").as("id"), col("b").as("cluster_id"))
         .union(edges.select(col("b").as("id"), col("b").as("cluster_id")).distinct())
-    }
-  }
-
-  /** Read the per-round convergence metric the checkpoint action already
-    * collected. Listener delivery is synchronous with the action in
-    * practice; returns None if metrics were not delivered within the
-    * brief poll window so the caller can fall back to a 1-row probe
-    * (and stop polling on later rounds). */
-  private def observedChanged(obs: Observation): Option[Boolean] = {
-    import org.apache.spark.sql.graftbridge.Bridge.observedOrEmpty
-    var waited = 0
-    while (observedOrEmpty(obs).isEmpty && waited < 5000) { Thread.sleep(10); waited += 10 }
-    val m = observedOrEmpty(obs)
-    m.get("n_changed") match {
-      case Some(n: java.lang.Long) => Some(n.longValue > 0L)
-      case _ if m.nonEmpty => Some(false) // null sum: the label set itself is empty
-      case _ => None
     }
   }
 

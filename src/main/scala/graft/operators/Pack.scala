@@ -83,9 +83,9 @@ object Pack {
     // collect-and-broadcast beats the equivalent unpartitioned window:
     // same offsets, no single-partition exchange, and no spurious
     // "WindowExec: No Partition Defined" warning polluting every run's
-    // log. The collected rows are block summaries, never the data.
-    val totals = blocked.groupBy("_blk").agg(sum(col("weight")).as("_tot"))
-      .orderBy("_blk").collect()
+    // log. The collected rows are block summaries, never the data, and
+    // come back unsorted: `exclusiveOffsets` orders them on the driver.
+    val totals = blocked.groupBy("_blk").agg(sum(col("weight")).as("_tot")).collect()
     assert(totals.length <= targetBlocks,
       s"block arithmetic bound violated: ${totals.length} blocks > $targetBlocks")
     // a block whose weights are ALL NULL sums to NULL — contribute 0

@@ -1,9 +1,11 @@
 package graft
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
+import scala.concurrent.{Await, TimeoutException}
+import scala.concurrent.duration._
 
 /** Per-session registry of what graft ITSELF materializes: the
   * operator-internal persists (hot-bucket guard, candidate and collapse
@@ -123,6 +125,43 @@ private[graft] object InternalCaches {
         try e.free() catch { case _: Throwable => () }
       }
     }
+  }
+}
+
+/** The library's one way to read aggregates off a pass it runs anyway
+  * (Spark's `Dataset.observe`): [[run]] builds a plan with named metric
+  * sets attached, runs the caller's action on it, and returns the
+  * action's result with one row per observation, keyed by its name.
+  *
+  * The helper owns the action because an Observation only completes
+  * when a TRACKED Dataset action on its plan finishes (a write,
+  * `collect`, `localCheckpoint`): an untracked one such as
+  * `queryExecution.toRdd.foreach` never completes it, and a failed one
+  * completes it with partial metrics. So a failed action's error
+  * propagates before any metric is read, and a delivery that never
+  * comes raises after [[Bound]] instead of hanging. An observation
+  * below a shuffle that adaptive execution finds empty is pruned with
+  * its subtree and reports an empty row, so such a caller keeps the
+  * shuffle non-empty ([[Validator.collectViolations]] does). */
+private[graft] object Observed {
+  /** Metrics reach the Observation on the listener bus just after the
+    * action returns; the bound only catches a delivery that never comes. */
+  val Bound: FiniteDuration = 10.seconds
+
+  /** `plan` gets the attach function `(frame, name, metrics) => frame`;
+    * `action` runs on the frame `plan` returns. Names must differ
+    * within one plan (Spark rejects a repeated name). */
+  def run[T](plan: ((DataFrame, String, Seq[Column]) => DataFrame) => DataFrame)(
+      action: DataFrame => T): (T, Map[String, Row]) = {
+    val attached = scala.collection.mutable.ListBuffer.empty[Observation]
+    val result = action(plan { (frame, name, metrics) =>
+      attached += Observation(name)
+      frame.observe(attached.last, metrics.head, metrics.tail: _*)
+    })
+    result -> attached.map(o => o.name -> (try Await.result(o.future, Bound) catch {
+      case _: TimeoutException => throw new IllegalStateException(
+        s"observation '${o.name}' got no metrics within $Bound of its action")
+    })).toMap
   }
 }
 

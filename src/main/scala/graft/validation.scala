@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -36,14 +36,13 @@ object GValidation {
   *
   * The reference validates per-constraint with engine calls
   * (colnade-polars adapter.py:303-511). At 100 TB that is k passes over
-  * the data; graft folds EVERY Field constraint, null check, and
-  * @schema_check for a table into ONE scan/aggregation pass — Spark
-  * evaluates all the conditional counters in a single scan with
-  * map-side partial aggregation, and `unique` constraints ride the same
-  * aggregation as count vs count_distinct pairs. One pass is not one
-  * job: adaptive execution submits each shuffle stage of the
-  * aggregation as its own job (perfbench measures 3 per call on a
-  * schema with a `unique` column).
+  * the data; graft reads EVERY Field constraint, null check, and
+  * @schema_check for a table off ONE scan: the conditional counters and
+  * samples are observed metrics of that scan ([[Observed]]), so a table
+  * without a `unique` column costs 1 Spark job. All `unique` columns
+  * share one keyed count over the same scan, whose observed Σ(count − 1)
+  * per column is the duplicate count: 2 jobs for any number of them
+  * (perfbench measures 2 per call on its order schema).
   */
 object Validator {
 
@@ -74,22 +73,13 @@ object Validator {
       case _ => false
     }
 
-  /** All value-level constraints in a single aggregation pass.
-    * Returns violations; `constraints` throws on any. */
+  /** All value-level constraints off one observed scan, run by one
+    * `noop` write. Returns violations; `constraints` throws on any. */
   def collectViolations(df: DataFrame, schema: GSchema): Seq[ValueViolation] = {
-    case class Probe(column: String, constraint: String, countIdx: Int, sampleIdx: Int)
-    val aggs = scala.collection.mutable.ListBuffer.empty[org.apache.spark.sql.Column]
-    val probes = scala.collection.mutable.ListBuffer.empty[Probe]
-    var uniqueProbes = List.empty[(String, Int, Int)] // column, countIdx, distinctIdx
-
-    def addProbe(column: String, constraint: String, violation: org.apache.spark.sql.Column,
-                 sampleOf: org.apache.spark.sql.Column): Unit = {
-      val ci = aggs.size
-      aggs += sum(when(violation, 1L).otherwise(0L))
-      val si = aggs.size
-      aggs += first(when(violation, sampleOf), ignoreNulls = true)
-      probes += Probe(column, constraint, ci, si)
-    }
+    // (column, constraint, violation, sample) per counted constraint
+    val probes = scala.collection.mutable.ListBuffer.empty[(String, String, Column, Column)]
+    def addProbe(column: String, constraint: String, violation: Column, sampleOf: Column): Unit =
+      probes += ((column, constraint, violation, sampleOf))
 
     schema.columns.foreach { gc =>
       val c = col(gc.name)
@@ -105,37 +95,50 @@ object Validator {
         f.maxLength.foreach(v => addProbe(gc.name, s"max_length=$v", length(c) > v, c))
         f.pattern.foreach(p => addProbe(gc.name, s"pattern=$p", !c.rlike(p) && c.isNotNull, c))
         f.isin.foreach(vs => addProbe(gc.name, "isin", !c.isin(vs: _*) && c.isNotNull, c))
-        if (f.unique) {
-          // Scale note: k exact count_distinct aggregates on DIFFERENT
-          // columns in one job make Catalyst plan an Expand (scan output
-          // multiplied k-fold). One `unique` column per table is the
-          // common case and costs nothing extra; schemas with several
-          // unique columns at extreme scale should prefer one validation
-          // pass per unique column, or an approx_count_distinct
-          // pre-screen, traded explicitly by the caller.
-          val ci = aggs.size; aggs += count(c)
-          val di = aggs.size; aggs += count_distinct(c)
-          uniqueProbes = (gc.name, ci, di) :: uniqueProbes
-        }
       }
     }
     schema.schemaChecks.foreach { chk =>
       addProbe("<schema>", chk.name, !chk.expr().c, lit("row"))
     }
+    val uniques = schema.columns.filter(_.fieldInfo.exists(_.unique)).map(_.name)
 
-    if (aggs.isEmpty) return Nil
-    val row = df.agg(aggs.head, aggs.tail.toSeq: _*).collect()(0)
-    val fieldViolations = probes.toSeq.flatMap { p =>
-      val n = if (row.isNullAt(p.countIdx)) 0L else row.getLong(p.countIdx)
-      if (n > 0) Some(ValueViolation(p.column, p.constraint, n,
-        Option(row.get(p.sampleIdx)).toSeq))
-      else None
-    }
-    val uniqueViolations = uniqueProbes.flatMap { case (name, ci, di) =>
-      val total = row.getLong(ci); val distinct = row.getLong(di)
-      if (total != distinct) Some(ValueViolation(name, "unique", total - distinct, Nil)) else None
-    }
+    if (probes.isEmpty && uniques.isEmpty) return Nil
+    val (_, observed) = Observed.run { observe =>
+      val scan = if (probes.isEmpty) df else observe(df, "constraints", probes.toSeq.flatMap {
+        case (_, _, v, sample) => Seq(count(when(v, 1)), first(when(v, sample), ignoreNulls = true))
+      })
+      // no output column: the scan reads only what the metrics use
+      if (uniques.isEmpty) scan.select()
+      else observe(duplicateKeys(scan, uniques), "unique",
+        uniques.indices.map(i => coalesce(sum(when(col("_k._i") === i, col("count") - 1L)), lit(0L))))
+    }(_.write.format("noop").mode("overwrite").save())
+
+    val fieldViolations = observed.get("constraints").toSeq.flatMap(row => probes.indices.collect {
+      case i if row.getLong(2 * i) > 0 =>
+        ValueViolation(probes(i)._1, probes(i)._2, row.getLong(2 * i), Option(row.get(2 * i + 1)).toSeq)
+    })
+    // unique violations follow the others, last unique column first
+    val uniqueViolations = observed.get("unique").toSeq.flatMap(row => uniques.indices.reverse.collect {
+      case i if row.getLong(i) > 0 => ValueViolation(uniques(i), "unique", row.getLong(i), Nil)
+    })
     fieldViolations ++ uniqueViolations
+  }
+
+  /** Every `unique` column's repeated keys through ONE keyed count:
+    * each row explodes into one typed struct per column — the column's
+    * index `_i` and its key, the other keys null — null keys drop, and
+    * the keys seen more than once keep their `count`. Grouping the
+    * struct normalizes -0.0/0.0 and NaN as `count_distinct` does, so
+    * Σ(count − 1) per index equals count − count_distinct. */
+  private def duplicateKeys(df: DataFrame, keys: Seq[String]): DataFrame = {
+    val structs = keys.indices.map(i => when(col(keys(i)).isNotNull,
+      struct(lit(i).as("_i") +: keys.indices.map(j => when(lit(i == j), col(keys(j))).as(s"k$j")): _*)))
+    val keyed = df.select(explode(array(structs: _*)).as("_k")).where(col("_k").isNotNull)
+    // One null key that never repeats: the count's shuffle is never empty,
+    // so adaptive execution cannot prune the observed scan out of the plan
+    // (a pruned observation reports an empty row).
+    val sentinel = df.sparkSession.range(1).select(lit(null).cast(keyed.schema("_k").dataType).as("_k"))
+    keyed.union(sentinel).groupBy("_k").count().where(col("count") > 1)
   }
 
   def constraints(df: DataFrame, schema: GSchema): Unit = {

@@ -62,13 +62,6 @@ object Bridge {
         bloomBytes, org.apache.spark.sql.types.BinaryType),
       ExpressionUtils.expression(value)))
 
-  /** Non-blocking read of an Observation's metrics (`getOrEmpty` is
-    * `private[sql]`): empty map until the observed action completes.
-    * Callers poll this instead of the blocking `get` so a
-    * metrics-delivery failure can fall back rather than hang. */
-  def observedOrEmpty(obs: org.apache.spark.sql.Observation): Map[String, Any] =
-    obs.getOrEmpty
-
   /** Arrow-IPC batches → DataFrame (driver-side iterator). */
   def fromArrowBatches(
       batches: Iterator[Array[Byte]],

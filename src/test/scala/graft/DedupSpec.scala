@@ -181,15 +181,20 @@ class DedupSpec extends SparkSpec {
     // the chain is NOT a clique: 10~11, 11~12, but J(10,12) < 0.5
     assert(ps == Set((10L, 11L), (11L, 12L), (20L, 21L)))
     val expected = Map(10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 20L)
-    val clusters = Dedup.duplicateClusters(pairs).collect()
+    val (local, localJobs) = jobsDuring(Dedup.duplicateClusters(pairs))
+    val clusters = local.collect()
       .map(r => r.getAs[Long]("id") -> r.getAs[Long]("cluster_id")).toMap
     // transitive: 12 reaches 10 through 11; the isolated pair stays separate
     assert(clusters == expected)
     // reliable-checkpoint mode (cluster fault tolerance) — same answer
     val ckptDir = java.nio.file.Files.createTempDirectory("graft-cc-ckpt").toString
-    val reliable = Dedup.duplicateClusters(pairs, checkpointDir = Some(ckptDir)).collect()
+    val (reliableDf, reliableJobs) =
+      jobsDuring(Dedup.duplicateClusters(pairs, checkpointDir = Some(ckptDir)))
+    val reliable = reliableDf.collect()
       .map(r => r.getAs[Long]("id") -> r.getAs[Long]("cluster_id")).toMap
     assert(reliable == expected)
+    // each round is one observed freeze: no probe job of its own
+    assert(localJobs <= 71 && reliableJobs <= 65, s"jobs: local $localJobs, reliable $reliableJobs")
   }
 
   test("duplicateClusters on an empty pair set returns an empty frame (no hang)") {

@@ -55,7 +55,7 @@ class DocsSpec extends SparkSpec {
   test("quickstart: validation levels and explicit validator calls") {
     val df = Tio.fromRows(spark, Users, users).toNative
     Validator.structural(df, Users)     // no job, throws on shape mismatch
-    Validator.constraints(df, Users)    // ONE aggregation job for all constraints
+    Validator.constraints(df, Users)    // one observed scan: 2 jobs with a unique column
   }
 
   // --- dedup-at-scale.md ---------------------------------------------

@@ -86,6 +86,14 @@ class PackSpec extends SparkSpec {
     assert(packed(rows, budget = 15) == reference(rows, 15))
   }
 
+  test("packByBudget launches at most 4 jobs while being built") {
+    // the id-span aggregate and the per-block totals, each a partial
+    // aggregate's shuffle map stage and its final stage
+    val rows = (1L to 2000L).map(id => id -> (id * 37 % 101)).toDF("id", "w")
+    val (_, jobs) = jobsDuring(Pack.packByBudget(rows, col("id"), col("w"), budget = 1000, targetBlocks = 16))
+    assert(jobs <= 4, s"$jobs jobs")
+  }
+
   test("empty input yields an empty, correctly-shaped result") {
     val out = Pack.packByBudget(
       Seq.empty[(Long, Long)].toDF("id", "w"), col("id"), col("w"), 100)

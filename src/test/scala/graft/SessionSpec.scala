@@ -1,14 +1,29 @@
 package graft
 
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, count, lit}
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.storage.StorageLevel
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+import org.scalatest.time.{Minutes, Span}
 
 import graft.operators.{NaiveBayes, Pack}
 
 /** `GraftSession.releaseCachedBlocks` frees what graft registered under
-  * the releasing session, and nothing of another session or the caller. */
-class SessionSpec extends SparkSpec {
+  * the releasing session, and nothing of another session or the caller;
+  * [[Observed]] never waits past its bound. */
+class SessionSpec extends SparkSpec with TimeLimits {
+  implicit val signaler: Signaler = ThreadSignaler
+
+  test("Observed raises, naming the observation, when its action never completes it") {
+    failAfter(Span(2, Minutes)) {
+      // an RDD action on the plan runs no tracked Dataset action
+      val e = intercept[IllegalStateException] {
+        Observed.run(observe => observe(spark.range(0, 10).toDF(), "untracked", Seq(count(lit(1)))))(
+          _.queryExecution.toRdd.foreach(_ => ()))
+      }
+      assert(e.getMessage.contains("'untracked'"), e.getMessage)
+    }
+  }
 
   test("a session's release leaves another session's checkpoints and user caches intact") {
     val a = spark
