@@ -36,13 +36,20 @@ object Catalog {
   /** Read the committed params row at `path/params`, `None` when no
     * committed catalog exists there: no marker dir (checked on the
     * filesystem, so a fresh catalog costs no failed read), or a marker
-    * dir holding no committed file (a crashed marker write). `parse`
-    * reads columns BY NAME so a column-order change in the persisted
-    * file fails loudly instead of silently swapping fields. */
+    * dir holding no committed row (a crashed marker write). The row is
+    * read on the driver ([[Parquet.readFirstRow]]), so this runs no
+    * Spark job. `parse` reads columns BY NAME so a column-order change
+    * in the persisted file fails loudly instead of silently swapping
+    * fields. */
   def readParams[P](spark: SparkSession, path: String)(parse: Row => P): Option[P] =
     if (!dataExists(spark, path, Seq("params"))) None
-    else try Some(parse(Parquet.read(spark, s"$path/params").head()))
-    catch { case _: org.apache.spark.sql.AnalysisException => None }
+    else Parquet.readFirstRow(spark, s"$path/params").map(parse)
+
+  /** A saved model's one-row `path/params` table, read on the driver
+    * with no Spark job; fails on a missing or empty one. */
+  def modelParams(spark: SparkSession, path: String): Row =
+    Parquet.readFirstRow(spark, s"$path/params").getOrElse(
+      throw new IllegalArgumentException(s"no saved model params at $path/params"))
 
   /** Whether any of the catalog's data dirs exist under `path` — data
     * present while [[readParams]] returns None means a HALF-WRITTEN

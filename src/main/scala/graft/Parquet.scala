@@ -7,7 +7,7 @@ import org.apache.parquet.format.converter.ParquetMetadataConverter.{MetadataFil
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
 import scala.jdk.CollectionConverters._
 
@@ -48,6 +48,21 @@ private[graft] object Parquet {
     first.flatMap(f => GraftParquetBridge.readSchema(
         new Footer(f.getPath, footer(conf, f, SKIP_ROW_GROUPS)), spark))
       .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+  }
+
+  /** The first row of the parquet at `path` (its data files in path
+    * order), read on the driver with no Spark job: the footer pins the
+    * schema as [[read]] does, and Spark's own parquet reader decodes the
+    * file, so the `Row` and its schema are the ones
+    * `read(spark, path).head()` returns for a one-row table such as a
+    * catalog's or a model's `params`. None when `path` holds no data
+    * file or no row. */
+  def readFirstRow(spark: SparkSession, path: String): Option[Row] = {
+    val conf = hadoopConf(spark)
+    dataFiles(conf, path).flatMap { f =>
+      GraftParquetBridge.readSchema(new Footer(f.getPath, footer(conf, f, SKIP_ROW_GROUPS)), spark)
+        .fold(Seq.empty[Row])(GraftParquetBridge.readRows(spark, conf, f, _))
+    }.nextOption()
   }
 
   /** Whether `path` holds committed parquet — at least one data file —

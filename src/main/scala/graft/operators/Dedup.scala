@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.{InternalCaches, Observed}
 import graft.functions.TextFns
 import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.graftexpr.BoundedMemberSet
 
 /** Deduplication operators for LLM-data pipelines (SURVEY §2.5 L1–L5).
   *
@@ -89,8 +90,10 @@ object Dedup {
     * identical. `maxBucket <= 0` disables the guard (and its report);
     * [[oversizedBuckets]] surfaces what a given cap would skip.
     *
-    * Every LSH operator builds its plan through this one function; the
-    * `*Reported` variants add only [[Guarded.skipped]] on top. */
+    * Every LSH self-join and cross probe builds its plan through this
+    * one function; the `*Reported` variants add only
+    * [[Guarded.skipped]] on top. The incremental probe folds the same
+    * cap into its member-set aggregation ([[taggedCandidates]]). */
   private def guardBuckets(bk: DataFrame, keys: Seq[String], maxBucket: Int): Guarded =
     if (maxBucket <= 0) Guarded(bk, bucketSizes(bk, keys), maxBucket)
     else {
@@ -109,8 +112,7 @@ object Dedup {
       // share the same cached blocks too. Registered with
       // InternalCaches under the session: Dataset persist entries never
       // auto-release, so the session's releaseCachedBlocks frees them.
-      // Scans with → without: dedup_simhash 1 → 3, dedup_minhash 6 → 9,
-      // dedup_incremental 16 → 21.
+      // Scans with → without: dedup_simhash 1 → 3, dedup_minhash 6 → 9.
       val mat = InternalCaches.persist(bk)
       val sizes = bucketSizes(mat, keys)
       val small = sizes.where(col("_bsz") <= maxBucket).select(keys.map(col): _*)
@@ -164,6 +166,29 @@ object Dedup {
       .distinct()
   }
 
+  /** Candidate pairs `(id_a, id_b)` of a tagged bucket stream
+    * `(_id, band, bucket, _new)`, where `_new` marks the side that is
+    * being deduped: every (old, new) pair and every (new, new) pair
+    * with id_a < id_b that shares a bucket, deduplicated. ONE
+    * aggregation per (band, bucket) collects each bucket's distinct
+    * members with [[BoundedMemberSet]], which is also the hot-bucket
+    * guard: a bucket over `maxBucket` distinct ids comes back NULL and
+    * yields no pair, and the partial buffers keep the shuffle and the
+    * task memory O(maxBucket) per bucket. The pairs are enumerated
+    * inside each bucket, so the stream is never joined to itself. */
+  private def taggedCandidates(tagged: DataFrame, maxBucket: Int): DataFrame = {
+    val members = Bridge.column(BoundedMemberSet(
+      Bridge.expr(col("_id")), Bridge.expr(col("_new")), maxBucket).toAggregateExpression())
+    def pairs(m: Column) = flatten(transform(m, a =>
+      transform(filter(m, b => b("new") && (!a("new") || a("id") < b("id"))),
+        b => struct(a("id").as("id_a"), b("id").as("id_b")))))
+    tagged.groupBy(BandKeys.map(col): _*).agg(members.as("_m"))
+      .where(size(col("_m")) > 1) // over-cap (NULL) and singleton buckets pair nothing
+      .select(explode(pairs(col("_m"))).as("_p"))
+      .select(col("_p.id_a"), col("_p.id_b"))
+      .distinct()
+  }
+
   /** Normalized distinct shingle sets `(_jid, _set)` for exact verify. */
   private def shingleSets(df: DataFrame, id: Column, text: Column, shingleK: Int): DataFrame =
     df.select(id.as("_jid"), array_distinct(TextFns.shingles(text, shingleK)).as("_set"))
@@ -202,7 +227,11 @@ object Dedup {
     * candidate lineage is not one reusable exchange. Same discipline as
     * the hot-bucket guard / collapse member map (InternalCaches-
     * registered, lineage kept). Scans with → without: decontam_near
-    * 9 → 11, dedup_incremental 16 → 17. The plain self-join verify
+    * 9 → 11, dedup_incremental 16 → 15: since the incremental shape
+    * takes its candidates from one member-set aggregation, exchange
+    * reuse covers its re-reads and the persist there saves no scan
+    * (dropping it there is still to be measured in jobs and planning
+    * time). The plain self-join verify
     * ([[guardedJaccardPairs]]) does not persist: exchange reuse already
     * runs its candidate generation once (dedup_minhash 6 → 6,
     * dedup_jaccard 5 → 5). */
@@ -264,7 +293,7 @@ object Dedup {
     // plan audit counted the fingerprint subtree 8× in dedup_jaccard).
     // Two longs per doc; same persist discipline (and InternalCaches
     // registration) as the hot-bucket guard's bucket stream. Scans with
-    // → without: dedup_minhash 6 → 10, dedup_incremental 16 → 19.
+    // → without: dedup_minhash 6 → 10, dedup_incremental 16 → 18.
     val member = InternalCaches.persist(
       m.join(repOf, "_mfp").select(col("_mid"), col("_rid")))
     // reps via the cached member (its _rid column carries every rep id;
@@ -568,10 +597,17 @@ object Dedup {
     * Scale shape: the indexed bucket table is first pruned with a
     * left-semi join on the batch's (band, bucket) set — AQE broadcasts
     * that set for a typical small increment, so the huge indexed side
-    * never fully shuffles. The hot-bucket guard then runs jointly over
-    * (pruned indexed ∪ batch) rows: a degenerate bucket is degenerate
-    * regardless of which side its members came from, and the per-bucket
-    * sizes are exact because the semi-join keeps whole buckets.
+    * never fully shuffles. The pruned index rows and the batch rows,
+    * each tagged old or new, then go through ONE aggregation per
+    * (band, bucket) ([[taggedCandidates]]): it collects each bucket's
+    * distinct members with a bounded partial aggregate, which is also
+    * the hot-bucket guard — a degenerate bucket is degenerate regardless
+    * of which side its members came from, and its size is exact because
+    * the semi-join keeps whole buckets — and the candidate pairs
+    * (old × new, and new × new with id_a < id_b) are enumerated inside
+    * each bucket under the cap. One broadcast candidate-id set prunes
+    * the one verify side (stored shingles ∪ batch sets) that both ends
+    * of a pair read.
     *
     * Index entries whose id appears in THIS batch are ignored (anti-join
     * on the batch's id set): a batch replayed after a partial failure —
@@ -613,49 +649,38 @@ object Dedup {
     val newBk = newSets.select(col("_jid").as("_id"),
         posexplode(TextFns.minhashBands(col("_set"), numHashes, bands)))
       .toDF("_id", "band", "bucket")
+    // Replayed appends can leave duplicate index rows; the member-set
+    // aggregate counts distinct ids, so they never push a bucket over
+    // the cap and need no distinct() of their own.
     val oldBk = graft.Parquet.read(spark, s"$indexPath/buckets")
       .join(newIds, col("id") === col("_nid"), "left_anti") // replay safety: drop stale self-copies
       .join(newBk.select("band", "bucket").distinct(), BandKeys, "left_semi")
       .select(col("id").as("_id"), col("band"), col("bucket"))
-      // At-least-once appends can leave duplicate (id, band, bucket)
-      // rows; distinct AFTER the semi-join prune (so only surviving
-      // buckets pay the shuffle) keeps the guard's count an exact
-      // member count — replayed rows must not push a legitimate bucket
-      // over maxBucket and silently drop its real duplicates.
-      .distinct()
-    val tagged = guardBuckets(
-      oldBk.withColumn("_new", lit(false)).union(newBk.withColumn("_new", lit(true))),
-      BandKeys, maxBucket).capped
-    val newSide = tagged.where(col("_new")).drop("_new").toDF("id_b", "band", "bucket")
-    val oldSide = tagged.where(!col("_new")).drop("_new").toDF("id_a", "band", "bucket")
-    val newSideA = tagged.where(col("_new")).drop("_new").toDF("id_a", "band", "bucket")
-    val cands = persistedCands(
-      oldSide.join(newSide, BandKeys)
-        .union(newSideA.join(newSide, BandKeys).where(col("id_a") < col("id_b")))
-        .select("id_a", "id_b")
-        .distinct())
-    // Candidate-id prune on both verify sides (the [[candSideDocs]]
-    // discipline, at the sets level — the index side is a stored
-    // shingle table and the batch side is already materialized, so
-    // there is no shingle CPU to push below; the prune keeps the
-    // verify joins candidate-sized instead of index-sized). Broadcast
-    // hint on the id sides for the same reason as [[candSideDocs]]:
-    // without it the stats-less prune plans as a SortMergeJoin that
-    // shuffles the stored set arrays by id.
-    val aSets = graft.Parquet.read(spark, s"$indexPath/shingles")
+    val cands = persistedCands(taggedCandidates(
+      oldBk.withColumn("_new", lit(false)).union(newBk.withColumn("_new", lit(true))), maxBucket))
+    // ONE candidate-id prune of ONE sets frame, read by both ends of a
+    // pair (the [[candSideDocs]] discipline at the sets level: the index
+    // side is a stored shingle table and the batch side is already
+    // materialized, so there is no shingle CPU to push below; the prune
+    // keeps the verify joins candidate-sized instead of index-sized).
+    // The ids come off one scan of the candidates (an explode, not a
+    // union of two), and the broadcast hint has the same reason as in
+    // [[candSideDocs]]: without it the stats-less prune plans as a
+    // SortMergeJoin that shuffles the stored set arrays by id.
+    val candIds = cands.select(explode(array(col("id_a"), col("id_b"))).as("_pid"))
+    val sets = graft.Parquet.read(spark, s"$indexPath/shingles")
       .join(newIds, col("id") === col("_nid"), "left_anti") // mirror the bucket-side exclusion
       .select(col("id").as("_jid"), col("shingles").as("_set"))
       .union(newSets)
-      .join(broadcast(cands.select(col("id_a").as("_pid"))),
-        col("_jid") === col("_pid"), "left_semi")
-    val bSets = newSets
-      .join(broadcast(cands.select(col("id_b").as("_pid"))),
-        col("_jid") === col("_pid"), "left_semi")
-    val repDrops = jaccardVerify(cands, aSets, bSets, threshold)
+      .join(broadcast(candIds), col("_jid") === col("_pid"), "left_semi")
+    val repDrops = jaccardVerify(cands, sets, sets, threshold)
       .select(col("id_b").as("_drop_id"))
       .distinct()
     val nonRepDrops = c.member.where(col("_mid") =!= col("_rid")).select(col("_mid").as("_drop_id"))
-    newDocs.join(repDrops.unionAll(nonRepDrops), id === col("_drop_id"), "left_anti")
+    // The drop list is a subset of the batch's ids: broadcast it, so the
+    // batch is not shuffled for a sort-merge plan that AQE would only
+    // turn into this broadcast after the shuffle has run.
+    newDocs.join(broadcast(repDrops.unionAll(nonRepDrops)), id === col("_drop_id"), "left_anti")
   }
 
   // ----------------------------------------------------------------- L14

@@ -185,7 +185,8 @@ object NaiveBayes {
       .orderBy("label").collect()
       .map(r => NbLabel(r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .toSeq
-    val p = graft.Parquet.read(spark, s"$path/params").select("v", "n_docs_total").head()
-    NbModel(graft.Parquet.read(spark, s"$path/counts"), labels, p.getLong(0), p.getLong(1))
+    val p = graft.Catalog.modelParams(spark, path)
+    NbModel(graft.Parquet.read(spark, s"$path/counts"), labels,
+      p.getAs[Long]("v"), p.getAs[Long]("n_docs_total"))
   }
 }

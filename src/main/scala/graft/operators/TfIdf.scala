@@ -95,7 +95,7 @@ object TfIdf {
     * column-order change in the file fails loudly, never misreads. */
   def load(spark: org.apache.spark.sql.SparkSession, path: String): DfModel =
     DfModel(graft.Parquet.read(spark, s"$path/df"),
-      graft.Parquet.read(spark, s"$path/params").select("n_docs").head().getLong(0))
+      graft.Catalog.modelParams(spark, path).getAs[Long]("n_docs"))
 
   /** Per-doc top-`k` terms by tf·idf weight: `(id, term, tf,
     * weight_micro, rank)`, ties broken by term (ascending) so the cut

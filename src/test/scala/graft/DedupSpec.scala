@@ -379,6 +379,79 @@ class DedupSpec extends SparkSpec {
     assert(run() == ref)
   }
 
+  /** `lorem…` repeated `n` times: every such text has the same shingle
+    * set (so the same 64 buckets) but its own fingerprint, so the
+    * batch-side collapse keeps each one a representative. */
+  private def looped(id: Long, n: Int) =
+    Doc(id, Seq.fill(n)("lorem ipsum dolor sit amet consectetur adipiscing elit sed").mkString(" "))
+
+  /** Survivors of an incremental keep of `batch` against the index at `idx`. */
+  private def incKeep(batch: Seq[Doc], idx: String, maxBucket: Int): Set[Long] = {
+    import spark.implicits._
+    Dedup.minhashKeepIncremental(Tio.fromRows(spark, Docs, batch).toNative,
+        col("doc_id"), col("text"), idx, 0.5, maxBucket = maxBucket)
+      .collect().map(_.getAs[Long]("doc_id")).toSet
+  }
+
+  test("incremental cap counts index and batch members together; maxBucket = 0 turns it off") {
+    import spark.implicits._
+    val idx = java.nio.file.Files.createTempDirectory("graft-mh-cap").toString + "/idx"
+    Dedup.writeMinHashIndex(Tio.fromRows(spark, Docs, Seq(looped(1L, 2), looped(2L, 3))).toNative,
+      col("doc_id"), col("text"), idx)
+    // two indexed + two batch members share every bucket; each side alone
+    // is under a cap of 3, together they are over it
+    val batch = Seq(looped(10L, 4), looped(11L, 5),
+      Doc(20L, "an entirely fresh document about training data pipelines"),
+      Doc(21L, "an entirely fresh document about training data pipeline")) // near-dup of 20
+    assert(incKeep(batch, idx, maxBucket = 3) == Set(10L, 11L, 20L)) // the hot bucket is skipped
+    assert(incKeep(batch, idx, maxBucket = 4) == Set(20L))
+    assert(incKeep(batch, idx, maxBucket = 0) == Set(20L))
+    assert(incKeep(batch, idx, maxBucket = 1) == Set(10L, 11L, 20L, 21L)) // every pair bucket is over
+  }
+
+  test("incremental cap counts distinct ids: replayed index rows and a replayed batch keep survivors") {
+    import spark.implicits._
+    val idx = java.nio.file.Files.createTempDirectory("graft-mh-capreplay").toString + "/idx"
+    val old = Tio.fromRows(spark, Docs, Seq(looped(1L, 2), looped(2L, 3))).toNative
+    Dedup.writeMinHashIndex(old, col("doc_id"), col("text"), idx)
+    val batch = Seq(looped(10L, 4),
+      Doc(20L, "an entirely fresh document about training data pipelines"),
+      Doc(21L, "an entirely fresh document about training data pipeline"))
+    val first = incKeep(batch, idx, maxBucket = 3)
+    assert(first == Set(20L)) // 3 distinct members: under the cap, 10 dups indexed 1
+    // a replayed append doubles the indexed rows; the bucket still holds
+    // 3 distinct ids, so the cap must not fire
+    Dedup.writeMinHashIndex(old, col("doc_id"), col("text"), idx, mode = "append")
+    assert(incKeep(batch, idx, maxBucket = 3) == first)
+    // the batch itself reached the index (a partial-failure replay)
+    Dedup.writeMinHashIndex(Tio.fromRows(spark, Docs, batch).toNative,
+      col("doc_id"), col("text"), idx, mode = "append")
+    assert(incKeep(batch, idx, maxBucket = 3) == first)
+  }
+
+  test("incremental keep builds and collects in a fixed number of Spark jobs") {
+    import spark.implicits._
+    val idx = java.nio.file.Files.createTempDirectory("graft-mh-jobs").toString + "/idx"
+    Dedup.writeMinHashIndex(Tio.fromRows(spark, Docs, Seq(
+        Doc(1L, "the quick brown fox jumps over the lazy dog"),
+        Doc(4L, "spark shuffles partitions across the cluster executors nightly"))).toNative,
+      col("doc_id"), col("text"), idx)
+    val batch = Tio.fromRows(spark, Docs, Seq(
+      Doc(10L, "The quick  brown fox jumps over the lazy dog"),
+      Doc(11L, "an entirely fresh document about training data pipelines"),
+      Doc(12L, "an entirely fresh document about training data pipeline"),
+      Doc(13L, "unrelated third text mentioning neither foxes nor sparks today"))).toNative
+    GraftSession.releaseCachedBlocks(spark)
+    // 5 jobs while built (the collapse and the shingle-set checkpoint),
+    // 20 in the collect: the member-set aggregation replaced the guard's
+    // persisted stream, its four re-planned size counts and the two
+    // candidate joins, and the params row is read on the driver
+    val (kept, jobs) = jobsDuring(Dedup.minhashKeepIncremental(batch, col("doc_id"), col("text"), idx, 0.5)
+      .collect().map(_.getAs[Long]("doc_id")).toSet)
+    assert(kept == Set(11L, 13L))
+    assert(jobs == 25, s"minhashKeepIncremental launched $jobs jobs to build and collect")
+  }
+
   test("index audit finds a crashed append's bucket-less ids; param-less data refuses appends") {
     import spark.implicits._
     import org.apache.spark.sql.functions.array_distinct

@@ -169,4 +169,38 @@ class ParquetReadSpec extends SparkSpec {
     assert(answered._2 == 0, s"indexDataIsEmpty launched ${answered._2} job(s)")
     assert(errors.isEmpty, s"listener-bus errors: $errors")
   }
+
+  test("readIndexParams reads the params row on the driver: no Spark job") {
+    val idx = tmp("graft-pq-params") + "/idx"
+    Dedup.writeMinHashIndex(Seq((1L, "the quick brown fox jumps over the lazy dog")).toDF("id", "text"),
+      col("id"), col("text"), idx)
+    val (p, jobs) = jobsDuring(Dedup.readIndexParams(spark, idx))
+    assert(p.contains((3, 128, 64)))
+    assert(jobs == 0, s"readIndexParams launched $jobs job(s)")
+  }
+
+  test("readFirstRow equals head() with its schema, arrays included; no committed row is None") {
+    val idx = tmp("graft-pq-rowidx") + "/idx"
+    Dedup.writeMinHashIndex(Seq((1L, "the quick brown fox jumps over the lazy dog")).toDF("id", "text"),
+      col("id"), col("text"), idx)
+    // the sketch catalog's and the PQ codebook's shapes: arrays included
+    val sketch = tmp("graft-pq-sketchp") + "/params"
+    Seq((12, Seq("lang", "host"))).toDF("lg_nom_entries", "groups").repartition(1).write.parquet(sketch)
+    val pq = tmp("graft-pq-pqp") + "/params"
+    Seq((2, 3, 4, Seq(0.5, -1.25, 3.0))).toDF("m", "sub_dim", "k", "flat").write.parquet(pq)
+    for (path <- Seq(sketch, pq, s"$idx/params")) {
+      val (row, rowJobs) = jobsDuring(Parquet.readFirstRow(spark, path))
+      val want = Parquet.read(spark, path).head()
+      assert(rowJobs == 0, s"readFirstRow($path) launched $rowJobs job(s)")
+      assert(row.contains(want) && row.get.schema == want.schema, s"$path: $row vs $want")
+    }
+    assert(Parquet.readFirstRow(spark, sketch).get.getSeq[String](1) == Seq("lang", "host"))
+
+    // no committed row: an absent dir, a marker dir with only wreckage
+    val wreck = tmp("graft-pq-pwreck")
+    Files.createDirectories(Paths.get(wreck, "params", "_temporary", "0"))
+    assert(Parquet.readFirstRow(spark, s"$wreck/params").isEmpty)
+    assert(Parquet.readFirstRow(spark, s"${tmp("graft-pq-none")}/params").isEmpty)
+    assert(Dedup.readIndexParams(spark, wreck).isEmpty)
+  }
 }

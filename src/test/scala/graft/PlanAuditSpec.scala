@@ -1,7 +1,14 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.catalyst.expressions.NamedExpression
+import org.apache.spark.sql.catalyst.expressions.aggregate.{Count, Final}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, ObjectHashAggregateExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+import org.apache.spark.sql.graftexpr.BoundedMemberSet
 
 /** Plan-shape regression gates: the properties that make these queries
   * scale (filter pushdown, column pruning, broadcast dims, partial
@@ -21,6 +28,23 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   private def q(name: String): String = finalPlan(SparkEntry.queries(name)(spark, dir))
+
+  /** Every node of an executed frame's final plan, through its query
+    * stages, with the plan behind each cached relation it reads visited
+    * once (a cache runs once, however many scans read it). */
+  private def planNodes(df: DataFrame): Seq[SparkPlan] = {
+    val seen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[AnyRef, java.lang.Boolean])
+    def walk(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case s: QueryStageExec => walk(s.plan)
+      case _: ReusedExchangeExec => Nil
+      case m: InMemoryTableScanExec =>
+        if (seen.add(m.relation.cacheBuilder)) walk(m.relation.cachedPlan) else Nil
+      case other => other.children.flatMap(walk)
+    })
+    walk(df.queryExecution.executedPlan)
+  }
 
   test("q2: filters reach the parquet scan; scan is column-pruned") {
     val plan = q("q2_filter_sort")
@@ -78,6 +102,31 @@ class PlanAuditSpec extends SparkSpec {
       s"hot-bucket guard must be groupBy+semi-join, never a per-key window:\n$plan")
     assert(plan.indexOf("LeftSemi") >= 0 &&
       plan.contains("buckets"), s"semi-join must apply to the stored bucket table:\n$plan")
+    // the guard and the candidate generation are ONE member-set
+    // aggregation per (band, bucket) over the stored table, fed straight
+    // from the scan: no cached copy of the bucket stream, no second
+    // grouping of it (the old per-bucket size count), no self-join
+    val nodes = planNodes(inc)
+    val memberSets = nodes.collect {
+      case a: ObjectHashAggregateExec if a.aggregateExpressions.exists(e =>
+          e.mode == Final && e.aggregateFunction.isInstanceOf[BoundedMemberSet]) =>
+        a.groupingExpressions.map(_.asInstanceOf[NamedExpression].name)
+    }
+    assert(memberSets == Seq(Seq("band", "bucket")),
+      s"expected one (band, bucket) member-set aggregation, got $memberSets:\n$plan")
+    val bucketScans = nodes.collect {
+      case f: FileSourceScanExec if f.relation.location.rootPaths.exists(_.getName == "buckets") => f
+    }
+    assert(bucketScans.size == 1, s"the stored bucket table must be scanned once:\n$plan")
+    assert(!nodes.exists {
+      case m: InMemoryTableScanExec => m.output.exists(_.name == "bucket")
+      case _ => false
+    }, s"the bucket stream must not be cached:\n$plan")
+    assert(!nodes.exists {
+      case a: BaseAggregateExec => a.groupingExpressions.map(_.asInstanceOf[NamedExpression].name) ==
+        Seq("band", "bucket") && a.aggregateExpressions.exists(_.aggregateFunction.isInstanceOf[Count])
+      case _ => false
+    }, s"no separate per-bucket size count:\n$plan")
   }
 
   test("select_budget: range-partitioned prefix sums, no global window/sort") {

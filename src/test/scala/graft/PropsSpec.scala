@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.BoundReference
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftexpr.TopKByScore
-import org.apache.spark.sql.types.{DoubleType, LongType}
+import org.apache.spark.sql.graftexpr.{BoundedMemberSet, TopKByScore}
+import org.apache.spark.sql.types.{BooleanType, DoubleType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Properties}
 import org.scalacheck.Prop.forAll
@@ -95,6 +95,45 @@ object TopKProps extends Properties("topk-agg") {
       val out = toPairs(agg.eval(buf))
       val resorted = out.sortBy { case (s, i) => (-s, i) }
       out.length == math.min(k, pairs.length) && out == resorted
+    }
+}
+
+/** BoundedMemberSet's contract (MemberSetAgg.scala): no buffer ever
+  * holds more than `cap` ids, whatever the partitioning and the order
+  * in which partial buffers merge; a group over the cap yields NULL (no
+  * members), and any other group yields its distinct ids, each flagged
+  * new iff any of its rows was new. */
+object MemberSetProps extends Properties("bounded-member-set") {
+
+  private val memberGen: Gen[(Long, Boolean)] = for {
+    i <- Gen.chooseNum(0L, 12L) // a small id range forces repeats
+    n <- Gen.oneOf(true, false)
+  } yield (i, n)
+
+  property("the cap holds after any merge order; over-cap groups yield no members") =
+    forAll(Gen.listOf(memberGen), Gen.choose(0, 8), Gen.choose(1, 5), Gen.long) {
+      (rows, cap, chunkSize, seed) =>
+        val agg = BoundedMemberSet(BoundReference(0, LongType, nullable = false),
+          BoundReference(1, BooleanType, nullable = false), cap)
+        def bounded(b: BoundedMemberSet.Members) = cap <= 0 || b.ids.size <= cap
+        def updated(rs: Seq[(Long, Boolean)]) =
+          rs.foldLeft(agg.createAggregationBuffer())((b, r) => agg.update(b, InternalRow(r._1, r._2)))
+        val rnd = new scala.util.Random(seed)
+        val parts = rnd.shuffle(rows.grouped(chunkSize).toList).map(updated)
+          .map(b => agg.deserialize(agg.serialize(b)))
+        var allBounded = parts.forall(bounded)
+        val merged = parts.foldLeft(agg.createAggregationBuffer()) { (acc, b) =>
+          val m = agg.merge(acc, b); allBounded &&= bounded(m); m
+        }
+        def members(b: BoundedMemberSet.Members): Option[Seq[(Long, Boolean)]] =
+          Option(agg.eval(b)).map(_.asInstanceOf[GenericArrayData].array.toSeq.map { e =>
+            val r = e.asInstanceOf[InternalRow]
+            (r.getLong(0), r.getBoolean(1))
+          })
+        val want = rows.groupMapReduce(_._1)(_._2)(_ || _).toSeq.sortBy(_._1)
+        val over = cap > 0 && want.size > cap
+        allBounded && members(merged) == members(updated(rows)) &&
+          (if (over) members(merged).isEmpty else members(merged).contains(want))
     }
 }
 
